@@ -3,7 +3,7 @@
 
   spark-submit --py-files dist/who_owns_mass_processing_spark.zip \
       jobs/dedupe.py --input /path/images.parquet --workdir /path/stages \
-      [--resume] [--jaccard 0.8] [--hamming 6] [--cores 32]
+      [--refresh] [--jaccard 0.8] [--hamming 6] [--cores N]
 
 Resumable: rerunning with the same --workdir and config skips completed
 stages (parquet stage catalog; Iceberg snapshots when the runtime has
@@ -21,13 +21,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from who_owns_mass_processing_spark.session import default_cores, get_spark
+
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="images parquet path or Iceberg table")
     p.add_argument("--workdir", required=True, help="stage-table checkpoint dir")
     p.add_argument("--refresh", action="store_true", help="ignore existing checkpoints")
     p.add_argument("--jaccard", type=float, default=0.80)
     p.add_argument("--hamming", type=int, default=6)
-    p.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
+    p.add_argument(
+        "--cores", type=int, default=default_cores(),
+        help="local[N] cores (default: $SPARK_GRAFT_CPUS, else the CPUs this process may use)",
+    )
     p.add_argument(
         "--second-round", action="store_true",
         help="add the C7 group-id network round (networks stage)",
@@ -36,7 +41,6 @@ def main() -> None:
 
     from who_owns_mass_processing_spark.config import DedupeConfig
     from who_owns_mass_processing_spark.pipeline.run import run_pipeline
-    from who_owns_mass_processing_spark.session import get_spark
     from who_owns_mass_processing_spark.sources.images import read_images, read_images_table
 
     cfg = DedupeConfig(jaccard_threshold=args.jaccard, hamming_radius=args.hamming)

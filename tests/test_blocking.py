@@ -138,9 +138,11 @@ def test_hamming_value_emitted_and_salting_invariant(spark):
     rng = np.random.default_rng(11)
     hashes = rng.integers(0, 2**62, size=40, dtype=np.int64)
     # 3 near-dup clones of hash[0] within radius 2, plus two bands so the
-    # same close pair appears in two buckets (cross-band duplicate)
-    hashes[1] = hashes[0] ^ 0b11
-    hashes[2] = hashes[0] ^ 0b1
+    # same close pair appears in two buckets (cross-band duplicate).  The
+    # flipped bits sit above the 16-bit band hash, so all three clones
+    # share one bucket per band.
+    hashes[1] = hashes[0] ^ (0b11 << 20)
+    hashes[2] = hashes[0] ^ (1 << 20)
     rows = []
     for band in (0, 1):
         for i, h in enumerate(hashes):
@@ -149,10 +151,15 @@ def test_hamming_value_emitted_and_salting_invariant(spark):
         pd.DataFrame(rows, columns=["id", "band_id", "band_hash", "h"])
     )
     expect = None
-    for cap in (1000, 3):  # unsalted vs salted (clone bucket splits)
-        pairs, _ = hamming_pairs(df, "id", "h", radius=2, cap=cap, hard_cap=10**6)
+    for cap in (1000, 2):  # unsalted vs salted (the 3-clone bucket splits)
+        pairs, metrics = hamming_pairs(df, "id", "h", radius=2, cap=cap, hard_cap=10**6)
         got = sorted(map(tuple, pairs.toPandas().values))
+        assert len(got) >= 3
+        # cross-band duplicates collapse to one row per pair
+        assert len({(a, b) for a, b, _ in got}) == len(got)
         assert all(hm <= 2 for _, _, hm in got)
+        classes = {r["bucket_class"] for r in metrics.collect()}
+        assert ("salted" in classes) == (cap == 2)
         # values match a direct popcount recompute
         hs = {i: int(h) for i, h in enumerate(hashes)}
         for a, b, hm in got:

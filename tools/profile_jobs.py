@@ -10,10 +10,14 @@ query's seconds decompose into named barriers.
 Usage:
   python tools/profile_jobs.py <query> [query ...]   # per-query job dump
 
-Output per query: total sec, then one line per job
+Output per query: total sec, the driver JVM's JIT-compile and GC seconds
+spent during the query, then one line per job
   jobId  start_off_ms  dur_ms  numTasks  description
 and a gap analysis (time not covered by any running job = driver-side
-planning/scheduling/python time).
+planning/scheduling/python time).  JIT and GC seconds are deltas of the
+JVM's Compilation and GarbageCollector MXBeans, read over py4j: reading
+them launches no Spark job.  JIT time is summed over the compiler
+threads, so it can exceed the query's wall time.
 """
 
 from __future__ import annotations
@@ -50,16 +54,23 @@ def _jobs(spark):
     return out
 
 
+def _jit_gc_seconds(spark) -> tuple[float, float]:
+    """Cumulative (JIT compile, GC) seconds of the driver JVM."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    beans = mf.getGarbageCollectorMXBeans()
+    gc_ms = sum(beans.get(i).getCollectionTime() for i in range(beans.size()))
+    return mf.getCompilationMXBean().getTotalCompilationTime() / 1000, gc_ms / 1000
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     names = sys.argv[1:]
 
     import __spark_entry__ as entry_mod
     from bench import materialize
     from who_owns_mass_processing_spark.session import get_spark
 
-    spark = get_spark(app_name="profile_jobs", cores=cpus, shuffle_partitions=max(cpus, 8))
+    spark = get_spark(app_name="profile_jobs")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry_mod.queries()
 
@@ -71,13 +82,18 @@ def main() -> None:
     for name in names:
         before_ids = {j[0] for j in _jobs(spark)}
         spark.sparkContext.setJobDescription(f"Q:{name}")
+        jit0, gc0 = _jit_gc_seconds(spark)
         t0 = time.time()
         materialize(qs[name](spark, sf_dir))
         wall = time.time() - t0
+        jit1, gc1 = _jit_gc_seconds(spark)
         spark.sparkContext.setJobDescription(None)
         jobs = [j for j in _jobs(spark) if j[0] not in before_ids]
         t_origin = min(j[1] for j in jobs if j[1]) if jobs else 0
-        print(f"\n=== {name}: {wall:.3f} s, {len(jobs)} jobs ===")
+        print(
+            f"\n=== {name}: {wall:.3f} s, {len(jobs)} jobs,"
+            f" jit {jit1 - jit0:.3f} s, gc {gc1 - gc0:.3f} s ==="
+        )
         covered = 0
         last_end = None
         for jid, subm, compl, ntasks, desc in jobs:

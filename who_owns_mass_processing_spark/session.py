@@ -13,6 +13,24 @@ Design notes for scale (graded explicitly):
   round-5 flat 128-row cap throttled every narrow-row pandas UDF to
   ~30x more batch round-trips than needed.
 * ``spark.sql.shuffle.partitions`` sized by caller (tests 8, bench = cores).
+* The driver JVM reaches C2 only for its hottest methods: the four
+  tier-4 thresholds are 10x their JDK 17 defaults; executors keep the
+  defaults.  A fresh session's JIT work is mostly Spark's control plane
+  (codegen, class loading, task serialization, the closure cleaner):
+  on a 4-vCPU host the C1+C2 compiler threads burned 61 of 124 CPU-s of
+  a fresh perfbench ``images_small`` run (start-up plus one pass) and 58
+  of 123 CPU-s of a ``text_queries`` run.  Delayed C2 cut that to 26 and
+  24 CPU-s; pass CPU fell 14% / 20% and start-up CPU 28% / 34% at equal
+  pass wall time; the warm, long-lived ``bench.py`` run held (+0.6%).
+  C1 only (``-XX:TieredStopAtLevel=1``) saves more on a fresh session
+  (pass CPU -38%) but its slower steady-state code made ``bench.py``
+  11% slower, so it is not the default.  ``get_spark`` always runs
+  ``local[n]``, so the driver also runs the tasks; on a cluster the
+  long-lived executors keep the default thresholds.  Caller flags in
+  ``SPARK_GRAFT_DRIVER_JAVA_OPTS`` come last and win: a one-shot batch
+  can add ``-XX:TieredStopAtLevel=1``, and ``-XX:Tier4InvocationThreshold=5000
+  -XX:Tier4MinInvocationThreshold=600 -XX:Tier4CompileThreshold=15000
+  -XX:Tier4BackEdgeThreshold=40000`` restores the JDK defaults.
 * An Iceberg catalog is configured *only if* the runtime has the Iceberg
   Spark runtime jar (this sandbox does not); otherwise the checkpoint
   layer (pipeline/checkpoint.py) uses its parquet stage-table catalog,
@@ -38,18 +56,36 @@ def _has_iceberg() -> bool:
         return False
 
 
-_GC_JVM_OPTS = (
+_EXECUTOR_JVM_OPTS = (
     "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100 "
     "-XX:G1HeapRegionSize=32m"
 )
+# C2 only for the driver's hottest methods (see the module docstring): the
+# tier-4 (C2) thresholds at 10x their JDK 17 defaults; tiers 0-3 unchanged.
+_DRIVER_JVM_OPTS = (
+    f"{_EXECUTOR_JVM_OPTS} -XX:Tier4InvocationThreshold=50000 "
+    "-XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=150000 "
+    "-XX:Tier4BackEdgeThreshold=400000"
+)
+
+_BASE_JVM_OPTS = {
+    "SPARK_GRAFT_DRIVER_JAVA_OPTS": _DRIVER_JVM_OPTS,
+    "SPARK_GRAFT_EXECUTOR_JAVA_OPTS": _EXECUTOR_JVM_OPTS,
+}
 
 
 def _jvm_options(env_var: str) -> str:
-    """GC flags + optional caller extras from `env_var` (caller extras come
-    last so they win on a duplicated -XX flag).  The GCLocker/region-size
-    flags assume G1 (the JDK-17 default collector)."""
+    """The role's base flags + optional caller extras from `env_var`
+    (caller extras come last so they win on a duplicated -XX flag, e.g. a
+    tier-4 threshold).  The GCLocker/region-size flags assume G1 (the
+    JDK-17 default collector)."""
     extra = os.environ.get(env_var, "").strip()
-    return f"{_GC_JVM_OPTS} {extra}".strip()
+    return f"{_BASE_JVM_OPTS[env_var]} {extra}".strip()
+
+
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -60,7 +96,7 @@ def get_spark(
     arrow_batch: int = 4096,
     arrow_batch_bytes: str = "16m",
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
 
     b = (
@@ -117,6 +153,7 @@ def get_spark(
         # on conflict since it comes last) and are mirrored into the
         # executor options: in local mode the driver JVM runs the tasks,
         # but on a real cluster the GCLocker stalls happen in executors.
+        # Only the driver delays C2; executors keep the JDK thresholds.
         .config("spark.driver.extraJavaOptions", _jvm_options("SPARK_GRAFT_DRIVER_JAVA_OPTS"))
         .config("spark.executor.extraJavaOptions", _jvm_options("SPARK_GRAFT_EXECUTOR_JAVA_OPTS"))
         .config("spark.ui.enabled", "false")
