@@ -1,6 +1,7 @@
 """Skew control: salting must not change the candidate set; stop bands
 must drop and be logged."""
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from who_owns_mass_processing_spark.operators.blocking import candidate_pairs
@@ -85,19 +86,19 @@ def test_surrogate_ids_bit_identical_pairs(spark):
     assert norm == {tuple(sorted(t)) for t in want}
 
 
-def test_mapside_verify_matches_join_path(spark):
-    """The broadcast map-side verify (numpy gates + exact intersect +
-    Spark-identical rounding) must emit exactly the join path's rows."""
+@pytest.fixture(scope="module")
+def sf0001_tiers(spark):
+    """Per set tier, on the sf0.001 documents' LSH candidates: (build,
+    verify) where build() makes the tier's map-side broadcast and
+    verify(mapside) runs the tier's verify on that broadcast or, given
+    None, on the join path."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from who_owns_mass_processing_spark.config import DedupeConfig
     from who_owns_mass_processing_spark.functions.minhash import band_explode
+    from who_owns_mass_processing_spark.functions.text import winnow_fingerprints
     from who_owns_mass_processing_spark.operators import verify as V
-    from who_owns_mass_processing_spark.operators.blocking import (
-        candidate_pairs,
-        with_surrogate_ids,
-    )
+    from who_owns_mass_processing_spark.operators.blocking import with_surrogate_ids
     from who_owns_mass_processing_spark.operators.dedupe import minhash_signatures
 
     cfg = DedupeConfig(bands=32)
@@ -114,15 +115,95 @@ def test_mapside_verify_matches_join_path(spark):
     )
     cands = cands.localCheckpoint(eager=True)
     feats = rep_sigs.select("_sid", "codes", "minhash")
-    kwargs = dict(minhash_col="minhash", num_perm=cfg.num_perm)
-    slow = V.verify_jaccard(cands, feats, "_sid", "codes", cfg.jaccard_threshold, **kwargs)
-    fast = V.verify_jaccard(
-        cands, feats, "_sid", "codes", cfg.jaccard_threshold, features_rows=n, **kwargs
+    fps = (
+        d.join(rep_sigs.select("doc_id", "_sid"), "doc_id")
+        .select("_sid", winnow_fingerprints(F.col("text"), k=5, w=4).alias("_fps"))
+        .localCheckpoint(eager=True)
     )
+    thr, nperm = cfg.jaccard_threshold, cfg.num_perm
+    # winnow min_shared 35 is about the candidates' median shared count,
+    # so pairs on both sides of the filter are compared
+    return {
+        "jaccard": (
+            lambda: V.build_jaccard_mapside_bvar(feats, "_sid", "codes", "minhash", nperm, n),
+            lambda m: V.verify_jaccard(
+                cands, feats, "_sid", "codes", thr,
+                minhash_col="minhash", num_perm=nperm, mapside=m,
+            ),
+        ),
+        "containment": (
+            lambda: V.build_containment_mapside_bvar(feats, "_sid", "codes", n),
+            lambda m: V.verify_containment(cands, feats, "_sid", "codes", 0.9, mapside=m),
+        ),
+        "winnow": (
+            lambda: V.build_winnow_mapside_bvar(fps, "_sid", "_fps", 5, n),
+            lambda m: V.verify_winnow(cands, fps, "_sid", "_fps", 35, mapside=m),
+        ),
+    }
+
+
+@pytest.mark.parametrize("tier", ["jaccard", "containment", "winnow"])
+def test_mapside_verify_matches_join_path(sf0001_tiers, tier):
+    """Each set tier's broadcast map-side verify (numpy gates + exact
+    intersect + Spark-identical rounding) must emit exactly its join
+    path's rows."""
+    build, verify = sf0001_tiers[tier]
+    slow = verify(None)
+    fast = verify(build())
     assert "MapInArrow" in fast._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in slow._jdf.queryExecution().executedPlan().toString()
     assert slow.exceptAll(fast).count() == 0
     assert fast.exceptAll(slow).count() == 0
     assert fast.count() > 0
+
+
+@pytest.mark.parametrize("tier", ["jaccard", "containment", "winnow", "cosine"])
+def test_mapside_verify_drops_absent_ids(spark, tier):
+    """A pair naming an id the broadcast does not hold — below the
+    smallest id, between the two ids, above the largest — is dropped
+    map-side, as the join path's inner join drops it: not scored against
+    a neighbouring row's features, and not an out-of-range index."""
+    from functools import partial
+
+    from who_owns_mass_processing_spark.functions import vectors
+    from who_owns_mass_processing_spark.operators import verify as V
+
+    row = ([1, 5, -(2**63) + 7], [3, 1, 4, 1], ["abcde", "bcdef"], [0.6, 0.8, 0.0])
+    feats = spark.createDataFrame(
+        [(10, *row), (20, *row)],
+        "id long, codes array<bigint>, minhash array<bigint>, fps array<string>, "
+        "vec array<double>",
+    )
+    pairs = spark.createDataFrame([(5, 10), (10, 15), (10, 20), (10, 99)], "a long, b long")
+    if tier == "cosine":
+        bvar = vectors.build_cosine_mapside_bvar(feats, "id", "vec", 2, 3)
+        fast = V.map_pairs(pairs, bvar, "a bigint, b bigint, _cos double", vectors._cosine_score)
+        cos_udf = vectors.cosine_pair_udf()
+        slow = (
+            pairs.join(feats.select(F.col("id").alias("a"), F.col("vec").alias("_va")), "a")
+            .join(feats.select(F.col("id").alias("b"), F.col("vec").alias("_vb")), "b")
+            .select("a", "b", cos_udf("_va", "_vb").alias("_cos"))
+        )
+    else:
+        build, verify = {
+            "jaccard": (
+                partial(V.build_jaccard_mapside_bvar, feats, "id", "codes", "minhash", 4, 2),
+                partial(V.verify_jaccard, pairs, feats, "id", "codes", 0.8,
+                        minhash_col="minhash", num_perm=4),
+            ),
+            "containment": (
+                partial(V.build_containment_mapside_bvar, feats, "id", "codes", 2),
+                partial(V.verify_containment, pairs, feats, "id", "codes", 0.9),
+            ),
+            "winnow": (
+                partial(V.build_winnow_mapside_bvar, feats, "id", "fps", 5, 2),
+                partial(V.verify_winnow, pairs, feats, "id", "fps", 2),
+            ),
+        }[tier]
+        fast, slow = verify(mapside=build()), verify(mapside=None)
+    got = sorted(map(tuple, fast.collect()))
+    assert got == sorted(map(tuple, slow.collect()))
+    assert got and {(a, b) for a, b, _ in got} <= {(10, 20), (20, 10)}
 
 
 def test_hamming_value_emitted_and_salting_invariant(spark):

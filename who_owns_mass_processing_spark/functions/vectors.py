@@ -15,6 +15,17 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from who_owns_mass_processing_spark.operators.verify import (
+    _fixed_matrix_from_list_column,
+    _mapside_eligible,
+    map_pairs,
+    prefetch_broadcast,
+)
+
+# The map-side cosine verify's matrix cap (100 MB of float64), on top
+# of the shared BROADCAST_VERIFY_MAX_ROWS row bound.
+_COSINE_MAX_DOUBLES = 12_500_000
+
 
 def dot(a: Column, b: Column) -> Column:
     """Left-to-right double-precision dot product (deterministic order —
@@ -182,52 +193,46 @@ def ann_lsh_pairs(
     b = b.localCheckpoint(eager=True)
     # map-side exact-cosine verify for bounded corpora: the vector
     # matrix broadcasts (same bound class as a Spark BHJ build side) and
-    # one mapInArrow gather computes the IDENTICAL einsum the pair UDF
+    # one map_pairs gather computes the IDENTICAL einsum the pair UDF
     # ran — but without the two feature joins or shipping two vectors
     # per candidate through Arrow (only 16 bytes/pair cross).  Rounding
     # and the threshold filter STAY in Spark, so emitted values are
     # bit-identical to the join path.  Larger corpora keep the join
     # shape (features cannot be worker-resident at scale).  The matrix
-    # collect + broadcast runs on a side thread so it overlaps the
-    # census/cell phase (guide §2.6; see rep_pairs_from_sigs).
+    # collect + broadcast overlaps the census/cell phase
+    # (prefetch_broadcast; see rep_pairs_from_sigs).
     n_corpus = slim.count()
-    mapside = (
-        n_corpus <= 100_000
-        and n_corpus * int(sample["d"]) <= 12_500_000
-        and df.schema[id_col].dataType.simpleString() == "bigint"
-    )
-    bvar_future = None
-    if mapside:
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=1)
-        bvar_future = pool.submit(_build_cosine_mapside_bvar, slim, id_col, vec_col)
-        pool.shutdown(wait=False)
-    cands, _metrics = candidate_pairs(b, id_col, cap=cap, hard_cap=hard_cap)
-    if mapside:
-        scored = _cosine_pairs_mapside(cands, bvar_future.result())
-    else:
-        fa = slim.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))
-        fb = slim.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
-        cos_udf = cosine_pair_udf()
-        scored = (
-            cands.join(fa, "a")
-            .join(fb, "b")
-            .select("a", "b", cos_udf(F.col("_va"), F.col("_vb")).alias("_cos"))
-        )
+    with prefetch_broadcast(
+        build_cosine_mapside_bvar, slim, id_col, vec_col, n_corpus, int(sample["d"])
+    ) as mapside:
+        cands, _metrics = candidate_pairs(b, id_col, cap=cap, hard_cap=hard_cap)
+        bvar = mapside()
+        if bvar is not None:
+            scored = map_pairs(cands, bvar, "a bigint, b bigint, _cos double", _cosine_score)
+        else:
+            fa = slim.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))
+            fb = slim.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
+            cos_udf = cosine_pair_udf()
+            scored = (
+                cands.join(fa, "a")
+                .join(fb, "b")
+                .select("a", "b", cos_udf(F.col("_va"), F.col("_vb")).alias("_cos"))
+            )
     return (
         scored.select("a", "b", F.round(F.col("_cos"), 6).alias("cos_sim"))
         .where(F.col("cos_sim") >= threshold)
     )
 
 
-def _build_cosine_mapside_bvar(slim: DataFrame, id_col: str, vec_col: str):
-    """Collect + broadcast of the (n, dim) vector matrix (side-thread-
-    safe; see operators/verify.py build_jaccard_mapside_bvar)."""
-    from who_owns_mass_processing_spark.operators.verify import (
-        _fixed_matrix_from_list_column,
-    )
-
+def build_cosine_mapside_bvar(
+    slim: DataFrame, id_col: str, vec_col: str, n_rows: int, dim: int
+):
+    """Collect + broadcast (ids, matrix, norms) of the (n, dim) vector
+    matrix; None when ineligible (BROADCAST_VERIFY_MAX_ROWS row bound,
+    more than _COSINE_MAX_DOUBLES doubles, non-long ids).  Side-thread-safe
+    (prefetch_broadcast)."""
+    if not _mapside_eligible(slim, id_col, n_rows) or n_rows * dim > _COSINE_MAX_DOUBLES:
+        return None
     # Arrow-native collect (no toPandas object columns, no per-row
     # np.asarray): the vector column's flat float64 child reshapes into
     # the (n, dim) matrix in one step — same values, same row order
@@ -235,7 +240,6 @@ def _build_cosine_mapside_bvar(slim: DataFrame, id_col: str, vec_col: str):
     ids = tab.column(0).to_numpy().astype(np.int64, copy=False)
     order = np.argsort(ids, kind="stable")
     ids_s = ids[order]
-    dim = len(tab.column(1)[0]) if tab.num_rows else 0
     mat = _fixed_matrix_from_list_column(tab.column(1), dim, order)
     if mat is None:  # ragged vectors: per-row fallback (never produced here)
         vals = tab.column(1).to_pylist()
@@ -249,34 +253,14 @@ def _build_cosine_mapside_bvar(slim: DataFrame, id_col: str, vec_col: str):
     return slim.sparkSession.sparkContext.broadcast((ids_s, mat, norms))
 
 
-def _cosine_pairs_mapside(cands: DataFrame, bvar) -> DataFrame:
-    """(a, b) candidate pairs -> (a, b, _cos) via a broadcast (n, dim)
-    matrix gather — the numpy math is the same einsum as
-    `cosine_pair_udf`, so values are bit-identical."""
-    import pyarrow as pa
-
-    def gen(batches):
-        ids_b, mat_b, norms_b = bvar.value
-        for batch in batches:
-            a = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            b = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(a) == 0:
-                continue
-            ia = np.searchsorted(ids_b, a)
-            ib = np.searchsorted(ids_b, b)
-            va = mat_b[ia]
-            vb = mat_b[ib]
-            num = np.einsum("ij,ij->i", va, vb)
-            den = norms_b[ia] * norms_b[ib]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out = np.where(den > 0, num / den, 0.0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(a, type=pa.int64()), pa.array(b, type=pa.int64()),
-                 pa.array(out, type=pa.float64())],
-                ["a", "b", "_cos"],
-            )
-
-    return cands.select("a", "b").mapInArrow(gen, "a bigint, b bigint, _cos double")
+def _cosine_score(a, b, ia, ib, value):
+    """map_pairs tail: (a, b, _cos) by a broadcast matrix gather — the
+    same einsum as `cosine_pair_udf`, so values are bit-identical."""
+    _ids, mat, norms = value
+    num = np.einsum("ij,ij->i", mat[ia], mat[ib])
+    den = norms[ia] * norms[ib]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return a, b, np.where(den > 0, num / den, 0.0)
 
 
 def ann_topk_bruteforce(

@@ -24,7 +24,13 @@ from who_owns_mass_processing_spark.operators.blocking import (
     decode_pair_ids,
     with_surrogate_ids,
 )
-from who_owns_mass_processing_spark.operators.verify import verify_jaccard
+from who_owns_mass_processing_spark.operators import verify
+from who_owns_mass_processing_spark.operators.verify import (
+    prefetch_broadcast,
+    verify_containment,
+    verify_jaccard,
+    verify_winnow,
+)
 
 
 def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -144,44 +150,29 @@ def rep_pairs_from_sigs(
     # i.e. fewer drops: recall-safe)
     n_rows = corpus_rows if corpus_rows is not None else rep_sigs.count()
     features = rep_sigs.select("_sid", "codes", "minhash")
-    # overlap the map-side verify's feature collect + broadcast build
-    # (driver-side, ~0.7 s of gaps when serialized) with the census/cell
-    # phase below (guide §2.6): rep_sigs is already checkpointed, so the
-    # side thread's collect job runs while candidate_pairs does its
-    # census collects and checkpoint
-    from concurrent.futures import ThreadPoolExecutor
-
-    from who_owns_mass_processing_spark.operators.verify import (
-        build_jaccard_mapside_bvar,
-        jaccard_mapside_eligible,
-    )
-
-    bvar_future = None
-    if jaccard_mapside_eligible(features, "_sid", n_rows, "minhash", cfg.num_perm):
-        pool = ThreadPoolExecutor(max_workers=1)
-        bvar_future = pool.submit(
-            build_jaccard_mapside_bvar,
-            features, "_sid", "codes", "minhash", cfg.num_perm,
-            features_rows=n_rows,
+    # the map-side verify's feature collect + broadcast build overlaps the
+    # census/cell phase below: rep_sigs is already checkpointed, so the
+    # side thread's collect job runs while candidate_pairs does its census
+    # collects and checkpoint.  n_rows upper-bounds the rep count: the
+    # builder returns None above the bound (join path).
+    with prefetch_broadcast(
+        verify.build_jaccard_mapside_bvar,
+        features, "_sid", "codes", "minhash", cfg.num_perm, n_rows,
+    ) as mapside:
+        bands = band_explode(rep_sigs, "minhash", "_sid", cfg.bands, cfg.rows_per_band)
+        cands, metrics = candidate_pairs(
+            bands, "_sid", cap=cfg.band_bucket_cap, hard_cap=cfg.stop_band_threshold(n_rows)
         )
-        pool.shutdown(wait=False)
-    bands = band_explode(rep_sigs, "minhash", "_sid", cfg.bands, cfg.rows_per_band)
-    cands, metrics = candidate_pairs(
-        bands, "_sid", cap=cfg.band_bucket_cap, hard_cap=cfg.stop_band_threshold(n_rows)
-    )
-    verified = verify_jaccard(
-        cands,
-        features,
-        "_sid",
-        "codes",
-        cfg.jaccard_threshold,
-        minhash_col="minhash",
-        num_perm=cfg.num_perm,
-        # n_rows upper-bounds the rep count: enables the broadcast
-        # map-side verify on bounded corpora (join path above the bound)
-        features_rows=n_rows,
-        mapside_bvar_future=bvar_future,
-    )
+        verified = verify_jaccard(
+            cands,
+            features,
+            "_sid",
+            "codes",
+            cfg.jaccard_threshold,
+            minhash_col="minhash",
+            num_perm=cfg.num_perm,
+            mapside=mapside(),
+        )
     # decode surrogates AND attach rep fingerprints in the same two joins;
     # (a, b) re-normalized to original-id order with fps swapped in step
     dm = rep_sigs.select("_sid", F.col(id_col), "fingerprint")
@@ -348,53 +339,22 @@ def winnow_pairs(
             T.winnow_fingerprints(F.col(text_col), k=k, w=w).alias("_fps"),
         ).where(F.size("_fps") > 0)
     )
-    from concurrent.futures import ThreadPoolExecutor
-
-    from who_owns_mass_processing_spark.operators.verify import (
-        BROADCAST_VERIFY_MAX_ROWS,
-        build_winnow_mapside_bvar,
-        winnow_verify_mapside,
-    )
-
     n_fps = fps.count()  # checkpointed: cheap count
-    bvar_future = None
-    if n_fps <= BROADCAST_VERIFY_MAX_ROWS and k <= 8:
-        # overlap the feature collect + pack + broadcast with the
-        # census/cell phase below (guide §2.6; see rep_pairs_from_sigs)
-        pool = ThreadPoolExecutor(max_workers=1)
-        bvar_future = pool.submit(
-            build_winnow_mapside_bvar,
-            fps.select("_sid", "_fps"), "_sid", "_fps", k, features_rows=n_fps,
-        )
-        pool.shutdown(wait=False)
-    bands = fps.select(
-        F.col("_sid"),
-        F.lit(0).alias("band_id"),
-        F.explode("_fps").alias("_g"),
-    ).select("_sid", "band_id", F.xxhash64("_g").alias("band_hash"))
-    cands, metrics = candidate_pairs(bands, "_sid", cap=cap, hard_cap=hard_cap)
-    sid_pairs = None
-    if n_fps <= BROADCAST_VERIFY_MAX_ROWS:
-        # broadcast map-side verify (operators/verify.py): fingerprints
-        # pack into order-preserving uint64, intersect counts are
-        # integers — exact; None = k > 8 or bytes over the cap (large
-        # corpora fail the byte PRE-gate without a driver collect)
-        sid_pairs = winnow_verify_mapside(
-            cands, fps.select("_sid", "_fps"), "_sid", "_fps", k, int(min_shared),
-            features_rows=n_fps, bvar_future=bvar_future,
-        )
-    if sid_pairs is None:
-        fa = fps.select(F.col("_sid").alias("a"), F.col("_fps").alias("_fa"))
-        fb = fps.select(F.col("_sid").alias("b"), F.col("_fps").alias("_fb"))
-        sid_pairs = (
-            cands.join(fa, "a")
-            .join(fb, "b")
-            .select(
-                "a",
-                "b",
-                F.size(F.array_intersect("_fa", "_fb")).cast("long").alias("n_shared"),
-            )
-            .where(F.col("n_shared") >= F.lit(int(min_shared)))
+    features = fps.select("_sid", "_fps")
+    # overlap the feature collect + pack + broadcast with the census/cell
+    # phase below (see rep_pairs_from_sigs); the map-side verify packs
+    # fingerprints into order-preserving uint64, so counts stay exact
+    with prefetch_broadcast(
+        verify.build_winnow_mapside_bvar, features, "_sid", "_fps", k, n_fps
+    ) as mapside:
+        bands = fps.select(
+            F.col("_sid"),
+            F.lit(0).alias("band_id"),
+            F.explode("_fps").alias("_g"),
+        ).select("_sid", "band_id", F.xxhash64("_g").alias("band_hash"))
+        cands, metrics = candidate_pairs(bands, "_sid", cap=cap, hard_cap=hard_cap)
+        sid_pairs = verify_winnow(
+            cands, features, "_sid", "_fps", min_shared, mapside=mapside()
         )
     pairs = decode_pair_ids(sid_pairs, fps.select("_sid", id_col), id_col)
     return pairs, metrics
@@ -456,59 +416,21 @@ def containment_pairs_lsh(
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-    from concurrent.futures import ThreadPoolExecutor
-
-    from who_owns_mass_processing_spark.operators.verify import (
-        BROADCAST_VERIFY_MAX_ROWS,
-        build_containment_mapside_bvar,
-        containment_verify_mapside,
-    )
-
     n_reps = rep_sigs.count()  # checkpointed: a cheap RDD count
-    bvar_future = None
-    if n_reps <= BROADCAST_VERIFY_MAX_ROWS:
-        # overlap the feature collect + broadcast with the census/cell
-        # phase below (guide §2.6; see rep_pairs_from_sigs)
-        pool = ThreadPoolExecutor(max_workers=1)
-        bvar_future = pool.submit(
-            build_containment_mapside_bvar,
-            rep_sigs.select("_sid", "codes"), "_sid", "codes", features_rows=n_reps,
+    features = rep_sigs.select("_sid", "codes")
+    # overlap the feature collect + broadcast with the census/cell phase
+    # below (see rep_pairs_from_sigs); both paths emit both containment
+    # directions
+    with prefetch_broadcast(
+        verify.build_containment_mapside_bvar, features, "_sid", "codes", n_reps
+    ) as mapside:
+        bands = band_explode(rep_sigs, "minhash", "_sid", n_bands, n_rows)
+        cands, metrics = candidate_pairs(
+            bands, "_sid", cap=cfg.band_bucket_cap, hard_cap=cfg.band_bucket_hard_cap
         )
-        pool.shutdown(wait=False)
-    bands = band_explode(rep_sigs, "minhash", "_sid", n_bands, n_rows)
-    cands, metrics = candidate_pairs(
-        bands, "_sid", cap=cfg.band_bucket_cap, hard_cap=cfg.band_bucket_hard_cap
-    )
-    rep_hits = None
-    if n_reps <= BROADCAST_VERIFY_MAX_ROWS:
-        # broadcast map-side verify (same bound class + exactness
-        # argument as the Jaccard tier's, operators/verify.py): one
-        # Arrow pass emits both containment directions; None = the
-        # collected bytes exceeded the broadcast cap -> join path
-        rep_hits = containment_verify_mapside(
-            cands, rep_sigs.select("_sid", "codes"), "_sid", "codes", threshold,
-            features_rows=n_reps, bvar_future=bvar_future,
+        rep_hits = verify_containment(
+            cands, features, "_sid", "codes", threshold, mapside=mapside()
         )
-    if rep_hits is None:
-        ca = rep_sigs.select(F.col("_sid").alias("a"), F.col("codes").alias("_ca"))
-        cb = rep_sigs.select(F.col("_sid").alias("b"), F.col("codes").alias("_cb"))
-        joined = (
-            cands.join(ca, "a")
-            .join(cb, "b")
-            .select(
-                "a", "b", "_ca", "_cb",
-                F.size(F.array_intersect("_ca", "_cb")).cast("double").alias("_inter"),
-            )
-        )
-        fwd = joined.where(F.size("_ca") > 0).select(
-            F.col("a").alias("ra"), F.col("b").alias("rb"),
-            F.round(F.col("_inter") / F.size("_ca").cast("double"), 6).alias("containment"),
-        )
-        bwd = joined.where(F.size("_cb") > 0).select(
-            F.col("b").alias("ra"), F.col("a").alias("rb"),
-            F.round(F.col("_inter") / F.size("_cb").cast("double"), 6).alias("containment"),
-        )
-        rep_hits = fwd.unionByName(bwd).where(F.col("containment") >= threshold)
     # expand rep-level verdicts to members (identical text => identical
     # shingle sets => identical containment) + ordered within-group pairs;
     # surrogate rep ids resolve to fingerprints here (the member join key)

@@ -6,18 +6,36 @@ R/deduplicaters.R:342-346, config.R:28-29).  Here:
 
   caption tier  exact Jaccard over char-shingle arrays (builtins:
                 array_intersect — no Python) >= cfg.jaccard_threshold;
+                the containment and winnow tiers intersect the same way;
   image tier    popcount Hamming over pHash (builtin bit_count)
                 <= cfg.hamming_radius, plus for *lossy* formats a PSNR
                 >= 40 dB decoded-pixel check (pandas UDF) — the two-tier
                 strict/loose rule mirroring the reference's 0.85/0.95.
 
-Scale notes: the verify join re-attaches per-id features by shuffling on
-id — bytes are re-joined ONLY for the lossy-pair PSNR subset (tiny), the
-Jaccard verify carries shingle arrays not raw text, and every join is a
-plain equi-join AQE can re-plan.
+Two paths verify the set tiers (Jaccard, containment, winnow) and the
+embedding-cosine tier, and emit identical rows:
+
+  map-side  for bounded feature tables: a `build_*_mapside_bvar` builder
+            collects the features once into sorted numpy arrays and
+            broadcasts them, usually on a driver side thread
+            (`prefetch_broadcast`) so the collect overlaps blocking.  One
+            `map_pairs` pass then reads bare (a, b) pairs — 16 bytes per
+            pair cross the Python boundary — looks both ids up
+            (`_lookup`; a pair with an absent id is dropped, as the
+            inner join drops it), and scores the survivors with the
+            tier's vectorized tail over one sorted-list intersect
+            (`_intersect_counts`).  A builder returns None above the row
+            or byte bound, and the caller takes the join path.
+  join      the scale path: each pair re-attaches per-id features by an
+            equi-join on id that AQE can re-plan.  Bytes are re-joined
+            ONLY for the lossy-pair PSNR subset (tiny), and the set tiers
+            carry code arrays, not raw text.
 """
 
 from __future__ import annotations
+
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -44,6 +62,38 @@ BROADCAST_VERIFY_MAX_BYTES = 256 * 1024 * 1024
 _PREGATE_MIN_ROWS = 20_000
 
 
+@contextmanager
+def prefetch_broadcast(build, *args):
+    """Run the broadcast builder `build(*args)` on a driver side thread
+    while the block runs, so its collect job and pickle overlap the
+    caller's census/cell phase instead of serializing after it (guide
+    §2.6; measured ~0.7 s of driver-only gaps per LSH tier).  Yields
+    `mapside`: calling it waits for the build and returns its broadcast
+    or None (a builder exception is raised there).  When the block
+    raises, the build is waited for and its broadcast destroyed — no
+    broadcast or thread outlives a failed block; on a clean exit the
+    broadcast stays alive for the lazily evaluated result."""
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        future = pool.submit(build, *args)
+        try:
+            yield future.result
+        except BaseException:
+            bvar = None if future.exception() else future.result()
+            if bvar is not None:
+                bvar.destroy()
+            raise
+
+
+def _mapside_eligible(features: DataFrame, id_col: str, rows: int | None) -> bool:
+    """Pre-collect precondition of every map-side builder: a caller-
+    supplied row bound within BROADCAST_VERIFY_MAX_ROWS and long ids."""
+    return (
+        rows is not None
+        and rows <= BROADCAST_VERIFY_MAX_ROWS
+        and features.schema[id_col].dataType.simpleString() == "bigint"
+    )
+
+
 def _bytes_pregate(
     features: DataFrame, array_col: str, rows: int | None, fixed_per_row: int
 ) -> bool:
@@ -64,9 +114,9 @@ def _collect_ragged_arrow(
     features: DataFrame, id_col: str, array_col: str, extra_cols: tuple[str, ...] = ()
 ):
     """Arrow-collect (id, array<...>[, extras]) and return
-    (sids_sorted, out_offs, flat_vals, lens_sorted, order, table) with the
-    ragged column re-laid-out in ascending-id row order — every step a
-    vectorized numpy gather, no per-row Python.
+    (sids_sorted, offs, flat, order, table) with the ragged column
+    re-laid-out in ascending-id row order — every step a vectorized
+    numpy gather, no per-row Python.
 
     The previous toPandas path materialized a Python list per row and an
     np.asarray per cell (measured ~0.3-0.5 s of driver time per
@@ -81,19 +131,19 @@ def _collect_ragged_arrow(
     offs_a = arr.offsets.to_numpy().astype(np.int64, copy=False)
     vals = arr.values.to_numpy(zero_copy_only=False)
     order = np.argsort(sids, kind="stable")
-    sids_s, out_offs, flat, lens_s = _sorted_ragged(order, offs_a, vals, sids)
-    return sids_s, out_offs, flat, lens_s, order, tab
+    return (*_sorted_ragged(order, offs_a, vals, sids), order, tab)
 
 
 def _sorted_ragged(
     order: np.ndarray, offs_a: np.ndarray, vals: np.ndarray, sids: np.ndarray
 ):
     """Re-lay a ragged (offsets, values) column into ascending-id row
-    order with one vectorized gather; returns (sids_sorted, out_offs,
-    flat_sorted, lens_sorted)."""
-    lens = np.diff(offs_a)
-    sids_s = sids[order]
-    lens_s = lens[order]
+    order with one vectorized gather; returns (sids_sorted, offs, flat)
+    with `flat` as uint64: every map-side code array is sorted in
+    UNSIGNED order (signature_udf sorts the uint64 shingle codes before
+    its int64 store; packed winnow grams are big-endian uint64), so the
+    reinterpreted bits are what `_intersect_counts` searches."""
+    lens_s = np.diff(offs_a)[order]
     out_offs = np.zeros(len(lens_s) + 1, dtype=np.int64)
     np.cumsum(lens_s, out=out_offs[1:])
     total = int(out_offs[-1])
@@ -107,7 +157,7 @@ def _sorted_ragged(
         flat = vals[pos]
     else:
         flat = vals[:0]
-    return sids_s, out_offs, flat, lens_s
+    return sids[order], out_offs, flat.astype(np.uint64, copy=False)
 
 
 def _fixed_matrix_from_list_column(col, width: int, order: np.ndarray):
@@ -126,6 +176,14 @@ def _fixed_matrix_from_list_column(col, width: int, order: np.ndarray):
     return vals[start : start + n * width].reshape(n, width)[order]
 
 
+def _broadcast_capped(features: DataFrame, nbytes: int, value):
+    """Broadcast `value`, or None when its arrays exceed the byte cap
+    (the caller falls back to the join path)."""
+    if nbytes > BROADCAST_VERIFY_MAX_BYTES:
+        return None
+    return features.sparkSession.sparkContext.broadcast(value)
+
+
 def _spark_round6(x: np.ndarray) -> np.ndarray:
     """Spark's round(double, 6) (BigDecimal HALF_UP) for the Jaccard
     rationals: floor(x*1e6 + 0.5 + 1e-9)/1e6.  Exact-equivalence
@@ -136,23 +194,69 @@ def _spark_round6(x: np.ndarray) -> np.ndarray:
     return np.floor(x * 1e6 + 0.5 + 1e-9) / 1e6
 
 
-def jaccard_mapside_eligible(
-    features: DataFrame,
-    id_col: str,
-    features_rows: int | None,
-    minhash_col: str | None,
-    num_perm: int | None,
-) -> bool:
-    """Static (pre-collect) eligibility for the broadcast map-side
-    Jaccard verify — shared by verify_jaccard and callers that build
-    the broadcast on a side thread (overlapped with the census phase)."""
-    return (
-        minhash_col is not None
-        and bool(num_perm)
-        and features_rows is not None
-        and features_rows <= BROADCAST_VERIFY_MAX_ROWS
-        and features.schema[id_col].dataType.simpleString() == "bigint"
-    )
+def _ratio(num: np.ndarray, den: np.ndarray, empty: float) -> np.ndarray:
+    """num / den as float64 (the IEEE division Python's int / int
+    performs), `empty` where den == 0."""
+    out = np.full(len(num), empty, dtype=np.float64)
+    return np.divide(num, den, out=out, where=den > 0)
+
+
+def _row_lens(offs: np.ndarray, idx: np.ndarray) -> np.ndarray:
+    return offs[idx + 1] - offs[idx]
+
+
+def _lookup(sids: np.ndarray, ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Row of each id in the sorted broadcast ids, and a mask of the ids
+    present.  The index is clipped and checked for equality: an absent
+    id would otherwise read its neighbour's features (or index past the
+    end), where the join path's inner join drops the pair."""
+    idx = np.minimum(np.searchsorted(sids, ids), max(len(sids) - 1, 0))
+    found = sids[idx] == ids if len(sids) else np.zeros(len(ids), dtype=bool)
+    return idx, found
+
+
+def _intersect_counts(
+    offs: np.ndarray, flat: np.ndarray, ia: np.ndarray, ib: np.ndarray
+) -> np.ndarray:
+    """|A ∩ B| for each row pair (ia[i], ib[i]) of the ragged layout
+    (`flat` uint64, each row sorted and distinct): the shorter row is
+    binary-searched in the longer one (sorted-list intersection)."""
+    out = np.zeros(len(ia), dtype=np.int64)
+    for i, (x, y) in enumerate(zip(ia.tolist(), ib.tolist())):
+        A = flat[offs[x] : offs[x + 1]]
+        B = flat[offs[y] : offs[y + 1]]
+        if len(A) > len(B):
+            A, B = B, A
+        if len(A):
+            pos = np.searchsorted(B, A)
+            out[i] = int((B[np.minimum(pos, len(B) - 1)] == A).sum())
+    return out
+
+
+def map_pairs(pairs: DataFrame, bvar, schema: str, score) -> DataFrame:
+    """The map-side verify: one mapInArrow pass over the bare (a, b)
+    pairs against the broadcast `bvar` (sorted ids first).  Pairs whose
+    ids are both present go to `score(a, b, ia, ib, value)` — ids, their
+    broadcast rows, and the broadcast value — which returns the output
+    columns of `schema` as numpy arrays."""
+    import pyarrow as pa
+
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def gen(batches):
+        value = bvar.value
+        for batch in batches:
+            a = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            b = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+            ia, found_a = _lookup(value[0], a)
+            ib, found_b = _lookup(value[0], b)
+            keep = found_a & found_b
+            if not keep.any():
+                continue
+            cols = score(a[keep], b[keep], ia[keep], ib[keep], value)
+            yield pa.RecordBatch.from_arrays([pa.array(c) for c in cols], names)
+
+    return pairs.select("a", "b").mapInArrow(gen, schema)
 
 
 def build_jaccard_mapside_bvar(
@@ -161,216 +265,52 @@ def build_jaccard_mapside_bvar(
     shingle_col: str,
     minhash_col: str,
     num_perm: int,
-    features_rows: int | None = None,
+    features_rows: int | None,
 ):
-    """Collect + numpy-layout + broadcast of the verify feature table;
-    returns the Broadcast or None (over the byte cap / non-contiguous
-    Arrow layout — caller falls back to the join path).  Safe to run on
-    a driver side thread (guide §2.6): the collect job and the broadcast
-    pickle then OVERLAP the census/cell phase instead of serializing
-    after it (measured ~0.7 s of driver-only gaps per LSH tier)."""
-    if _bytes_pregate(features, shingle_col, features_rows, num_perm * 8):
-        return None  # provably over the cap: skip the doomed collect
+    """Collect + numpy-layout + broadcast of the Jaccard verify features
+    (sids, offs, codes, minhash); None when ineligible (`features_rows`
+    bound, non-long ids, byte cap, non-contiguous Arrow layout) — the
+    caller takes the join path.  Side-thread-safe (prefetch_broadcast)."""
+    if not _mapside_eligible(features, id_col, features_rows) or _bytes_pregate(
+        features, shingle_col, features_rows, num_perm * 8
+    ):
+        return None
     collected = _collect_ragged_arrow(features, id_col, shingle_col, (minhash_col,))
     if collected is None:
         return None
-    sids_s, offs, flat, lens, order, tab = collected
-    flat = flat.astype(np.int64, copy=False)
+    sids_s, offs, flat, order, tab = collected
     mh = _fixed_matrix_from_list_column(tab.column(2), num_perm, order)
     if mh is None:  # ragged minhash rows (never produced by signature_udf)
         return None
     mh = mh.astype(np.int64, copy=False)
-    if flat.nbytes + mh.nbytes > BROADCAST_VERIFY_MAX_BYTES:
-        return None  # caller falls back to the join path
-    return features.sparkSession.sparkContext.broadcast(
-        (sids_s, mh, offs, flat, lens)
-    )
-
-
-def _verify_jaccard_mapside(
-    pairs: DataFrame,
-    bvar,
-    threshold: float,
-    num_perm: int,
-    gate: float,
-    ratio_floor: float,
-) -> DataFrame:
-    """Broadcast map-side twin of the join-path verify (guide §3.1/§4.2):
-    the feature table (surrogate id, sorted shingle codes, minhash) is
-    collected once from its checkpoint, shipped as numpy arrays, and one
-    mapInArrow pass over the bare (a, b) candidate pairs fuses the
-    size-ratio gate, the minhash estimate gate, the exact sorted-array
-    intersect, and Spark-identical rounding — no per-pair join, no
-    interpreted higher-order expressions, and only 16 bytes/pair cross
-    the Python boundary.  Emits exactly the join path's rows (gate
-    constants and float compares are bit-identical IEEE ops; pinned in
-    tests/test_blocking.py)."""
-    import pyarrow as pa
-
-    thr = float(threshold)
-    nperm = float(num_perm)
-
-    def gen(batches):
-        sids_b, mh_b, offs_b, flat_b, lens_b = bvar.value
-        for batch in batches:
-            a = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            b = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(a) == 0:
-                continue
-            ia = np.searchsorted(sids_b, a)
-            ib = np.searchsorted(sids_b, b)
-            na = lens_b[ia]
-            nb = lens_b[ib]
-            keep = np.minimum(na, nb).astype(np.float64) >= ratio_floor * np.maximum(
-                na, nb
-            ).astype(np.float64)
-            est = (mh_b[ia] == mh_b[ib]).sum(axis=1) / nperm
-            keep &= est >= gate
-            out_a: list[int] = []
-            out_b: list[int] = []
-            out_j: list[float] = []
-            for i in np.nonzero(keep)[0].tolist():
-                # codes are sorted in UNSIGNED order before the int64
-                # store (signature_udf sorts the uint64 shingle codes) —
-                # reinterpret the bits so searchsorted sees that order
-                A = flat_b[offs_b[ia[i]] : offs_b[ia[i] + 1]].view(np.uint64)
-                B = flat_b[offs_b[ib[i]] : offs_b[ib[i] + 1]].view(np.uint64)
-                if len(A) > len(B):
-                    A, B = B, A
-                if len(B) == 0:
-                    inter = 0
-                else:
-                    pos = np.searchsorted(B, A)
-                    inter = int((B[np.minimum(pos, len(B) - 1)] == A).sum())
-                union = int(na[i]) + int(nb[i]) - inter
-                j = 1.0 if union <= 0 else inter / union
-                jr = float(_spark_round6(np.float64(j)))
-                if jr >= thr:
-                    out_a.append(int(a[i]))
-                    out_b.append(int(b[i]))
-                    out_j.append(jr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_a, type=pa.int64()),
-                    pa.array(out_b, type=pa.int64()),
-                    pa.array(out_j, type=pa.float64()),
-                ],
-                ["a", "b", "jaccard"],
-            )
-
-    return pairs.select("a", "b").mapInArrow(gen, "a bigint, b bigint, jaccard double")
+    return _broadcast_capped(features, flat.nbytes + mh.nbytes, (sids_s, offs, flat, mh))
 
 
 def build_containment_mapside_bvar(
-    features: DataFrame,
-    id_col: str,
-    shingle_col: str,
-    features_rows: int | None = None,
+    features: DataFrame, id_col: str, shingle_col: str, features_rows: int | None
 ):
-    """Collect + broadcast for the containment map-side verify; None
-    over the byte cap.  Side-thread-safe (see build_jaccard_mapside_bvar)."""
-    if _bytes_pregate(features, shingle_col, features_rows, 0):
-        return None  # provably over the cap: skip the doomed collect
+    """Collect + broadcast (sids, offs, codes) for the containment
+    verify; None when ineligible (see build_jaccard_mapside_bvar)."""
+    if not _mapside_eligible(features, id_col, features_rows) or _bytes_pregate(
+        features, shingle_col, features_rows, 0
+    ):
+        return None
     collected = _collect_ragged_arrow(features, id_col, shingle_col)
     if collected is None:
         return None
-    sids_s, offs, flat, lens, _order, _tab = collected
-    flat = flat.astype(np.int64, copy=False)
-    if flat.nbytes > BROADCAST_VERIFY_MAX_BYTES:
-        return None  # caller falls back to the join path
-    return features.sparkSession.sparkContext.broadcast((sids_s, offs, flat, lens))
-
-
-def containment_verify_mapside(
-    pairs: DataFrame,
-    features: DataFrame,
-    id_col: str,
-    shingle_col: str,
-    threshold: float,
-    features_rows: int | None = None,
-    bvar_future=None,
-) -> DataFrame | None:
-    """Broadcast map-side twin of the containment verify: for each
-    candidate (a, b) emit BOTH ordered directions (ra, rb, containment)
-    with containment = |A∩B|/|A| rounded like Spark's round(double, 6)
-    and filtered at `threshold` — exactly the join path's rows (empty-
-    codes sides emit nothing, matching the size(_c)>0 guards; the
-    rounding exactness argument is `_spark_round6`'s rational-gap one,
-    denominators here are single-doc shingle counts)."""
-    import pyarrow as pa
-
-    if bvar_future is not None:
-        bvar = bvar_future.result()
-    else:
-        bvar = build_containment_mapside_bvar(
-            features, id_col, shingle_col, features_rows=features_rows
-        )
-    if bvar is None:
-        return None
-    thr = float(threshold)
-
-    def gen(batches):
-        sids_b, offs_b, flat_b, lens_b = bvar.value
-        for batch in batches:
-            a = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            b = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(a) == 0:
-                continue
-            ia = np.searchsorted(sids_b, a)
-            ib = np.searchsorted(sids_b, b)
-            out_ra: list[int] = []
-            out_rb: list[int] = []
-            out_c: list[float] = []
-            for i in range(len(a)):
-                na = int(lens_b[ia[i]])
-                nb = int(lens_b[ib[i]])
-                if na == 0 and nb == 0:
-                    continue
-                A = flat_b[offs_b[ia[i]] : offs_b[ia[i] + 1]].view(np.uint64)
-                B = flat_b[offs_b[ib[i]] : offs_b[ib[i] + 1]].view(np.uint64)
-                S, L = (A, B) if len(A) <= len(B) else (B, A)
-                if len(L) == 0:
-                    inter = 0
-                else:
-                    pos = np.searchsorted(L, S)
-                    inter = int((L[np.minimum(pos, len(L) - 1)] == S).sum())
-                if na > 0:
-                    c = float(_spark_round6(np.float64(inter / na)))
-                    if c >= thr:
-                        out_ra.append(int(a[i]))
-                        out_rb.append(int(b[i]))
-                        out_c.append(c)
-                if nb > 0:
-                    c = float(_spark_round6(np.float64(inter / nb)))
-                    if c >= thr:
-                        out_ra.append(int(b[i]))
-                        out_rb.append(int(a[i]))
-                        out_c.append(c)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ra, type=pa.int64()),
-                    pa.array(out_rb, type=pa.int64()),
-                    pa.array(out_c, type=pa.float64()),
-                ],
-                ["ra", "rb", "containment"],
-            )
-
-    return pairs.select("a", "b").mapInArrow(
-        gen, "ra bigint, rb bigint, containment double"
-    )
+    sids_s, offs, flat, _order, _tab = collected
+    return _broadcast_capped(features, flat.nbytes, (sids_s, offs, flat))
 
 
 def build_winnow_mapside_bvar(
-    features: DataFrame,
-    id_col: str,
-    fps_col: str,
-    k: int,
-    features_rows: int | None = None,
+    features: DataFrame, id_col: str, fps_col: str, k: int, features_rows: int | None
 ):
-    """Collect + pack + broadcast for the winnow map-side verify; None
-    when ineligible (k > 8, byte cap, non-ascii grams).  Side-thread-
-    safe (see build_jaccard_mapside_bvar)."""
-    if k > 8:
+    """Collect + pack + broadcast (sids, offs, packed grams) for the
+    winnow verify; None when ineligible (k > 8, non-ascii grams, or see
+    build_jaccard_mapside_bvar).  Fingerprints are k-char grams: each
+    packs into a big-endian uint64 preserving lexicographic order, so
+    the sorted string arrays stay sorted as codes."""
+    if k > 8 or not _mapside_eligible(features, id_col, features_rows):
         return None
     if _bytes_pregate(features, fps_col, features_rows, 0):
         return None  # provably over the cap: skip the doomed collect
@@ -403,79 +343,8 @@ def build_winnow_mapside_bvar(
         wide[:, :k] = data[so[:-1, None] + np.arange(k)]
         packed = wide.view(np.dtype(">u8")).ravel().astype(np.uint64)
     order = np.argsort(sids, kind="stable")
-    sids_s, offs, flat, lens = _sorted_ragged(order, row_offs, packed, sids)
-    if flat.nbytes > BROADCAST_VERIFY_MAX_BYTES:
-        return None
-    return features.sparkSession.sparkContext.broadcast((sids_s, offs, flat, lens))
-
-
-def winnow_verify_mapside(
-    pairs: DataFrame,
-    features: DataFrame,
-    id_col: str,
-    fps_col: str,
-    k: int,
-    min_shared: int,
-    features_rows: int | None = None,
-    bvar_future=None,
-) -> DataFrame | None:
-    """Broadcast map-side twin of the winnow-pair verify: n_shared =
-    |fps_a ∩ fps_b| over the per-doc fingerprint sets, filtered at
-    min_shared — an integer count, no rounding concerns.  Fingerprints
-    are k-char grams (k <= 8 required): each packs into a big-endian
-    uint64 preserving lexicographic order, so the sorted string arrays
-    stay sorted as codes and the intersect is the same searchsorted
-    merge the Jaccard tier uses."""
-    import pyarrow as pa
-
-    if bvar_future is not None:
-        bvar = bvar_future.result()
-    else:
-        bvar = build_winnow_mapside_bvar(
-            features, id_col, fps_col, k, features_rows=features_rows
-        )
-    if bvar is None:
-        return None
-    ms = int(min_shared)
-
-    def gen(batches):
-        sids_b, offs_b, flat_b, lens_b = bvar.value
-        for batch in batches:
-            a = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            b = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(a) == 0:
-                continue
-            ia = np.searchsorted(sids_b, a)
-            ib = np.searchsorted(sids_b, b)
-            out_a: list[int] = []
-            out_b: list[int] = []
-            out_n: list[int] = []
-            for i in range(len(a)):
-                A = flat_b[offs_b[ia[i]] : offs_b[ia[i] + 1]]
-                B = flat_b[offs_b[ib[i]] : offs_b[ib[i] + 1]]
-                if len(A) > len(B):
-                    A, B = B, A
-                if len(B) == 0:
-                    inter = 0
-                else:
-                    pos = np.searchsorted(B, A)
-                    inter = int((B[np.minimum(pos, len(B) - 1)] == A).sum())
-                if inter >= ms:
-                    out_a.append(int(a[i]))
-                    out_b.append(int(b[i]))
-                    out_n.append(inter)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_a, type=pa.int64()),
-                    pa.array(out_b, type=pa.int64()),
-                    pa.array(out_n, type=pa.int64()),
-                ],
-                ["a", "b", "n_shared"],
-            )
-
-    return pairs.select("a", "b").mapInArrow(
-        gen, "a bigint, b bigint, n_shared bigint"
-    )
+    sids_s, offs, flat = _sorted_ragged(order, row_offs, packed, sids)
+    return _broadcast_capped(features, flat.nbytes, (sids_s, offs, flat))
 
 
 def verify_jaccard(
@@ -487,16 +356,17 @@ def verify_jaccard(
     minhash_col: str | None = None,
     num_perm: int | None = None,
     gate_sigmas: float = 6.5,
-    features_rows: int | None = None,
-    mapside_bvar_future=None,
+    mapside=None,
 ) -> DataFrame:
     """pairs(a,b) x features(id, shingles) -> (a, b, jaccard) passing rows.
 
-    mapside_bvar_future: optional Future whose result is the prebuilt
-    map-side broadcast (build_jaccard_mapside_bvar) — callers submit the
-    build on a side thread so the feature collect overlaps their census
-    phase; a None result falls back to the join path exactly like the
-    synchronous build.
+    mapside: the broadcast from build_jaccard_mapside_bvar (usually
+    prebuilt on a side thread, prefetch_broadcast), or None for the join
+    path; it needs `minhash_col`/`num_perm`.  The map-side path fuses
+    the gates below, the exact intersect
+    and Spark-identical rounding into one Arrow pass, and emits exactly
+    the join path's rows (gate constants and float compares are
+    bit-identical IEEE ops; pinned in tests/test_blocking.py).
 
     When `minhash_col`/`num_perm` are given, an ESTIMATE GATE runs before
     the exact shingle intersect: the fraction of equal minhash positions
@@ -522,31 +392,35 @@ def verify_jaccard(
     # (and the O(|codes|) intersect) for size-mismatched candidates —
     # measured 4.2 s -> 1.5 s on the 2.33M-candidate gate stage at
     # sf0.1 and a ~12% cut of exact-verify survivors.
-    ratio_floor = F.lit(float(threshold) - 1e-6)
+    ratio_floor = float(threshold) - 1e-6
+    gated = minhash_col is not None and bool(num_perm)
+    if gated:
+        gate = threshold - gate_sigmas * (threshold * (1 - threshold) / num_perm) ** 0.5
+
+    if mapside is not None:
+        thr, nperm = float(threshold), float(num_perm)
+
+        def score(a, b, ia, ib, value):
+            _sids, offs, flat, mh = value
+            na, nb = _row_lens(offs, ia), _row_lens(offs, ib)
+            keep = np.minimum(na, nb).astype(np.float64) >= ratio_floor * np.maximum(
+                na, nb
+            ).astype(np.float64)
+            keep &= (mh[ia] == mh[ib]).sum(axis=1) / nperm >= gate
+            a, b, ia, ib, na, nb = (x[keep] for x in (a, b, ia, ib, na, nb))
+            inter = _intersect_counts(offs, flat, ia, ib)
+            j = _spark_round6(_ratio(inter, na + nb - inter, 1.0))
+            ok = j >= thr
+            return a[ok], b[ok], j[ok]
+
+        return map_pairs(pairs, mapside, "a bigint, b bigint, jaccard double", score)
 
     def _ratio_ok(na, nb):
-        return F.least(na, nb).cast("double") >= ratio_floor * F.greatest(na, nb).cast("double")
+        return F.least(na, nb).cast("double") >= F.lit(ratio_floor) * F.greatest(
+            na, nb
+        ).cast("double")
 
-    # map-side fast path: bounded feature table + long surrogate ids →
-    # broadcast numpy verify (gates + exact intersect fused, no joins).
-    # `features_rows` is a caller-supplied UPPER BOUND on the feature
-    # row count; corpora above the bound keep the equi-join shape.
-    if jaccard_mapside_eligible(features, id_col, features_rows, minhash_col, num_perm):
-        if mapside_bvar_future is not None:
-            bvar = mapside_bvar_future.result()
-        else:
-            bvar = build_jaccard_mapside_bvar(
-                features, id_col, shingle_col, minhash_col, num_perm,
-                features_rows=features_rows,
-            )
-        if bvar is not None:  # None: collected bytes exceeded the cap
-            gate = threshold - gate_sigmas * (threshold * (1 - threshold) / num_perm) ** 0.5
-            return _verify_jaccard_mapside(
-                pairs, bvar, threshold, num_perm, gate, float(threshold) - 1e-6
-            )
-
-    if minhash_col is not None and num_perm:
-        gate = threshold - gate_sigmas * (threshold * (1 - threshold) / num_perm) ** 0.5
+    if gated:
         ma = features.select(
             F.col(id_col).alias("a"), F.col(minhash_col).alias("_ma"),
             F.size(shingle_col).alias("_na"),
@@ -564,17 +438,102 @@ def verify_jaccard(
             .where(_ratio_ok(F.col("_na"), F.col("_nb")) & (est >= F.lit(gate)))
             .select("a", "b")
         )
-        size_gated = True
-    else:
-        size_gated = False
     fa = features.select(F.col(id_col).alias("a"), F.col(shingle_col).alias("_sa"))
     fb = features.select(F.col(id_col).alias("b"), F.col(shingle_col).alias("_sb"))
     out = pairs.join(fa, "a").join(fb, "b")
-    if not size_gated:
+    if not gated:
         out = out.where(_ratio_ok(F.size("_sa"), F.size("_sb")))
     return (
         out.select("a", "b", F.round(jaccard_arrays(F.col("_sa"), F.col("_sb")), 6).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
+    )
+
+
+def verify_containment(
+    pairs: DataFrame,
+    features: DataFrame,
+    id_col: str,
+    shingle_col: str,
+    threshold: float,
+    mapside=None,
+) -> DataFrame:
+    """pairs(a,b) x features(id, codes) -> (ra, rb, containment) for BOTH
+    ordered directions, containment = |A∩B|/|A| rounded like Spark's
+    round(double, 6), kept at >= threshold; a side with empty codes
+    emits nothing (containment undefined).  `mapside`: the broadcast
+    from build_containment_mapside_bvar, or None for the join path (the
+    rounding exactness argument is `_spark_round6`'s rational-gap one;
+    denominators here are single-doc shingle counts)."""
+    if mapside is not None:
+        thr = float(threshold)
+
+        def score(a, b, ia, ib, value):
+            _sids, offs, flat = value
+            na, nb = _row_lens(offs, ia), _row_lens(offs, ib)
+            inter = _intersect_counts(offs, flat, ia, ib)
+            c = _spark_round6(np.concatenate([_ratio(inter, na, 0.0), _ratio(inter, nb, 0.0)]))
+            ok = (c >= thr) & np.concatenate([na > 0, nb > 0])
+            return np.concatenate([a, b])[ok], np.concatenate([b, a])[ok], c[ok]
+
+        return map_pairs(
+            pairs, mapside, "ra bigint, rb bigint, containment double", score
+        )
+
+    ca = features.select(F.col(id_col).alias("a"), F.col(shingle_col).alias("_ca"))
+    cb = features.select(F.col(id_col).alias("b"), F.col(shingle_col).alias("_cb"))
+    joined = (
+        pairs.join(ca, "a")
+        .join(cb, "b")
+        .select(
+            "a", "b", "_ca", "_cb",
+            F.size(F.array_intersect("_ca", "_cb")).cast("double").alias("_inter"),
+        )
+    )
+    fwd = joined.where(F.size("_ca") > 0).select(
+        F.col("a").alias("ra"), F.col("b").alias("rb"),
+        F.round(F.col("_inter") / F.size("_ca").cast("double"), 6).alias("containment"),
+    )
+    bwd = joined.where(F.size("_cb") > 0).select(
+        F.col("b").alias("ra"), F.col("a").alias("rb"),
+        F.round(F.col("_inter") / F.size("_cb").cast("double"), 6).alias("containment"),
+    )
+    return fwd.unionByName(bwd).where(F.col("containment") >= threshold)
+
+
+def verify_winnow(
+    pairs: DataFrame,
+    features: DataFrame,
+    id_col: str,
+    fps_col: str,
+    min_shared: int,
+    mapside=None,
+) -> DataFrame:
+    """pairs(a,b) x features(id, fingerprints) -> (a, b, n_shared) with
+    n_shared = |fps_a ∩ fps_b| >= min_shared — an integer count, no
+    rounding concerns.  `mapside`: the broadcast from
+    build_winnow_mapside_bvar, or None for the join path."""
+    ms = int(min_shared)
+    if mapside is not None:
+
+        def score(a, b, ia, ib, value):
+            _sids, offs, flat = value
+            inter = _intersect_counts(offs, flat, ia, ib)
+            ok = inter >= ms
+            return a[ok], b[ok], inter[ok]
+
+        return map_pairs(pairs, mapside, "a bigint, b bigint, n_shared bigint", score)
+
+    fa = features.select(F.col(id_col).alias("a"), F.col(fps_col).alias("_fa"))
+    fb = features.select(F.col(id_col).alias("b"), F.col(fps_col).alias("_fb"))
+    return (
+        pairs.join(fa, "a")
+        .join(fb, "b")
+        .select(
+            "a",
+            "b",
+            F.size(F.array_intersect("_fa", "_fb")).cast("long").alias("n_shared"),
+        )
+        .where(F.col("n_shared") >= F.lit(ms))
     )
 
 
