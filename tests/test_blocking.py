@@ -7,22 +7,34 @@ from pyspark.sql import functions as F
 from who_owns_mass_processing_spark.operators.blocking import candidate_pairs
 
 
-def _bands_df(spark, n_hot=30, n_cold=6):
-    rows = [("hot", 0, 7777) for _ in range(n_hot)]
-    rows = [(f"h{i}", 0, 7777) for i in range(n_hot)]
+def _bands_df(spark, n_hot=30, n_cold=6, hot_ids=None):
+    hot_ids = hot_ids or [f"h{i}" for i in range(n_hot)]
+    rows = [(i, 0, 7777) for i in hot_ids]
     rows += [(f"c{i}", 1, 1000 + i // 2) for i in range(n_cold)]  # buckets of 2
     return spark.createDataFrame(
         pd.DataFrame(rows, columns=["id", "band_id", "band_hash"])
     )
 
 
-def test_salting_preserves_pair_set(spark):
-    df = _bands_df(spark)
+# one hot bucket whose ids mix case, prefixes and non-ASCII: the salted
+# cross-cell path must order each pair as Spark orders strings (UTF-8
+# bytes), so the same a < b pairs come out with and without salting
+_MIXED_IDS = [
+    "Z", "a", "aa", "z", "é", "Ω", "A", "Ab", "ab", "b", "É", "ω",
+    "zz", "ä", "日本", "Zé", "e", "eé", "é1", "~", "ÿ", "aé",
+]
+
+
+@pytest.mark.parametrize("hot_ids", [None, _MIXED_IDS], ids=["ascii", "mixed_utf8"])
+def test_salting_preserves_pair_set(spark, hot_ids):
+    df = _bands_df(spark, hot_ids=hot_ids)
     pairs_unsalted, _ = candidate_pairs(df, "id", cap=1000, hard_cap=10**6)
     pairs_salted, metrics = candidate_pairs(df, "id", cap=5, hard_cap=10**6)
     a = set(map(tuple, pairs_unsalted.toPandas().values))
     b = set(map(tuple, pairs_salted.toPandas().values))
     assert a == b
+    for pairs in (pairs_unsalted, pairs_salted):
+        assert pairs.where(F.col("a") >= F.col("b")).count() == 0
     m = {r.bucket_class: r for r in metrics.collect()}
     assert "salted" in m and m["salted"].buckets == 1
 
@@ -207,11 +219,11 @@ def test_mapside_verify_drops_absent_ids(spark, tier):
 
 
 def test_hamming_value_emitted_and_salting_invariant(spark):
-    """r6 wave-3 gate: hamming_pairs emits the fused popcount distance
-    with every pair (no feature re-join), and the emitted (a, b, hamming)
-    set is identical across the unsalted, salted, and (est-driven)
-    interpreted/vectorized generator paths — cross-band duplicates must
-    collapse to the single deterministic value."""
+    """hamming_pairs emits the fused popcount distance with every pair
+    (no feature re-join), and the emitted (a, b, hamming) set is
+    identical unsalted and salted, both produced by the one Arrow pair
+    generator — cross-band duplicates must collapse to the single
+    deterministic value."""
     import numpy as np
 
     from who_owns_mass_processing_spark.operators.blocking import hamming_pairs
@@ -236,6 +248,8 @@ def test_hamming_value_emitted_and_salting_invariant(spark):
         pairs, metrics = hamming_pairs(df, "id", "h", radius=2, cap=cap, hard_cap=10**6)
         got = sorted(map(tuple, pairs.toPandas().values))
         assert len(got) >= 3
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "Generate" not in plan
         # cross-band duplicates collapse to one row per pair
         assert len({(a, b) for a, b, _ in got}) == len(got)
         assert all(hm <= 2 for _, _, hm in got)

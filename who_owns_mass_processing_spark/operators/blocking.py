@@ -27,15 +27,18 @@ Physical strategy (the part that must survive 100 TB):
     tagged band table across four consumers and never unpersisted it;
     repeated calls accumulated cache and the storage-vs-execution memory
     contention was a measured drag at 32 cores.
-  * Within-cell pairs via a nested SQL lambda (whole-stage-codegen'd,
-    JVM-side), NOT a self-join: a cell of n rows becomes one array row
-    and emits its C(n,2) pairs directly.  An optional `pair_predicate`
-    runs INSIDE the lambda (e.g. popcount-Hamming <= r for pHash bands):
-    failing pairs are never materialized (measured: 17.5M candidates ->
-    38k emitted pairs on the 280k-image bench).
-  * Cross-cell pairs of split buckets via a cell-level self-join
-    (salt_l < salt_r) + a two-array lambda — no row-level join, each
-    cell-pair task does <= cap^2 bounded work.
+  * Every pair comes out of ONE vectorized Arrow generator
+    (`_cell_pairs`, mapInArrow), NOT a self-join: a cell of n rows is
+    one array row and emits its C(n,2) pairs as numpy index arithmetic
+    plus one Arrow `take` per side.  An optional numpy `predicate`
+    filters the index arrays before any id is taken (e.g.
+    popcount-Hamming <= r for pHash bands): failing pairs are never
+    materialized (measured: 17.5M candidates -> 38k emitted pairs on
+    the 280k-image bench).
+  * Cross-cell pairs of split buckets: a cell-level self-join
+    (salt_l < salt_r) feeds the same generator, which emits the full
+    left x right product — no row-level join, each cell-pair task does
+    <= cap^2 bounded work.
   * Buckets above `hard_cap` are stop bands: dropped and *counted*,
     mirroring the reference's blank-name NULLing.
   * Cross-band duplicate candidates collapse via groupBy(a, b) —
@@ -45,8 +48,9 @@ Physical strategy (the part that must survive 100 TB):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 def bucket_sizes(bands_df: DataFrame) -> DataFrame:
@@ -134,66 +138,6 @@ def decode_pair_ids(
     )
 
 
-def _pairs_from_items(items: Column, pair_predicate=None, pair_value=None) -> Column:
-    """C(n,2) pairs of an array<struct<id, payload?>> via nested lambdas
-    (codegen'd).  items MUST be sorted by id (sort_array) so a < b holds
-    positionally.
-
-    Index-based inner loop (element_at on the materialized array is O(1))
-    — the previous tail-`slice` per element copied O(n^2) structs per
-    cell before the predicate ran, which at ~19-row average buckets x
-    1.5M buckets on the 1.4M-image bench was the dominant allocation.
-
-    pair_value(x, y), when given, rides along as field `v` (e.g. the
-    Hamming distance the fused predicate already computed) so consumers
-    need no feature re-join to recover it."""
-    def inner(x, i):
-        js = F.sequence(i + F.lit(2), F.size(items))
-        if pair_predicate is not None:
-            js = F.filter(js, lambda j: pair_predicate(x, F.element_at(items, j)))
-
-        def emit(j):
-            y = F.element_at(items, j)
-            fields = [x["id"].alias("a"), y["id"].alias("b")]
-            if pair_value is not None:
-                fields.append(pair_value(x, y).alias("v"))
-            return F.struct(*fields)
-
-        return F.transform(js, emit)
-
-    return F.flatten(
-        F.transform(
-            F.filter(items, lambda x, i: i < F.size(items) - 1),
-            lambda x, i: inner(x, i),
-        )
-    )
-
-
-def _cross_pairs_from_cells(
-    items_l: Column, items_r: Column, pair_predicate=None, pair_value=None
-) -> Column:
-    """All left x right pairs of two disjoint cell arrays, predicate fused,
-    (a, b) normalized to a < b; optional symmetric pair_value as field
-    `v` (callers only pass order-invariant values, e.g. Hamming)."""
-    def inner(x):
-        candidates = items_r
-        if pair_predicate is not None:
-            candidates = F.filter(candidates, lambda y: pair_predicate(x, y))
-
-        def emit(y):
-            fields = [
-                F.least(x["id"], y["id"]).alias("a"),
-                F.greatest(x["id"], y["id"]).alias("b"),
-            ]
-            if pair_value is not None:
-                fields.append(pair_value(x, y).alias("v"))
-            return F.struct(*fields)
-
-        return F.transform(candidates, emit)
-
-    return F.flatten(F.transform(items_l, inner))
-
-
 def popcount64_np(x: np.ndarray) -> np.ndarray:
     """Vectorized 64-bit popcount (SWAR) — numpy 1.x has no
     bitwise_count; the numpy twin of Spark's bit_count."""
@@ -208,6 +152,14 @@ def popcount64_np(x: np.ndarray) -> np.ndarray:
     return ((x * h01) >> np.uint64(56)).astype(np.int64)
 
 
+def _cell_ranks(P: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(cell, r) for every pair of a batch of cells holding P[c] pairs
+    each: the owning cell and the pair's rank within it."""
+    cell = np.repeat(np.arange(len(P), dtype=np.int64), P)
+    r = np.arange(int(P.sum()), dtype=np.int64) - np.repeat(np.cumsum(P) - P, P)
+    return cell, r
+
+
 def _triu_pairs_np(sizes: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """All (cell, i, j) index triples with i < j for a batch of cells of
     the given sizes — fully vectorized (no per-cell loop): the pair rank
@@ -216,13 +168,7 @@ def _triu_pairs_np(sizes: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarra
     integer fix-up step (float64 is exact far beyond the hard-cap cell
     sizes; the fix-up absorbs the boundary rounding)."""
     sizes = sizes.astype(np.int64, copy=False)
-    P = (sizes * (sizes - 1)) // 2
-    total = int(P.sum())
-    if total == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e, e
-    cell = np.repeat(np.arange(len(sizes), dtype=np.int64), P)
-    r = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(P) - P, P)
+    cell, r = _cell_ranks((sizes * (sizes - 1)) // 2)
     s = sizes[cell]
     t = (2 * s - 1).astype(np.float64)
     i = np.floor((t - np.sqrt(t * t - 8.0 * r)) / 2.0).astype(np.int64)
@@ -237,71 +183,83 @@ def _triu_pairs_np(sizes: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarra
     return cell, i, j
 
 
-_VEC_ID_TYPES = {"bigint", "int", "string"}
+def _cross_pairs_np(nl: np.ndarray, nr: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """All (cell, i, j) index triples of the nl[c] x nr[c] product of
+    each cell pair c, row-major — the cross-cell twin of
+    `_triu_pairs_np`."""
+    nl = nl.astype(np.int64, copy=False)
+    nr = nr.astype(np.int64, copy=False)
+    cell, r = _cell_ranks(nl * nr)
+    w = nr[cell]
+    return cell, r // w, r % w
 
 
-def _within_pairs_vectorized(
-    cells: DataFrame, id_type: str, np_predicate, np_value=None, value_type: str = "int"
-):
-    """Within-cell C(n,2) pair generation as a vectorized Arrow pass —
-    the numpy twin of `_pairs_from_items` (guide §4.2).  The interpreted
-    transform/filter/flatten lambda walked every emitted struct through
-    the expression interpreter; at bench scale that generation was the
-    single largest slice of every LSH tier (measured 5.4 s of the 7.7 s
-    ANN query, ~2.4 s of the MinHash tier).  Here each Arrow batch of
-    cells is three numpy index operations plus one `take` per side;
-    items stay zero-copy (list offsets + flat child arrays), and the
-    optional predicate (e.g. popcount-Hamming) filters index arrays
-    BEFORE any id is materialized.  Output pair batches are budgeted to
-    ~4M rows so one batch of large cells cannot buffer unboundedly."""
+def _cell_pairs(cells: DataFrame, id_type, cross: bool, predicate, value) -> DataFrame:
+    """Every candidate pair of a cell table as ONE vectorized Arrow pass
+    (guide §4.2).  `cells` holds `items` (within-cell: C(n,2) pairs,
+    a < b by the id sort of the array) or `items_l`, `items_r` (two
+    cells of one salted bucket: the full product, normalized to a < b
+    by an Arrow comparison — UTF-8 byte order for strings, as Spark
+    sorts them).  Each batch is numpy index arithmetic plus one `take`
+    per side; items stay zero-copy (list offsets + flat child arrays).
+    The numpy `predicate(payload_a, payload_b) -> bool mask` filters the
+    index arrays BEFORE any id is taken, and `value(payload_a,
+    payload_b)` is computed only for the surviving pairs, as int `v`.
+    Output pair batches are budgeted to ~4M rows so one batch of large
+    cells cannot buffer unboundedly."""
     import pyarrow as pa
+    import pyarrow.compute as pc
+
+    use_payload = predicate is not None or value is not None
 
     def gen(batches):
+        budget = 4_000_000
         for batch in batches:
-            la = batch.column(0)
-            offs = la.offsets.to_numpy().astype(np.int64)
-            vals = la.values
-            ids = vals.field("id")
-            sizes = np.diff(offs)
-            P = sizes * (sizes - 1) // 2
+            left = batch.column(0)
+            right = batch.column(1) if cross else left
+            offs_l = left.offsets.to_numpy().astype(np.int64)
+            offs_r = right.offsets.to_numpy().astype(np.int64)
+            n_l, n_r = np.diff(offs_l), np.diff(offs_r)
+            P = n_l * n_r if cross else n_l * (n_l - 1) // 2
             if int(P.sum()) == 0:
                 continue
-            pay = (
-                vals.field("payload").to_numpy(zero_copy_only=False)
-                if np_predicate is not None
-                else None
-            )
+            ids_l, ids_r = left.values.field("id"), right.values.field("id")
+            if use_payload:
+                pay_l = left.values.field("payload").to_numpy(zero_copy_only=False)
+                pay_r = right.values.field("payload").to_numpy(zero_copy_only=False)
             cum = np.cumsum(P)
             start = 0
-            budget = 4_000_000
-            while start < len(sizes):
+            while start < len(P):
                 base_cum = int(cum[start - 1]) if start else 0
                 end = int(np.searchsorted(cum, base_cum + budget, side="left")) + 1
-                end = min(max(end, start + 1), len(sizes))
-                cell, i, j = _triu_pairs_np(sizes[start:end])
-                if len(cell) == 0:
-                    start = end
+                end = min(max(end, start + 1), len(P))
+                if cross:
+                    cell, i, j = _cross_pairs_np(n_l[start:end], n_r[start:end])
+                else:
+                    cell, i, j = _triu_pairs_np(n_l[start:end])
+                I = offs_l[start:end][cell] + i
+                J = offs_r[start:end][cell] + j
+                start = end
+                if predicate is not None:
+                    keep = predicate(pay_l[I], pay_r[J])
+                    I, J = I[keep], J[keep]
+                if len(I) == 0:
                     continue
-                off = offs[start:end][cell]
-                I = off + i
-                J = off + j
-                if np_predicate is not None:
-                    mask = np_predicate(pay[I], pay[J])
-                    I, J = I[mask], J[mask]
-                arrays = [ids.take(pa.array(I)), ids.take(pa.array(J))]
-                names = ["a", "b"]
-                if np_value is not None:
-                    # value computed only for SURVIVING pairs (the
-                    # predicate already filtered I/J above)
-                    arrays.append(pa.array(np_value(pay[I], pay[J])))
+                a, b = ids_l.take(pa.array(I)), ids_r.take(pa.array(J))
+                if cross:
+                    swap = pc.greater(a, b)
+                    a, b = pc.if_else(swap, b, a), pc.if_else(swap, a, b)
+                arrays, names = [a, b], ["a", "b"]
+                if value is not None:
+                    arrays.append(pa.array(value(pay_l[I], pay_r[J]), type=pa.int32()))
                     names.append("v")
                 yield pa.RecordBatch.from_arrays(arrays, names)
-                start = end
 
-    schema = f"a {id_type}, b {id_type}"
-    if np_value is not None:
-        schema += f", v {value_type}"
-    return cells.select("items").mapInArrow(gen, schema)
+    fields = [StructField("a", id_type), StructField("b", id_type)]
+    if value is not None:
+        fields.append(StructField("v", IntegerType()))
+    cols = ["items_l", "items_r"] if cross else ["items"]
+    return cells.select(*cols).mapInArrow(gen, StructType(fields))
 
 
 def candidate_pairs(
@@ -310,37 +268,33 @@ def candidate_pairs(
     cap: int = 500,
     hard_cap: int = 100000,
     payload_col: str | None = None,
-    pair_predicate=None,
-    pair_predicate_np=None,
-    pair_value=None,
-    pair_value_np=None,
+    predicate=None,
+    value=None,
     value_col: str | None = None,
-    value_type: str = "int",
 ) -> tuple[DataFrame, DataFrame]:
     """(band_id, band_hash, id [, payload]) -> distinct candidate pairs
     (a < b).
 
-    payload_col/pair_predicate: verification fused into generation —
-    pair_predicate(x, y) receives the two struct elements (fields `id`
-    and `payload`) and pairs failing it are never emitted.
-    pair_predicate_np, when given alongside, is the numpy twin
-    (payload_a, payload_b arrays -> bool mask) that lets within-cell
-    generation take the vectorized Arrow path; the Column form still
-    serves the cross-cell join path.
+    payload_col/predicate: verification fused into generation —
+    predicate(payload_a, payload_b) maps two numpy payload arrays to a
+    bool mask, and pairs failing it are never emitted.
 
-    pair_value/pair_value_np (+ value_col): an ORDER-INVARIANT,
-    payload-deterministic per-pair value (e.g. the fused Hamming
-    distance) emitted alongside (a, b) — consumers then need no feature
-    re-join to recover what the predicate already computed.  Cross-band
-    duplicates carry identical values (pure function of the two
-    payloads), so the dedup aggregation takes min(value) == the value.
+    value (+ value_col): an ORDER-INVARIANT, payload-deterministic
+    per-pair int value (numpy payload arrays -> int array, e.g. the
+    fused Hamming distance) emitted alongside (a, b) — consumers then
+    need no feature re-join to recover what the predicate already
+    computed.  Cross-band duplicates carry identical values (pure
+    function of the two payloads), so the dedup aggregation takes
+    min(value) == the value.
 
     Returns (pairs(a, b[, value_col]), skew_metrics) — skew_metrics has
     one row per bucket class (kept / salted / dropped_stop_band) with
     bucket/row counts (feeds the metrics table).
     """
-    if value_col is not None and (pair_value is None or payload_col is None):
-        raise ValueError("value_col requires pair_value and payload_col")
+    if value_col is not None and (value is None or payload_col is None):
+        raise ValueError("value_col requires value and payload_col")
+    if value_col is None:
+        value = None
     cap = min(cap, hard_cap)  # stop threshold may undercut the salt cap
     payload = F.col(payload_col) if payload_col else F.lit(0)
     item = F.struct(F.col(id_col).alias("id"), payload.alias("payload"))
@@ -359,26 +313,15 @@ def candidate_pairs(
     sizes = bucket_sizes(bands_df)
     census = sizes.where(F.col("bucket_n") >= 2).localCheckpoint(eager=True)
     # ONE tiny job over the CHECKPOINTED census decides the plan shape:
-    # (a) when no live bucket exceeds the salt cap there are no split
+    # when no live bucket exceeds the salt cap there are no split
     # buckets, the cross-cell join is provably empty, and the cell table
     # has exactly ONE consumer — its eager localCheckpoint (a full
     # materialization barrier per tier, ~1 s at bench scale) is skipped
     # and within-pairs stream straight out of the cell aggregation
-    # (salted corpora keep the checkpointed three-consumer shape);
-    # (b) the Σ C(bucket_n, 2) pre-predicate pair estimate picks the
-    # within-pair generator: the vectorized Arrow path amortizes over
-    # volume, but on tiny candidate sets (e.g. the 4-band simhash tier)
-    # its stage spin-up costs more than the interpreted lambda it
-    # replaces — measured +0.5 s on a 2 s query.
-    live = F.col("bucket_n") <= hard_cap
-    stats = census.agg(
-        F.max(F.when(live, F.col("bucket_n"))).alias("max_live"),
-        F.sum(
-            F.when(live, F.col("bucket_n") * (F.col("bucket_n") - 1) / 2)
-        ).alias("est_pairs"),
-    ).collect()[0]
-    has_salted = (stats["max_live"] or 0) > cap
-    est_pairs = float(stats["est_pairs"] or 0.0)
+    # (salted corpora keep the checkpointed three-consumer shape).
+    has_salted = not census.where(
+        (F.col("bucket_n") > cap) & (F.col("bucket_n") <= hard_cap)
+    ).isEmpty()
 
     tagged = bands_df.join(census, ["band_id", "band_hash"]).where(
         F.col("bucket_n") <= hard_cap
@@ -399,65 +342,24 @@ def candidate_pairs(
     if has_salted:
         cells = cells.localCheckpoint(eager=True)
 
-    emit_value = value_col is not None
-
-    def _proj(p):
-        cols = [F.col("p.a").alias("a"), F.col("p.b").alias("b")]
-        if emit_value:
-            cols.append(F.col("p.v").alias(value_col))
-        return cols
-
-    id_type = bands_df.schema[id_col].dataType.simpleString()
-    if (
-        est_pairs >= 50_000
-        and id_type in _VEC_ID_TYPES
-        and (pair_predicate is None or pair_predicate_np is not None)
-        and (not emit_value or pair_value_np is not None)
-    ):
-        within = _within_pairs_vectorized(
-            cells, id_type, pair_predicate_np,
-            np_value=pair_value_np if emit_value else None, value_type=value_type,
+    id_type = bands_df.schema[id_col].dataType
+    pairs = _cell_pairs(cells, id_type, False, predicate, value)
+    if has_salted:
+        multi = cells.where(F.col("m") > 1)
+        cl = multi.select(
+            "band_id", "band_hash", F.col("salt").alias("salt_l"), F.col("items").alias("items_l")
         )
-        if emit_value:
-            within = within.withColumnRenamed("v", value_col)
-    else:  # tiny volume, unsupported id type, or Column-only predicate
-        within = cells.select(
-            F.explode(
-                _pairs_from_items(
-                    F.col("items"), pair_predicate,
-                    pair_value if emit_value else None,
-                )
-            ).alias("p")
-        ).select(*_proj("p"))
-
-    multi = cells.where(F.col("m") > 1)
-    cl = multi.select(
-        "band_id", "band_hash", F.col("salt").alias("salt_l"), F.col("items").alias("items_l")
-    )
-    cr = multi.select(
-        "band_id", "band_hash", F.col("salt").alias("salt_r"), F.col("items").alias("items_r")
-    )
-    cross = (
-        cl.join(cr, ["band_id", "band_hash"])
-        .where(F.col("salt_l") < F.col("salt_r"))
-        .select(
-            F.explode(
-                _cross_pairs_from_cells(
-                    F.col("items_l"), F.col("items_r"), pair_predicate,
-                    pair_value if emit_value else None,
-                )
-            ).alias("p")
+        cr = multi.select(
+            "band_id", "band_hash", F.col("salt").alias("salt_r"), F.col("items").alias("items_r")
         )
-        .select(*_proj("p"))
-    )
-
-    unioned = within.unionByName(cross) if has_salted else within
-    if emit_value:
+        cell_pairs = cl.join(cr, ["band_id", "band_hash"]).where(F.col("salt_l") < F.col("salt_r"))
+        pairs = pairs.unionByName(_cell_pairs(cell_pairs, id_type, True, predicate, value))
+    if value is not None:
         # duplicates of a pair carry the identical value (pure function
         # of the two payloads): min == the value, partial-agg'd map-side
-        pairs = unioned.groupBy("a", "b").agg(F.min(value_col).alias(value_col))
+        pairs = pairs.groupBy("a", "b").agg(F.min("v").alias(value_col))
     else:
-        pairs = unioned.groupBy("a", "b").agg(F.lit(1).alias("_one")).drop("_one")
+        pairs = pairs.groupBy("a", "b").agg(F.lit(1).alias("_one")).drop("_one")
 
     # metrics reuse the CHECKPOINTED dup census (no second banding
     # aggregation — round 3 recomputed the full census from bands_df
@@ -516,27 +418,20 @@ def hamming_pairs(
     hard_cap: int = 100000,
 ) -> tuple[DataFrame, DataFrame]:
     """Hamming-fused blocking: candidate generation with the popcount
-    check applied inside the lambda, and the distance EMITTED alongside
-    each surviving pair — consumers that previously re-joined the hash
-    table twice to recompute bit_count(xor) (verify_hamming) read the
-    `hamming` column instead (guide §2.4: the value was already computed
-    inside the fused predicate; two broadcast joins per tier dropped).
+    check applied inside the pair generator, and the distance EMITTED
+    alongside each surviving pair — consumers that previously re-joined
+    the hash table twice to recompute bit_count(xor) (verify_hamming)
+    read the `hamming` column instead (guide §2.4: the value was already
+    computed inside the fused predicate; two broadcast joins per tier
+    dropped).
     Returns (pairs(a, b, hamming), metrics)."""
-    def pred(x, y):
-        return F.bit_count(x["payload"].bitwiseXOR(y["payload"])) <= F.lit(radius)
-
-    def val(x, y):
-        return F.bit_count(x["payload"].bitwiseXOR(y["payload"])).cast("int")
-
-    def pred_np(pa_: np.ndarray, pb_: np.ndarray) -> np.ndarray:
+    def within_radius(pa_: np.ndarray, pb_: np.ndarray) -> np.ndarray:
         return popcount64_np(pa_ ^ pb_) <= radius
 
-    def val_np(pa_: np.ndarray, pb_: np.ndarray) -> np.ndarray:
-        return popcount64_np(pa_ ^ pb_).astype(np.int32)
+    def distance(pa_: np.ndarray, pb_: np.ndarray) -> np.ndarray:
+        return popcount64_np(pa_ ^ pb_)
 
-    pairs, metrics = candidate_pairs(
-        bands_df, id_col, cap=cap, hard_cap=hard_cap,
-        payload_col=hash_col, pair_predicate=pred, pair_predicate_np=pred_np,
-        pair_value=val, pair_value_np=val_np, value_col="hamming",
+    return candidate_pairs(
+        bands_df, id_col, cap=cap, hard_cap=hard_cap, payload_col=hash_col,
+        predicate=within_radius, value=distance, value_col="hamming",
     )
-    return pairs, metrics

@@ -161,7 +161,7 @@ def get_spark(
     )
     # arbitrary conf pass-through for benches/probes (';'-separated k=v
     # pairs) — e.g. spark.shuffle.compress=false to measure uncompressed
-    # shuffle row width (tools/profile_block_bytes.py url_nocomp mode)
+    # shuffle row width (the `url_nocomp` record in SCALE.md)
     for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
         if kv.strip():
             k, _, v = kv.partition("=")
