@@ -74,3 +74,17 @@ def test_long_chain_converges_via_pointer_jump(spark):
         comps = cc.select("component").distinct().collect()
     assert len(comps) == 1
     assert comps[0][0] == 0
+
+
+def test_checkpointed_bytes_reads_storage_info(spark):
+    """The zero-job size lookup must keep working on the supported Spark:
+    if an API drift made it return None, connected_components would
+    silently stop coalescing its edge list."""
+    from who_owns_mass_processing_spark.operators.connected_components import (
+        _checkpointed_bytes,
+    )
+
+    df = spark.range(1000).selectExpr("id AS a", "id + 1 AS b")
+    nbytes = _checkpointed_bytes(df.localCheckpoint(eager=True))
+    assert isinstance(nbytes, int) and nbytes > 0
+    assert _checkpointed_bytes(df) is None

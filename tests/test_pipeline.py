@@ -111,6 +111,40 @@ def test_resume_after_stage_kill(spark, pipeline_out):
     assert a1.equals(a2)
 
 
+def test_refresh_cascade_follows_stage_inputs(spark, pipeline_out):
+    """The staleness cascade is derived from each stage's parameters:
+    recomputing `signatures` re-runs exactly the stages that read it,
+    directly or transitively, plus the caption tier's skew side output,
+    and leaves the image tier's tables alone."""
+    import json
+    import os
+
+    _, workdir, synth = pipeline_out
+    cfg = DedupeConfig()
+
+    def assignments():
+        a = pd.read_parquet(os.path.join(workdir, "assignments"))
+        return a.sort_values("image_id").reset_index(drop=True)
+
+    def snapshot_ids():
+        with open(os.path.join(workdir, "_MANIFEST.json")) as f:
+            return {s: e["snapshot_id"] for s, e in json.load(f)["stages"].items()}
+
+    before, a1 = snapshot_ids(), assignments()
+    StageCatalog(spark, workdir, cfg.fingerprint()).invalidate("signatures")
+    run_pipeline(spark, spark.read.parquet(synth["images"]), workdir, cfg)
+    after = snapshot_ids()
+    changed = {s for s in after if after[s] != before.get(s)}
+    assert changed == {
+        "signatures", "caption_pairs", "caption_band_skew", "edges",
+        "assignments", "clusters", "cluster_diagnostics", "metrics",
+    }
+    for kept in ("ingest", "image_pairs", "image_exact_edges", "image_band_skew",
+                 "partition_metrics_v2"):
+        assert after[kept] == before[kept]
+    assert a1.equals(assignments())
+
+
 def test_full_resume_runs_zero_jobs(spark, pipeline_out):
     """A fully-resumed run must not launch a single Spark job: row
     counts come from the stage manifest, tables are opened lazily (the
@@ -281,15 +315,50 @@ def test_phash_input_column_matches_recomputed(spark, synth_small):
     assert bad == 0
 
 
-def test_second_round_networks_agree_with_tier_union(spark, synth_small, tmp_path_factory):
+def test_second_round_networks_agree_with_tier_union(
+    spark, synth_small, tmp_path_factory, monkeypatch
+):
     """C7: CC over (caption_cluster, image_cluster) group ids must induce
     the same partition of images as CC over the tier-union edge list
-    (reference dedupe_network over group ids, R/deduplicaters.R:860-930)."""
+    (reference dedupe_network over group ids, R/deduplicaters.R:860-930).
+    Each tier's clusters match the union-find oracle over that tier's
+    edges, and every CC call honours the config's iteration bounds."""
+    from who_owns_mass_processing_spark.operators import network
+    from who_owns_mass_processing_spark.operators.connected_components import (
+        components_py,
+        connected_components,
+    )
+    from who_owns_mass_processing_spark.pipeline import run
+
+    calls = []
+
+    def recording_cc(*args, **kwargs):
+        calls.append(kwargs)
+        return connected_components(*args, **kwargs)
+
+    monkeypatch.setattr(run, "connected_components", recording_cc)
+    monkeypatch.setattr(network, "connected_components", recording_cc)
+    cfg = DedupeConfig(cc_checkpoint_every=4)
     workdir = str(tmp_path_factory.mktemp("stages_c7"))
     images = spark.read.parquet(synth_small["images"])
-    out = run_pipeline(spark, images, workdir, DedupeConfig(), second_round=True)
+    out = run_pipeline(spark, images, workdir, cfg, second_round=True)
+    assert len(calls) == 3  # assignments, tier_clusters, networks
+    for kw in calls:
+        assert kw.get("max_iterations") == cfg.cc_max_iterations
+        assert kw.get("checkpoint_every") == cfg.cc_checkpoint_every
+
+    rows = out["networks"].toPandas().set_index("image_id")
+    ids = list(rows.index)
+
+    def oracle(*tables):
+        pairs = [(r.a, r.b) for t in tables for r in out[t].select("a", "b").collect()]
+        return components_py(pairs, ids)
+
+    assert rows.caption_cluster.to_dict() == oracle("caption_pairs")
+    assert rows.image_cluster.to_dict() == oracle("image_pairs", "image_exact_edges")
+
     assigns = out["assignments"].toPandas().set_index("image_id").cluster_id
-    nets = out["networks"].toPandas().set_index("image_id").network_id
+    nets = rows.network_id
 
     def parts(s):
         inv = {}

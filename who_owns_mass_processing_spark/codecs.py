@@ -150,9 +150,6 @@ DECODERS = {
     "qjp": qjp_decode,
 }
 
-LOSSY_FORMATS = {"jpeg", "qjp"}
-
-
 def decode_image(data: bytes, fmt: str | None = None) -> np.ndarray:
     """Decode by sniffing magic bytes (fmt is advisory)."""
     if data[:8] == PNG_SIG:

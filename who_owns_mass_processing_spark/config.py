@@ -82,6 +82,3 @@ class DedupeConfig:
         if self.num_perm % self.bands:
             raise ValueError(f"num_perm={self.num_perm} not divisible by bands={self.bands}")
         return self.num_perm // self.bands
-
-
-DEFAULT_CONFIG = DedupeConfig()

@@ -39,21 +39,6 @@ IMAGE_META_SCHEMA = StructType(
 )
 
 
-def phash_udf():
-    """pandas UDF: (bytes) -> long pHash computed from *decoded pixels*
-    (recomputed, not trusted from the input column — the input `phash` is
-    validated against this in tests)."""
-
-    @F.pandas_udf(LongType())
-    def _udf(blobs: pd.Series) -> pd.Series:
-        out = np.empty(len(blobs), dtype=np.int64)
-        for i, blob in enumerate(blobs):
-            out[i] = codecs.phash64(codecs.decode_image(bytes(blob)))
-        return pd.Series(out)
-
-    return _udf
-
-
 def image_meta_udf():
     """pandas UDF: bytes -> struct(phash, w, h) — one decode, all metadata."""
 
@@ -129,14 +114,6 @@ def decode_stats_map(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 "host": [socket.gethostname()],
             }
         )
-
-
-def hamming_col(a, b):
-    """Builtin popcount Hamming distance between two int64 hash columns
-    (JVM-side bit_count; Spark >= 3.5)."""
-    return F.bit_count(F.col(a).bitwiseXOR(F.col(b))) if isinstance(a, str) else F.bit_count(
-        a.bitwiseXOR(b)
-    )
 
 
 def phash_bands(df, phash_col: str, id_col: str, n_bands: int = 8):

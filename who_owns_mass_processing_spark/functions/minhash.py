@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
@@ -172,9 +171,3 @@ def band_explode(
         "band_id",
         F.xxhash64(F.col("band_id"), F.col("band_vals")).alias("band_hash"),
     )
-
-
-def estimated_jaccard(sig_a: Column, sig_b: Column) -> Column:
-    """Fraction of agreeing minhash positions (builtin zip_with)."""
-    agree = F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda v: v))
-    return agree.cast("double") / F.size(sig_a).cast("double")

@@ -61,29 +61,6 @@ def cosine_pairs(df: DataFrame, id_col: str, vec_col: str, threshold: float) -> 
     )
 
 
-def hyperplane_planes(dim: int, n_bits: int, seed: int = 42) -> list[list[float]]:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_bits, dim)).tolist()
-
-
-def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-pattern bucket id: bit_i = <vec, plane_i> >= 0 (builtins only;
-    the plane matrix rides along as literals — broadcast-sized)."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(p)) for p in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-    return bucket
-
-
 def hyperplane_tables(dim: int, n_bits: int, n_tables: int, seed: int = 42) -> np.ndarray:
     """(n_tables, n_bits, dim) independent hyperplane sets."""
     rng = np.random.default_rng(seed)

@@ -21,12 +21,21 @@ stage is deterministic (seeded hashes, stable orderings).
 
 from __future__ import annotations
 
+import functools
+import inspect
 import json
 import os
 import threading
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Driver threads that run ready stages: the widest level of the images
+# pipeline's DAG (the two tiers, the exact-image edges and the partition
+# metrics scan), so independent stages' jobs overlap and back-fill each
+# other's tails.
+_STAGE_THREADS = 4
 
 
 def _parquet_dir_rows(path: str) -> int:
@@ -53,9 +62,8 @@ class StageCatalog:
         self._manifest_path = os.path.join(root, "_MANIFEST.json")
         self._manifest = self._load_manifest()
         # serializes manifest mutation + the swap section of write():
-        # independent stages may be computed from concurrent driver
-        # threads (pipeline/run.py overlaps the caption and image tiers,
-        # guide §2.6), and snapshot ids must stay strictly monotonic
+        # independent stages are computed concurrently on run()'s pool
+        # of driver threads, and snapshot ids must stay strictly monotonic
         self._lock = threading.RLock()
         # stages (re)computed by THIS process — downstream stages consult
         # this to invalidate themselves when an upstream recomputed (the
@@ -94,7 +102,7 @@ class StageCatalog:
             return self.spark.read.schema(schema).parquet(self._stage_path(stage))
         return self.spark.read.parquet(self._stage_path(stage))
 
-    def write(self, stage: str, df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
+    def write(self, stage: str, df: DataFrame) -> DataFrame:
         """Atomic stage overwrite: compute into a temp dir, mark the stage
         incomplete, then swap directories and re-add the manifest entry.
         A kill at ANY point leaves either (old data + old manifest entry)
@@ -108,10 +116,7 @@ class StageCatalog:
         path = self._stage_path(stage)
         tmp = f"{path}.tmp-{os.getpid()}-{threading.get_ident()}"
         shutil.rmtree(tmp, ignore_errors=True)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
+        df.write.mode("overwrite").parquet(tmp)
         # rows from the just-written footers (driver metadata, no job);
         # schema from the DataFrame we just wrote — the read-back below
         # reuses it, so the footer-inference job disappears too
@@ -168,7 +173,6 @@ class StageCatalog:
         self,
         stage: str,
         compute: Callable[[], DataFrame],
-        partition_by: list[str] | None = None,
         refresh: bool = False,
         upstream: tuple[str, ...] = (),
     ) -> DataFrame:
@@ -199,7 +203,40 @@ class StageCatalog:
         if not force and self.is_complete(stage):
             return self.read(stage)
         self.computed_this_run.add(stage)
-        return self.write(stage, compute(), partition_by)
+        return self.write(stage, compute())
+
+    def run(
+        self, stages: list[Callable[..., DataFrame]], refresh: bool = False
+    ) -> dict[str, DataFrame]:
+        """Run a declared stage list: each stage is a function named after
+        its table whose parameters name the earlier stages it reads.  The
+        parameters are the stage's `upstream`, so the staleness cascade is
+        exactly what the compute reads.  Stages whose inputs are ready run
+        concurrently on one pool of driver threads; a failed stage's
+        exception surfaces here and its dependants never start."""
+        inputs: dict[str, tuple[str, ...]] = {}
+        for fn in stages:
+            params = tuple(inspect.signature(fn).parameters)
+            unknown = [p for p in params if p not in inputs]
+            if unknown:
+                raise ValueError(f"stage {fn.__name__} reads {unknown}: not an earlier stage")
+            inputs[fn.__name__] = params
+        out: dict[str, DataFrame] = {}
+        todo, running = list(stages), {}
+        with ThreadPoolExecutor(max_workers=_STAGE_THREADS) as pool:
+            while todo or running:
+                for fn in [f for f in todo if all(p in out for p in inputs[f.__name__])]:
+                    todo.remove(fn)
+                    name, params = fn.__name__, inputs[fn.__name__]
+                    compute = functools.partial(fn, *(out[p] for p in params))
+                    future = pool.submit(
+                        self.read_or_compute, name, compute, refresh=refresh, upstream=params
+                    )
+                    running[future] = name
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for future in done:
+                    out[running.pop(future)] = future.result()
+        return out
 
     def invalidate(self, stage: str) -> None:
         self._manifest["stages"].pop(stage, None)

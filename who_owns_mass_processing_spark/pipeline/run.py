@@ -2,7 +2,10 @@
 
 Stage DAG (each stage a checkpointed table — SURVEY.md §3 target
 lifecycle; reference analog: the load -> proc -> dedupe staged run with
-materialization barriers, R/runner.R:1-41):
+materialization barriers, R/runner.R:1-41).  Each stage is a function
+named after its table whose parameters name the stages it reads;
+`StageCatalog.run` schedules the list and derives the refresh cascade
+from those parameters.
 
   ingest          project (image_id, fmt, caption, phash); `bytes` is NOT
                   carried forward (scale rule: payload never shuffles)
@@ -17,6 +20,12 @@ materialization barriers, R/runner.R:1-41):
   assignments     connected components + singleton fallback
   clusters        exemplar = min image_id, modal caption, size
   metrics         band-skew classes + per-stage row counts (lineage)
+
+With `second_round`:
+
+  tier_clusters   (image_id, caption_cluster, image_cluster): each tier's
+                  components, from one CC over prefix-tagged tier edges
+  networks        CC over the (caption_cluster, image_cluster) group ids
 """
 
 from __future__ import annotations
@@ -44,41 +53,20 @@ def run_pipeline(
     cfg = cfg or DedupeConfig()
     cat = StageCatalog(spark, workdir, cfg.fingerprint())
 
-    # `refresh` forces the root stages; every downstream stage declares
-    # its upstream stages so a recompute CASCADES (a cached downstream
-    # table derived from now-stale input must not be reused — the config
-    # fingerprint cannot see input-data changes)
-    def roc(stage, fn, upstream=(), partition_by=None):
-        return cat.read_or_compute(
-            stage, fn, partition_by=partition_by, refresh=refresh, upstream=upstream
-        )
-
     # --- ingest: strip payload immediately; byte fingerprint for the
     # exact-image tier rides along (32 B vs 100 KB payload) -----------------
-    def _ingest() -> DataFrame:
+    def ingest() -> DataFrame:
         return images.select(
             "image_id", "fmt", "caption", "phash",
             F.sha2(F.col("bytes"), 256).alias("byte_fp"),
         )
 
-    ingested = roc("ingest", _ingest)
-
-    # --- signatures ---------------------------------------------------------
-    def _signatures() -> DataFrame:
-        sigs = minhash_signatures(ingested, "image_id", "caption", cfg)
-        return sigs.join(ingested.select("image_id", "phash", "fmt"), "image_id")
-
-    # (submitted below: signatures only feeds the caption tier, so it
-    # runs at the head of the caption THREAD instead of serializing the
-    # whole tier phase behind it — guide §2.6)
-
-    # row count from the stage manifest: a resumed run spends ZERO jobs
-    # re-counting (write() recorded it)
-    n_rows = cat.rows("ingest")
-    stop_cap = cfg.stop_band_threshold(n_rows)
+    def signatures(ingest) -> DataFrame:
+        sigs = minhash_signatures(ingest, "image_id", "caption", cfg)
+        return sigs.join(ingest.select("image_id", "phash", "fmt"), "image_id")
 
     # --- caption tier ---------------------------------------------------------
-    def _caption_pairs(sigs: DataFrame) -> DataFrame:
+    def caption_pairs(ingest, signatures) -> DataFrame:
         from who_owns_mass_processing_spark.operators.dedupe import (
             exact_fingerprint_edges,
             rep_pairs_from_sigs,
@@ -89,20 +77,18 @@ def run_pipeline(
         # fan-out), plus linear star edges for the exact-dup families.
         # No dedup aggregation on the union: rep pairs join two DIFFERENT
         # fingerprints, star edges share one — disjoint and internally
-        # unique (the lsh_near_dup_pairs §2.4 argument).
-        rep_pairs, skew = rep_pairs_from_sigs(sigs, "image_id", cfg, corpus_rows=n_rows)
+        # unique (the lsh_near_dup_pairs §2.4 argument).  The row count
+        # comes from the stage manifest: zero jobs.
+        rep_pairs, skew = rep_pairs_from_sigs(
+            signatures, "image_id", cfg, corpus_rows=cat.rows("ingest")
+        )
         cat.write("caption_band_skew", skew)
-        exact = exact_fingerprint_edges(sigs, "image_id")
+        exact = exact_fingerprint_edges(signatures, "image_id")
         return (
             rep_pairs.select("a", "b", "jaccard")
             .unionByName(exact)
             .withColumn("tier", F.lit("caption"))
         )
-
-    # (submitted below, concurrently with the image tier — guide §2.6:
-    # the caption and image tiers share no inputs beyond the already-
-    # materialized signatures/ingest stages, so their stage jobs overlap
-    # and the image tier's tasks back-fill the caption tier's tail)
 
     # --- image tier -----------------------------------------------------------
     # Byte-identical images (exact web dups, the dominant dup class) are
@@ -111,32 +97,30 @@ def run_pipeline(
     # identity implies pixel identity, so rep-level Hamming/PSNR verdicts
     # are exact for every member (same components, ~0 payload decode for
     # dup families).
-    def _image_exact_edges() -> DataFrame:
-        mins = ingested.groupBy("byte_fp").agg(F.min("image_id").alias("a"))
+    def image_exact_edges(ingest) -> DataFrame:
+        mins = ingest.groupBy("byte_fp").agg(F.min("image_id").alias("a"))
         return (
-            ingested.join(mins, "byte_fp")
+            ingest.join(mins, "byte_fp")
             .where(F.col("image_id") != F.col("a"))
             .select("a", F.col("image_id").alias("b"))
             .withColumn("tier", F.lit("image_exact"))
         )
 
-    # (submitted below, concurrently with the caption tier)
-
-    def _image_pairs() -> DataFrame:
+    def image_pairs(ingest) -> DataFrame:
         from who_owns_mass_processing_spark.functions.images import phash_combo_bands
         from who_owns_mass_processing_spark.operators.blocking import (
             decode_pair_ids,
             with_surrogate_ids,
         )
 
-        byte_reps = ingested.groupBy("byte_fp").agg(F.min("image_id").alias("image_id"))
+        byte_reps = ingest.groupBy("byte_fp").agg(F.min("image_id").alias("image_id"))
         # banding + Hamming verify ride the 8-byte surrogate id (VERDICT
         # r4 #1: band/cell/pair rows carried the string image_id — the
         # block phase's dominant shuffle bytes); the checkpoint inside
         # with_surrogate_ids also stops the semi-join recomputing per
         # consumer (bands, verify, decode)
         reps = with_surrogate_ids(
-            ingested.join(byte_reps, ["image_id", "byte_fp"], "left_semi")
+            ingest.join(byte_reps, ["image_id", "byte_fp"], "left_semi")
             .select("image_id", "phash")
         )
         bands = phash_combo_bands(
@@ -148,7 +132,7 @@ def run_pipeline(
         # otherwise dwarfs the true-pair count)
         cands, skew = hamming_pairs(
             bands, "_sid", "phash", cfg.hamming_radius,
-            cap=cfg.band_bucket_cap, hard_cap=stop_cap,
+            cap=cfg.band_bucket_cap, hard_cap=cfg.stop_band_threshold(cat.rows("ingest")),
         )
         cat.write("image_band_skew", skew)
         # cands carries the fused Hamming distance — no verify_hamming
@@ -164,31 +148,18 @@ def run_pipeline(
         # lossy pairs additionally need the decoded-pixel PSNR gate; the
         # bytes join touches only candidate pairs that already passed Hamming
         psnr_ok = verify_psnr(
-            ham.select("a", "b"),
-            images.select("image_id", "bytes", "fmt"),
-            "image_id",
-            "bytes",
-            "fmt",
-            cfg.psnr_min_db,
+            ham.select("a", "b"), images.select("image_id", "bytes", "fmt"),
+            "image_id", "bytes", "fmt", cfg.psnr_min_db,
         )
         return (
             ham.join(psnr_ok.select("a", "b", "psnr"), ["a", "b"])
             .withColumn("tier", F.lit("image"))
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    # the caption THREAD runs signatures then caption_pairs (signatures
-    # feeds nothing else, so it must not serialize the image tiers
-    # behind it); the payload-scanning partition metrics rollup depends
-    # only on the input, so its scan overlaps the tier phase instead of
-    # running in the tail (guide §2.6 back-fill)
-    def _caption_tier() -> tuple[DataFrame, DataFrame]:
-        s = roc("signatures", _signatures, upstream=("ingest",))
-        cp = roc("caption_pairs", lambda: _caption_pairs(s), ("signatures", "ingest"))
-        return s, cp
-
-    def _partition_metrics() -> DataFrame:
+    # The stage name is VERSIONED: the output schema changed in round 2
+    # (partition_id int -> src_file string); an unversioned name would
+    # silently resume the old-schema checkpoint.
+    def partition_metrics_v2() -> DataFrame:
         """Per-partition input metrics (north_rule: per-partition lineage
         + metrics): rows + payload bytes per input unit — builtins only;
         decode-failure accounting lives in functions.images.
@@ -198,75 +169,43 @@ def run_pipeline(
         (`_metadata.file_path` — durable lineage that survives re-reads);
         for non-file inputs it falls back to the scan partition id."""
         try:
-            keyed = images.select(
-                F.col("_metadata.file_path").alias("src_file"),
-                F.length("bytes").alias("_sz"),
-            )
-            key = "src_file"
+            src = images.select(F.col("_metadata.file_path").alias("src_file"), "bytes")
         except Exception:  # non-file source: no _metadata column
-            keyed = images.select(
-                F.spark_partition_id().cast("string").alias("src_file"),
-                F.length("bytes").alias("_sz"),
+            src = images.select(
+                F.spark_partition_id().cast("string").alias("src_file"), "bytes"
             )
-            key = "src_file"
-        return keyed.groupBy(key).agg(
-            F.count("*").alias("rows"), F.sum("_sz").alias("payload_bytes")
+        return src.groupBy("src_file").agg(
+            F.count("*").alias("rows"), F.sum(F.length("bytes")).alias("payload_bytes")
         )
 
-    def _partition_metrics_tiered() -> DataFrame:
-        # stage name is VERSIONED: the output schema changed in round 2
-        # (partition_id int -> src_file string); an unversioned name
-        # would silently resume the old-schema checkpoint (see the
-        # _partition_metrics docstring below)
-        cat.supersede("partition_metrics")
-        return roc("partition_metrics_v2", _partition_metrics)
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_cap = pool.submit(_caption_tier)
-        f_iee = pool.submit(roc, "image_exact_edges", _image_exact_edges, ("ingest",))
-        f_imp = pool.submit(roc, "image_pairs", _image_pairs, ("ingest",))
-        f_pm = pool.submit(_partition_metrics_tiered)
-        sigs, caption_pairs = f_cap.result()
-        image_exact_edges = f_iee.result()
-        image_pairs = f_imp.result()
-        partition_metrics = f_pm.result()
-
     # --- edges + clustering ---------------------------------------------------
-    def _edges() -> DataFrame:
+    def edges(caption_pairs, image_pairs, image_exact_edges) -> DataFrame:
         return (
             caption_pairs.select("a", "b", "tier")
             .unionByName(image_pairs.select("a", "b", "tier"))
             .unionByName(image_exact_edges.select("a", "b", "tier"))
         )
 
-    edges = roc(
-        "edges", _edges, upstream=("caption_pairs", "image_pairs", "image_exact_edges")
-    )
-
-    def _assignments() -> DataFrame:
+    def assignments(ingest, edges) -> DataFrame:
         cc = connected_components(
             edges.select("a", "b").distinct(),
             max_iterations=cfg.cc_max_iterations,
             checkpoint_every=cfg.cc_checkpoint_every,
             dedup_edges=False,  # caller distincts the (a, b) union above
         )
-        return with_singletons(ingested, "image_id", cc).withColumnRenamed(
+        return with_singletons(ingest, "image_id", cc).withColumnRenamed(
             "node", "image_id"
         ).withColumnRenamed("component", "cluster_id")
 
-    assignments = roc("assignments", _assignments, upstream=("edges", "ingest"))
-
-    def _clusters() -> DataFrame:
+    def clusters(ingest, assignments) -> DataFrame:
         return cluster_exemplars(
             assignments.withColumnRenamed("image_id", "node").withColumnRenamed(
                 "cluster_id", "component"
             ),
-            ingested,
+            ingest,
             "image_id",
             "caption",
         )
-
-    # (submitted below, concurrently with the diagnostics rollup)
 
     # --- per-cluster over-merge diagnostics -----------------------------------
     # Reference analog: the over-inclusion audit summarizers
@@ -274,10 +213,10 @@ def run_pipeline(
     # Tier similarities are mapped onto one [0,1] scale so min_intra_sim
     # is comparable across tiers: caption = exact Jaccard, image =
     # 1 - hamming/64, image_exact = 1.0 (byte identity).
-    def _cluster_diagnostics() -> DataFrame:
-        from who_owns_mass_processing_spark.operators.diagnostics import (
-            cluster_diagnostics,
-        )
+    def cluster_diagnostics(
+        ingest, caption_pairs, image_pairs, image_exact_edges, assignments
+    ) -> DataFrame:
+        from who_owns_mass_processing_spark.operators import diagnostics
 
         sim_edges = (
             caption_pairs.select("a", "b", "tier", F.col("jaccard").alias("sim"))
@@ -291,9 +230,9 @@ def run_pipeline(
                 image_exact_edges.select("a", "b", "tier", F.lit(1.0).alias("sim"))
             )
         )
-        return cluster_diagnostics(
+        return diagnostics.cluster_diagnostics(
             assignments,
-            ingested,
+            ingest,
             sim_edges,
             id_col="image_id",
             cluster_col="cluster_id",
@@ -302,129 +241,82 @@ def run_pipeline(
             tier_values=("caption", "image", "image_exact"),
         )
 
-    # clusters and the diagnostics rollup both consume only materialized
-    # stages — overlap their jobs (guide §2.6)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_clusters = pool.submit(roc, "clusters", _clusters, ("assignments", "ingest"))
-        f_diag = pool.submit(
-            roc,
-            "cluster_diagnostics",
-            _cluster_diagnostics,
-            ("assignments", "caption_pairs", "image_pairs", "image_exact_edges", "ingest"),
+    # counts come from the stage manifests (recorded at write time) —
+    # zero extra jobs whether resumed or fresh.  Built as a pure JVM
+    # VALUES relation: createDataFrame of driver-local rows parallelizes
+    # into defaultParallelism python-arrow slices, and evaluating/writing
+    # that plan costs seconds of per-slice python round-trips for a 4-row
+    # table (measured 2.6 s of the pipeline bench); the VALUES form is a
+    # LocalTableScan, ~0.2 s.
+    def metrics(caption_pairs, image_pairs, edges, clusters) -> DataFrame:
+        vals = ", ".join(
+            f"('{s}', {cat.rows(s)}L)"
+            for s in ("caption_pairs", "image_pairs", "edges", "clusters")
         )
-        clusters = f_clusters.result()
-        cluster_diag = f_diag.result()
+        return spark.sql(f"SELECT stage, rows FROM VALUES {vals} AS t(stage, rows)")
 
     # --- optional C7 second network round --------------------------------------
     # Reference analog: community detection over GROUP ids rather than row
     # ids (dedupe_network over (company_group, officer group),
     # R/deduplicaters.R:860-930).  Each tier is clustered on its own,
     # then connected components run over the bipartite graph of
-    # (caption_cluster_id, image_cluster_id) — mathematically this
-    # fuses the same components as the tier-union CC above (pinned by
-    # tests/test_pipeline.py), but it is the reference's staged shape
-    # and the group graph is orders of magnitude smaller than the row
-    # graph at scale.
-    networks = None
-    if second_round:
-        from who_owns_mass_processing_spark.operators.network import network_round
+    # (caption_cluster, image_cluster) — mathematically this fuses the
+    # same components as the tier-union CC above (pinned by
+    # tests/test_pipeline.py), but it is the reference's staged shape and
+    # the group graph is orders of magnitude smaller than the row graph
+    # at scale.
+    def tier_clusters(ingest, caption_pairs, image_pairs, image_exact_edges) -> DataFrame:
+        # Both tiers' components come from ONE CC call: each tier's edges
+        # carry a one-character prefix ("c" caption, "i" image), so the
+        # two graphs stay disjoint.  A shared prefix keeps the byte order
+        # of the ids behind it, so a component's min label is the prefix
+        # plus the tier component's min image_id.
+        def tagged(pairs: DataFrame, prefix: str) -> DataFrame:
+            return pairs.select(
+                *(F.concat(F.lit(prefix), c).alias(c) for c in ("a", "b"))
+            )
 
-        def _networks() -> DataFrame:
-            # the two per-tier CC fixpoints are independent driver-sync
-            # loops over disjoint edge sets — run them from two driver
-            # threads so their (small, barrier-heavy) iteration jobs
-            # interleave on the idle cores (guide §2.6)
-            def _cap_cc() -> DataFrame:
-                return with_singletons(
-                    ingested, "image_id",
-                    connected_components(
-                        caption_pairs.select("a", "b").distinct(),
-                        max_iterations=cfg.cc_max_iterations,
-                        checkpoint_every=cfg.cc_checkpoint_every,
-                        dedup_edges=False,  # distincted above
-                    ),
-                ).select(
-                    F.col("node").alias("image_id"),
-                    F.col("component").alias("caption_cluster"),
-                )
+        image_edges = image_pairs.select("a", "b").unionByName(
+            image_exact_edges.select("a", "b")
+        )
+        cc = connected_components(
+            tagged(caption_pairs, "c").unionByName(tagged(image_edges, "i")).distinct(),
+            max_iterations=cfg.cc_max_iterations,
+            checkpoint_every=cfg.cc_checkpoint_every,
+            dedup_edges=False,  # distincted above
+        )
+        tier = F.substring("node", 1, 1)
 
-            def _img_cc() -> DataFrame:
-                img_edges = (
-                    image_pairs.select("a", "b")
-                    .unionByName(image_exact_edges.select("a", "b"))
-                    .distinct()
-                )
-                return with_singletons(
-                    ingested, "image_id",
-                    connected_components(
-                        img_edges,
-                        max_iterations=cfg.cc_max_iterations,
-                        checkpoint_every=cfg.cc_checkpoint_every,
-                        dedup_edges=False,  # distincted above
-                    ),
-                ).select(
-                    F.col("node").alias("image_id"),
-                    F.col("component").alias("image_cluster"),
-                )
+        def label(prefix: str):
+            return F.max(F.when(tier == prefix, F.expr("substring(component, 2)")))
 
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as cc_pool:
-                f_cap_cc = cc_pool.submit(_cap_cc)
-                f_img_cc = cc_pool.submit(_img_cc)
-                rows = f_cap_cc.result().join(f_img_cc.result(), "image_id")
-            # pin the (image_id, caption_cluster, image_cluster) rows:
-            # network_round references its input four times (edge part,
-            # two node parts, final attach) and each reference would
-            # re-run the two singleton joins + this join (bounded: one
-            # narrow row per image)
-            rows = rows.localCheckpoint(eager=True)
-            return network_round(rows, ["caption_cluster", "image_cluster"])
-
-        networks = roc(
-            "networks",
-            _networks,
-            upstream=("caption_pairs", "image_pairs", "image_exact_edges", "ingest"),
+        by_image = cc.groupBy(F.expr("substring(node, 2)").alias("image_id")).agg(
+            label("c").alias("caption_cluster"), label("i").alias("image_cluster")
+        )
+        # images without an edge in a tier are that tier's singletons
+        return ingest.select("image_id").join(by_image, "image_id", "left").select(
+            "image_id",
+            *(F.coalesce(c, "image_id").alias(c) for c in ("caption_cluster", "image_cluster")),
         )
 
-    # --- metrics + lineage ------------------------------------------------------
-    # (partition_metrics was computed in the tier pool above — its
-    # payload scan depends only on the input and overlaps the tiers)
+    def networks(tier_clusters) -> DataFrame:
+        from who_owns_mass_processing_spark.operators.network import network_round
 
+        return network_round(
+            tier_clusters,
+            ["caption_cluster", "image_cluster"],
+            max_iterations=cfg.cc_max_iterations,
+            checkpoint_every=cfg.cc_checkpoint_every,
+        )
 
-    def _metrics() -> DataFrame:
-        # counts come from the stage manifests (recorded at write time)
-        # — zero extra jobs whether resumed or fresh.  Built as a pure
-        # JVM VALUES relation: createDataFrame of driver-local rows
-        # parallelizes into defaultParallelism python-arrow slices, and
-        # evaluating/writing that plan costs seconds of per-slice python
-        # round-trips for a 4-row table (measured 2.6 s of the pipeline
-        # bench); the VALUES form is a LocalTableScan, ~0.2 s.
-        rows = [
-            (s, cat.rows(s))
-            for s in ("caption_pairs", "image_pairs", "edges", "clusters")
-        ]
-        vals = ", ".join(f"('{s}', {int(n)}L)" for s, n in rows)
-        return spark.sql(f"SELECT stage, rows FROM VALUES {vals} AS t(stage, rows)")
-
-    metrics = roc(
-        "metrics", _metrics, upstream=("caption_pairs", "image_pairs", "edges", "clusters")
-    )
-    lineage = spark.createDataFrame(cat.lineage())
-
-    out = {
-        "ingest": ingested,
-        "signatures": sigs,
-        "caption_pairs": caption_pairs,
-        "image_pairs": image_pairs,
-        "edges": edges,
-        "assignments": assignments,
-        "clusters": clusters,
-        "cluster_diagnostics": cluster_diag,
-        "metrics": metrics,
-        "partition_metrics": partition_metrics,
-        "lineage": lineage,
-    }
-    if networks is not None:
-        out["networks"] = networks
+    stages = [
+        ingest, signatures, caption_pairs, image_exact_edges, image_pairs,
+        partition_metrics_v2, edges, assignments, clusters, cluster_diagnostics, metrics,
+    ]
+    if second_round:
+        stages += [tier_clusters, networks]
+    cat.supersede("partition_metrics")
+    out = cat.run(stages, refresh=refresh)
+    out["partition_metrics"] = out.pop("partition_metrics_v2")
+    out["lineage"] = spark.createDataFrame(cat.lineage())
     return out

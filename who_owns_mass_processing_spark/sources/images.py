@@ -19,7 +19,6 @@ Scale notes:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -40,14 +39,6 @@ IMAGES_SCHEMA = StructType(
         StructField("phash", LongType(), True),
     ]
 )
-
-ASSIGNMENTS_SCHEMA = StructType(
-    [
-        StructField("image_id", StringType(), False),
-        StructField("cluster_id", StringType(), False),
-    ]
-)
-
 
 class SchemaMismatch(ValueError):
     pass
@@ -90,18 +81,3 @@ def read_images(
 def read_images_table(spark: SparkSession, table: str) -> DataFrame:
     """Iceberg catalog path (active when an Iceberg runtime is present)."""
     return _check(spark.table(table), IMAGES_SCHEMA, table)
-
-
-def write_result(
-    df: DataFrame, path: str, partition_by: list[str] | None = None, buckets: int | None = None
-) -> None:
-    """Result sink.  `buckets` mimics bucket(N, key) layout in the parquet
-    fallback by pre-shuffling on the first output column's hash so
-    downstream equi-joins on it are co-partitioned."""
-    out = df
-    if buckets:
-        out = df.repartition(buckets, F.col(df.columns[0]))
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

@@ -8,8 +8,8 @@ running it per-microbatch would re-cluster the world every trigger —
 instead the batch pipeline consumes the continuously-maintained
 signature table, which is where ~all the CPU goes at 10^12 scale).
 
-Windowed/stateful extras (rate monitoring with watermarks) included as
-the streaming-metrics surface.
+The stateful extra is cross-batch first-seen dedup
+(applyInPandasWithState).
 """
 
 from __future__ import annotations
@@ -117,14 +117,4 @@ def stream_first_seen(
     return keyed.applyInPandasWithState(
         fn, out_schema, state_schema, "append",
         getattr(GroupStateTimeout, timeout),
-    )
-
-
-def ingest_rate_metrics(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Streaming-metrics shape: per-10-minute ingest counts with a
-    watermark for late rows (works on any streaming DF with `ts`)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "10 minutes"), F.col("fmt"))
-        .agg(F.count("*").alias("n"))
     )
