@@ -337,9 +337,7 @@ def q_dedup_cc_assignments(spark, sf_dir):
     within-group pair listing that CC never needed)."""
     d = _t(spark, sf_dir, "documents")
     edges, _ = D.lsh_near_dup_edges(d, "doc_id", "text", CFG)
-    # rep pairs and star edges are distinct by construction (disjoint
-    # sets, each deduped) — skip the und-distinct exchange
-    cc = connected_components(edges.select("a", "b"), dedup_edges=False)
+    cc = connected_components(edges.select("a", "b"))
     out = C.with_singletons(d.select("doc_id"), "doc_id", cc)
     return out.select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
@@ -426,8 +424,7 @@ def q_cluster_diagnostics(spark, sf_dir):
     # diagnostics similarity join; cut lineage once so the LSH+verify
     # plan runs once, not once per consumer
     pairs = pairs.localCheckpoint(eager=True)
-    # pairs come out of groupBy(a, b): distinct by construction
-    cc = connected_components(pairs.select("a", "b"), dedup_edges=False)
+    cc = connected_components(pairs.select("a", "b"))
     assigns = C.with_singletons(d.select("doc_id"), "doc_id", cc).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )

@@ -108,9 +108,12 @@ def sf0001_tiers(spark):
 
     from who_owns_mass_processing_spark.config import DedupeConfig
     from who_owns_mass_processing_spark.functions.minhash import band_explode
-    from who_owns_mass_processing_spark.functions.text import winnow_fingerprints
+    from who_owns_mass_processing_spark.functions.text import winnow_codes
     from who_owns_mass_processing_spark.operators import verify as V
-    from who_owns_mass_processing_spark.operators.blocking import with_surrogate_ids
+    from who_owns_mass_processing_spark.operators.blocking import (
+        checkpointed_bytes,
+        with_surrogate_ids,
+    )
     from who_owns_mass_processing_spark.operators.dedupe import minhash_signatures
 
     cfg = DedupeConfig(bands=32)
@@ -129,26 +132,30 @@ def sf0001_tiers(spark):
     feats = rep_sigs.select("_sid", "codes", "minhash")
     fps = (
         d.join(rep_sigs.select("doc_id", "_sid"), "doc_id")
-        .select("_sid", winnow_fingerprints(F.col("text"), k=5, w=4).alias("_fps"))
+        .select("_sid", winnow_codes(F.col("text"), k=5, w=4).alias("_fps"))
         .localCheckpoint(eager=True)
     )
+    # the gate input the engine passes: each checkpointed table's stored size
+    rep_bytes, fps_bytes = checkpointed_bytes(rep_sigs), checkpointed_bytes(fps)
     thr, nperm = cfg.jaccard_threshold, cfg.num_perm
     # winnow min_shared 35 is about the candidates' median shared count,
     # so pairs on both sides of the filter are compared
     return {
         "jaccard": (
-            lambda: V.build_jaccard_mapside_bvar(feats, "_sid", "codes", "minhash", nperm, n),
+            lambda: V.build_jaccard_mapside_bvar(
+                feats, "_sid", "codes", "minhash", nperm, rep_bytes
+            ),
             lambda m: V.verify_jaccard(
                 cands, feats, "_sid", "codes", thr,
                 minhash_col="minhash", num_perm=nperm, mapside=m,
             ),
         ),
         "containment": (
-            lambda: V.build_containment_mapside_bvar(feats, "_sid", "codes", n),
+            lambda: V.build_containment_mapside_bvar(feats, "_sid", "codes", rep_bytes),
             lambda m: V.verify_containment(cands, feats, "_sid", "codes", 0.9, mapside=m),
         ),
         "winnow": (
-            lambda: V.build_winnow_mapside_bvar(fps, "_sid", "_fps", 5, n),
+            lambda: V.build_winnow_mapside_bvar(fps, "_sid", "_fps", fps_bytes),
             lambda m: V.verify_winnow(cands, fps, "_sid", "_fps", 35, mapside=m),
         ),
     }
@@ -180,15 +187,15 @@ def test_mapside_verify_drops_absent_ids(spark, tier):
     from who_owns_mass_processing_spark.functions import vectors
     from who_owns_mass_processing_spark.operators import verify as V
 
-    row = ([1, 5, -(2**63) + 7], [3, 1, 4, 1], ["abcde", "bcdef"], [0.6, 0.8, 0.0])
+    row = ([1, 5, -(2**63) + 7], [3, 1, 4, 1], [0.6, 0.8, 0.0])
     feats = spark.createDataFrame(
         [(10, *row), (20, *row)],
-        "id long, codes array<bigint>, minhash array<bigint>, fps array<string>, "
-        "vec array<double>",
+        "id long, codes array<bigint>, minhash array<bigint>, vec array<double>",
     )
+    nbytes = 1 << 10  # far below the cap: the map-side path is taken
     pairs = spark.createDataFrame([(5, 10), (10, 15), (10, 20), (10, 99)], "a long, b long")
     if tier == "cosine":
-        bvar = vectors.build_cosine_mapside_bvar(feats, "id", "vec", 2, 3)
+        bvar = vectors.build_cosine_mapside_bvar(feats, "id", "vec", nbytes, 3)
         fast = V.map_pairs(pairs, bvar, "a bigint, b bigint, _cos double", vectors._cosine_score)
         cos_udf = vectors.cosine_pair_udf()
         slow = (
@@ -199,23 +206,81 @@ def test_mapside_verify_drops_absent_ids(spark, tier):
     else:
         build, verify = {
             "jaccard": (
-                partial(V.build_jaccard_mapside_bvar, feats, "id", "codes", "minhash", 4, 2),
+                partial(V.build_jaccard_mapside_bvar, feats, "id", "codes", "minhash", 4, nbytes),
                 partial(V.verify_jaccard, pairs, feats, "id", "codes", 0.8,
                         minhash_col="minhash", num_perm=4),
             ),
             "containment": (
-                partial(V.build_containment_mapside_bvar, feats, "id", "codes", 2),
+                partial(V.build_containment_mapside_bvar, feats, "id", "codes", nbytes),
                 partial(V.verify_containment, pairs, feats, "id", "codes", 0.9),
             ),
             "winnow": (
-                partial(V.build_winnow_mapside_bvar, feats, "id", "fps", 5, 2),
-                partial(V.verify_winnow, pairs, feats, "id", "fps", 2),
+                partial(V.build_winnow_mapside_bvar, feats, "id", "codes", nbytes),
+                partial(V.verify_winnow, pairs, feats, "id", "codes", 2),
             ),
         }[tier]
         fast, slow = verify(mapside=build()), verify(mapside=None)
     got = sorted(map(tuple, fast.collect()))
     assert got == sorted(map(tuple, slow.collect()))
     assert got and {(a, b) for a, b, _ in got} <= {(10, 20), (20, 10)}
+
+
+@pytest.mark.parametrize("refused", ["cap_plus_1", "unknown"])
+@pytest.mark.parametrize("tier", ["jaccard", "containment", "winnow", "cosine"])
+def test_mapside_gate_refuses_before_any_job(spark, tier, refused):
+    """A feature size of cap + 1 bytes, or no measured size, makes every
+    map-side builder return None (the caller's join path) before any
+    Spark job runs.  Jobs are counted in a job group of their own; a
+    size under the cap collects in the same group, so the count is seen
+    to catch the builder's work."""
+    from who_owns_mass_processing_spark.functions import vectors
+    from who_owns_mass_processing_spark.operators import verify as V
+
+    feats = spark.createDataFrame(
+        [(10, [1, 5], [3, 1], [0.6, 0.8])],
+        "id long, codes array<bigint>, minhash array<bigint>, vec array<double>",
+    )
+    build = {
+        "jaccard": lambda n: V.build_jaccard_mapside_bvar(feats, "id", "codes", "minhash", 2, n),
+        "containment": lambda n: V.build_containment_mapside_bvar(feats, "id", "codes", n),
+        "winnow": lambda n: V.build_winnow_mapside_bvar(feats, "id", "codes", n),
+        "cosine": lambda n: vectors.build_cosine_mapside_bvar(feats, "id", "vec", n, 2),
+    }[tier]
+    sc = spark.sparkContext
+    key = "spark.jobGroup.id"
+
+    def jobs_during(nbytes, group):
+        prev = sc.getLocalProperty(key)
+        sc.setLocalProperty(key, group)
+        try:
+            bvar = build(nbytes)
+        finally:
+            sc.setLocalProperty(key, prev)
+        return bvar, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    nbytes = V.BROADCAST_VERIFY_MAX_BYTES + 1 if refused == "cap_plus_1" else None
+    assert jobs_during(nbytes, f"gate-{tier}-{refused}") == (None, 0)
+    bvar, n_jobs = jobs_during(1 << 10, f"gate-{tier}-{refused}-taken")
+    assert bvar is not None and n_jobs >= 1
+    bvar.destroy()
+
+
+def test_checkpointed_bytes_reads_storage_info(spark):
+    """The zero-job size lookup must keep working on the supported Spark:
+    if an API drift made it return None, connected_components would
+    silently stop coalescing its edge list and every map-side verify
+    would take the join path."""
+    from who_owns_mass_processing_spark.operators.blocking import (
+        checkpointed_bytes,
+        with_surrogate_ids,
+    )
+
+    df = spark.range(1000).selectExpr("id AS a", "id + 1 AS b")
+    nbytes = checkpointed_bytes(df.localCheckpoint(eager=True))
+    assert isinstance(nbytes, int) and nbytes > 0
+    assert checkpointed_bytes(df) is None
+    sid_bytes = checkpointed_bytes(with_surrogate_ids(df))
+    assert isinstance(sid_bytes, int) and sid_bytes > 0
 
 
 def test_hamming_value_emitted_and_salting_invariant(spark):

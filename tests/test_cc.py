@@ -76,15 +76,10 @@ def test_long_chain_converges_via_pointer_jump(spark):
     assert comps[0][0] == 0
 
 
-def test_checkpointed_bytes_reads_storage_info(spark):
-    """The zero-job size lookup must keep working on the supported Spark:
-    if an API drift made it return None, connected_components would
-    silently stop coalescing its edge list."""
-    from who_owns_mass_processing_spark.operators.connected_components import (
-        _checkpointed_bytes,
-    )
-
-    df = spark.range(1000).selectExpr("id AS a", "id + 1 AS b")
-    nbytes = _checkpointed_bytes(df.localCheckpoint(eager=True))
-    assert isinstance(nbytes, int) and nbytes > 0
-    assert _checkpointed_bytes(df) is None
+def test_duplicate_edges_both_directions(spark):
+    """Every edge listed twice in each direction gives the components of
+    the plain edge list: min-label propagation is correct on duplicate
+    edges, so connected_components deduplicates nothing itself."""
+    edges = [(1, 2), (2, 3), (7, 8), (9, 7), (20, 21)]
+    doubled = [e for a, b in edges for e in ((a, b), (b, a), (a, b), (b, a))]
+    assert _cc(spark, doubled, partitions=3) == components_py(edges)

@@ -210,3 +210,30 @@ def test_winnow_udf_matches_expression_twin(spark):
             .count()
         )
         assert diff == 0, (k, w)
+
+
+def test_winnow_codes_pack_the_fingerprints(spark):
+    """winnow_codes is winnow_fingerprints left packed: each gram's
+    ascii bytes, NUL-padded to 8, read big-endian — so int64 order is
+    gram order and both arrays come out sorted."""
+    df = spark.createDataFrame(pd.DataFrame({"t": SAMPLES}))
+    for k, w in ((5, 4), (8, 2)):
+        rows = df.select(
+            T.winnow_fingerprints(F.col("t"), k=k, w=w).alias("fp"),
+            T.winnow_codes(F.col("t"), k=k, w=w).alias("codes"),
+        ).collect()
+        assert any(r.fp for r in rows)
+        for r in rows:
+            packed = [int.from_bytes(g.encode("ascii").ljust(8, b"\0"), "big") for g in r.fp]
+            assert r.codes == packed == sorted(packed)
+
+
+def test_winnow_k_above_8_raises(spark):
+    """Grams pack into 8 bytes, so k > 8 has no vectorized path and no
+    fallback: both column functions refuse it up front."""
+    import pytest
+
+    with pytest.raises(ValueError, match="k=9"):
+        T.winnow_fingerprints(F.col("t"), k=9)
+    with pytest.raises(ValueError, match="k=9"):
+        T.winnow_codes(F.col("t"), k=9)

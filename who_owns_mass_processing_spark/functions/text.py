@@ -118,20 +118,30 @@ def winnow_fingerprints(col: Column, k: int = 5, w: int = 4) -> Column:
     injective AND order-preserving: numeric order == lexicographic gram
     order), the sliding-window minimum is one numpy reduction, and
     np.unique returns the sorted distinct picks — bit-identical output,
-    pinned against the expression twin in tests/test_text.py."""
-    if k > 8:
-        return winnow_fingerprints_expr(col, k, w)
-    return _winnow_udf(k, w)(col)
+    pinned against the expression twin in tests/test_text.py.  k > 8
+    does not pack and raises ValueError."""
+    return _winnow_udf(k, w, decode=True)(col)
 
 
-def _winnow_udf(k: int, w: int):
-    from pyspark.sql.types import ArrayType, StringType
+def winnow_codes(col: Column, k: int = 5, w: int = 4) -> Column:
+    """`winnow_fingerprints` as array<bigint>: the same sorted distinct
+    picks left as their packed codes (ascii grams keep the sign bit
+    clear, so int64 order is gram order).  The winnow tier blocks and
+    verifies over these integer codes instead of strings."""
+    return _winnow_udf(k, w, decode=False)(col)
+
+
+def _winnow_udf(k: int, w: int, decode: bool):
+    from pyspark.sql.types import ArrayType, LongType, StringType
 
     from who_owns_mass_processing_spark.synth import normalize_text as pynorm
 
-    @F.pandas_udf(ArrayType(StringType()))
+    if k > 8:
+        raise ValueError(f"winnow grams pack into 8 bytes: k={k} > 8")
+
+    @F.pandas_udf(ArrayType(StringType() if decode else LongType()))
     def _udf(texts: pd.Series) -> pd.Series:
-        out: list[list[str]] = []
+        out: list = []
         for t in texts:
             raw = pynorm(t or "").encode("ascii", "ignore")
             n = len(raw)
@@ -150,6 +160,9 @@ def _winnow_udf(k: int, w: int):
             else:
                 picks = np.lib.stride_tricks.sliding_window_view(codes, w).min(axis=1)
             uniq = np.unique(picks)  # sorted ascending == array_sort order
+            if not decode:
+                out.append(uniq.astype(np.int64))
+                continue
             # decode: big-endian bytes, trailing NUL padding stripped by
             # the S8 view (grams are [a-z0-9 ] — never contain \x00)
             out.append(
@@ -163,8 +176,7 @@ def _winnow_udf(k: int, w: int):
 def winnow_fingerprints_expr(col: Column, k: int = 5, w: int = 4) -> Column:
     """Catalyst-builtin twin of `winnow_fingerprints` (transform/slice/
     array_min/array_distinct — no UDF).  Kept as the equality oracle for
-    the vectorized path (tests/test_text.py) and as the fallback for
-    k > 8 (the uint64 gram packing needs k <= 8)."""
+    the vectorized path (tests/test_text.py)."""
     t = normalize_text(col)
     n = F.length(t)
     n_grams = n - F.lit(k - 1)

@@ -22,10 +22,6 @@ from who_owns_mass_processing_spark.operators.verify import (
     prefetch_broadcast,
 )
 
-# The map-side cosine verify's matrix cap (100 MB of float64), on top
-# of the shared BROADCAST_VERIFY_MAX_ROWS row bound.
-_COSINE_MAX_DOUBLES = 12_500_000
-
 
 def dot(a: Column, b: Column) -> Column:
     """Left-to-right double-precision dot product (deterministic order —
@@ -146,7 +142,8 @@ def ann_lsh_pairs(
         return df.sparkSession.createDataFrame(
             [], "a long, b long, cos_sim double"
         )
-    planes = hyperplane_tables(int(sample["d"]), n_bits, n_tables, seed)
+    dim = int(sample["d"])
+    planes = hyperplane_tables(dim, n_bits, n_tables, seed)
     budf = bucket_tables_udf(planes)
     from who_owns_mass_processing_spark.operators.blocking import spread_small_input
 
@@ -169,7 +166,8 @@ def ann_lsh_pairs(
     # explode; the table itself is (id, int, long) — tiny
     b = b.localCheckpoint(eager=True)
     # map-side exact-cosine verify for bounded corpora: the vector
-    # matrix broadcasts (same bound class as a Spark BHJ build side) and
+    # matrix (n * dim * 8 bytes, the map-side gate's one input)
+    # broadcasts (same bound class as a Spark BHJ build side) and
     # one map_pairs gather computes the IDENTICAL einsum the pair UDF
     # ran — but without the two feature joins or shipping two vectors
     # per candidate through Arrow (only 16 bytes/pair cross).  Rounding
@@ -178,9 +176,8 @@ def ann_lsh_pairs(
     # shape (features cannot be worker-resident at scale).  The matrix
     # collect + broadcast overlaps the census/cell phase
     # (prefetch_broadcast; see rep_pairs_from_sigs).
-    n_corpus = slim.count()
     with prefetch_broadcast(
-        build_cosine_mapside_bvar, slim, id_col, vec_col, n_corpus, int(sample["d"])
+        build_cosine_mapside_bvar, slim, id_col, vec_col, slim.count() * dim * 8, dim
     ) as mapside:
         cands, _metrics = candidate_pairs(b, id_col, cap=cap, hard_cap=hard_cap)
         bvar = mapside()
@@ -202,13 +199,13 @@ def ann_lsh_pairs(
 
 
 def build_cosine_mapside_bvar(
-    slim: DataFrame, id_col: str, vec_col: str, n_rows: int, dim: int
+    slim: DataFrame, id_col: str, vec_col: str, nbytes: int | None, dim: int
 ):
     """Collect + broadcast (ids, matrix, norms) of the (n, dim) vector
-    matrix; None when ineligible (BROADCAST_VERIFY_MAX_ROWS row bound,
-    more than _COSINE_MAX_DOUBLES doubles, non-long ids).  Side-thread-safe
+    matrix, or None when `_mapside_eligible` refuses its size `nbytes`
+    (the caller takes the join path).  Side-thread-safe
     (prefetch_broadcast)."""
-    if not _mapside_eligible(slim, id_col, n_rows) or n_rows * dim > _COSINE_MAX_DOUBLES:
+    if not _mapside_eligible(slim, id_col, nbytes):
         return None
     # Arrow-native collect (no toPandas object columns, no per-row
     # np.asarray): the vector column's flat float64 child reshapes into
@@ -216,18 +213,14 @@ def build_cosine_mapside_bvar(
     tab = slim.select(id_col, vec_col).toArrow()
     ids = tab.column(0).to_numpy().astype(np.int64, copy=False)
     order = np.argsort(ids, kind="stable")
-    ids_s = ids[order]
     mat = _fixed_matrix_from_list_column(tab.column(1), dim, order)
-    if mat is None:  # ragged vectors: per-row fallback (never produced here)
-        vals = tab.column(1).to_pylist()
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in vals], dtype=np.float64)[order]
     mat = np.ascontiguousarray(mat, dtype=np.float64)
     # norms once per VECTOR in the broadcast, not twice per PAIR in the
     # batch loop: sqrt(einsum) over the same contiguous row data is the
     # identical float op sequence, so gathered norms are bit-identical
     # to the per-pair computation they replace (2/3 of the kernel FLOPs)
     norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-    return slim.sparkSession.sparkContext.broadcast((ids_s, mat, norms))
+    return slim.sparkSession.sparkContext.broadcast((ids[order], mat, norms))
 
 
 def _cosine_score(a, b, ia, ib, value):

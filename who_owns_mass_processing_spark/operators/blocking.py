@@ -111,6 +111,26 @@ def with_surrogate_ids(df: DataFrame, sid_col: str = "_sid") -> DataFrame:
     ).localCheckpoint(eager=True)
 
 
+def checkpointed_bytes(df: DataFrame) -> int | None:
+    """Actual stored size of an eagerly localCheckpoint'ed DataFrame
+    (e.g. a `with_surrogate_ids` output), from the block manager's RDD
+    storage info — a driver metadata call, zero jobs.  The checkpointed
+    plan is a LogicalRDD whose rdd id keys the storage entry (thread-safe:
+    the id is taken from THIS DataFrame's plan, not from 'most recent
+    RDD').  None when the lookup fails (non-checkpointed plan, API
+    drift): callers treat None as 'unknown' — no coalesce in
+    connected_components, the join path in the map-side verify gate."""
+    try:
+        rid = df._jdf.queryExecution().analyzed().rdd().id()
+        sc = df.sparkSession.sparkContext
+        for info in sc._jsc.sc().getRDDStorageInfo():
+            if info.id() == rid:
+                return int(info.memSize()) + int(info.diskSize())
+    except Exception:
+        return None
+    return None
+
+
 def decode_pair_ids(
     pairs: DataFrame,
     id_map: DataFrame,
@@ -419,11 +439,10 @@ def hamming_pairs(
 ) -> tuple[DataFrame, DataFrame]:
     """Hamming-fused blocking: candidate generation with the popcount
     check applied inside the pair generator, and the distance EMITTED
-    alongside each surviving pair — consumers that previously re-joined
-    the hash table twice to recompute bit_count(xor) (verify_hamming)
-    read the `hamming` column instead (guide §2.4: the value was already
-    computed inside the fused predicate; two broadcast joins per tier
-    dropped).
+    alongside each surviving pair — consumers read the `hamming` column
+    instead of re-joining the hash table twice to recompute
+    bit_count(xor) (guide §2.4: the value was already computed inside
+    the fused predicate).
     Returns (pairs(a, b, hamming), metrics)."""
     def within_radius(pa_: np.ndarray, pb_: np.ndarray) -> np.ndarray:
         return popcount64_np(pa_ ^ pb_) <= radius

@@ -27,24 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _checkpointed_bytes(df: DataFrame) -> int | None:
-    """Actual stored size of an eagerly localCheckpoint'ed DataFrame,
-    from the block manager's RDD storage info — a driver metadata call,
-    zero jobs.  The checkpointed plan is a LogicalRDD whose rdd id keys
-    the storage entry (verified: ids match; thread-safe because the id
-    is taken from THIS DataFrame's plan, not from 'most recent RDD').
-    Returns None when the lookup fails (non-checkpointed plan, API
-    drift) — callers must treat None as 'unknown, do nothing'."""
-    try:
-        rid = df._jdf.queryExecution().analyzed().rdd().id()
-        sc = df.sparkSession.sparkContext
-        for info in sc._jsc.sc().getRDDStorageInfo():
-            if info.id() == rid:
-                return int(info.memSize()) + int(info.diskSize())
-    except Exception:
-        return None
-    return None
+from who_owns_mass_processing_spark.operators.blocking import checkpointed_bytes
 
 
 # Target bytes per partition when re-laying-out a TINY checkpointed edge
@@ -66,21 +49,15 @@ def connected_components(
     max_iterations: int = 50,
     checkpoint_every: int = 5,
     nodes: DataFrame | None = None,
-    dedup_edges: bool = True,
 ) -> DataFrame:
     """edges(src, dst) [+ optional nodes(node) for singletons]
     -> (node, component) where component = min node id in the component.
 
-    Node ids may be any orderable type (string image_ids work).
-
-    dedup_edges: min-label propagation is correct on duplicate edges
-    (min over repeated neighbors is the min), so the `distinct` on the
-    undirected edge list is purely a COST guard against heavily
-    duplicated inputs inflating every iteration join.  Callers whose
-    edge lists are distinct by construction (every engine call site:
-    pair lists out of groupBy(a, b), star edges, pre-distincted unions)
-    pass False and skip that exchange — one fewer shuffle inside the
-    eager edge materialization, per CC call (guide §2.4).
+    Node ids may be any orderable type (string image_ids work).  Edges
+    may repeat, in either direction: min-label propagation is correct
+    on duplicate edges (the min over repeated neighbours is the min).
+    Callers deduplicate large edge lists themselves, where it is free
+    (pair lists out of groupBy(a, b), star edges, distincted unions).
     """
     # materialize the (static) undirected edge list once — every iteration
     # joins against it, so it must not drag the upstream plan along.
@@ -99,10 +76,8 @@ def connected_components(
             )
         ).alias("_e")
     ).select(F.col("_e.u").alias("u"), F.col("_e.v").alias("v"))
-    if dedup_edges:
-        und = und.distinct()
     und = und.localCheckpoint(eager=True)
-    nbytes = _checkpointed_bytes(und)
+    nbytes = checkpointed_bytes(und)
     if nbytes is not None:
         n_parts = und.rdd.getNumPartitions()  # metadata only, no job
         target = max(1, -(-nbytes // _CC_TARGET_PARTITION_BYTES))

@@ -13,14 +13,11 @@ from pyspark.sql import functions as F
 
 from who_owns_mass_processing_spark.config import DedupeConfig
 from who_owns_mass_processing_spark.functions import text as T
-from who_owns_mass_processing_spark.functions.minhash import (
-    band_explode,
-    minhash_udf,
-    signature_udf,
-)
+from who_owns_mass_processing_spark.functions.minhash import band_explode, signature_udf
 from who_owns_mass_processing_spark.functions.simhash import simhash_udf
 from who_owns_mass_processing_spark.operators.blocking import (
     candidate_pairs,
+    checkpointed_bytes,
     decode_pair_ids,
     with_surrogate_ids,
 )
@@ -153,11 +150,12 @@ def rep_pairs_from_sigs(
     # the map-side verify's feature collect + broadcast build overlaps the
     # census/cell phase below: rep_sigs is already checkpointed, so the
     # side thread's collect job runs while candidate_pairs does its census
-    # collects and checkpoint.  n_rows upper-bounds the rep count: the
-    # builder returns None above the bound (join path).
+    # collects and checkpoint.  Its stored size (a zero-job lookup)
+    # upper-bounds the features': above the cap the builder returns None
+    # (join path).
     with prefetch_broadcast(
         verify.build_jaccard_mapside_bvar,
-        features, "_sid", "codes", "minhash", cfg.num_perm, n_rows,
+        features, "_sid", "codes", "minhash", cfg.num_perm, checkpointed_bytes(rep_sigs),
     ) as mapside:
         bands = band_explode(rep_sigs, "minhash", "_sid", cfg.bands, cfg.rows_per_band)
         cands, metrics = candidate_pairs(
@@ -306,12 +304,11 @@ def winnow_pairs(
     cap: int = 500,
     hard_cap: int = 100000,
 ) -> tuple[DataFrame, DataFrame]:
-    """Winnowing-fingerprint pair detection (block-then-verify): the
-    downstream consumer of `T.winnow_fingerprints` (round 3 stopped at
-    the exploded fingerprint table).  Docs sharing >= 1 winnow
-    fingerprint become candidates through the salted/capped blocking
-    machinery; candidates are verified EXACTLY by intersecting the two
-    docs' full fingerprint arrays (small: ~n/w picks per doc, and
+    """Winnowing-fingerprint pair detection (block-then-verify) over the
+    int64 gram codes of `T.winnow_codes` (k <= 8).  Docs sharing >= 1
+    winnow fingerprint become candidates through the salted/capped
+    blocking machinery; candidates are verified EXACTLY by intersecting
+    the two docs' full code arrays (small: ~n/w picks per doc, and
     per-doc picks are distinct, so join-count == intersect size).
 
     Returns (pairs(a, b, n_shared), skew_metrics) with n_shared =
@@ -336,16 +333,16 @@ def winnow_pairs(
     fps = with_surrogate_ids(
         slim.select(
             F.col(id_col),
-            T.winnow_fingerprints(F.col(text_col), k=k, w=w).alias("_fps"),
+            T.winnow_codes(F.col(text_col), k=k, w=w).alias("_fps"),
         ).where(F.size("_fps") > 0)
     )
-    n_fps = fps.count()  # checkpointed: cheap count
     features = fps.select("_sid", "_fps")
-    # overlap the feature collect + pack + broadcast with the census/cell
-    # phase below (see rep_pairs_from_sigs); the map-side verify packs
-    # fingerprints into order-preserving uint64, so counts stay exact
+    # overlap the feature collect + broadcast with the census/cell phase
+    # below (see rep_pairs_from_sigs); fingerprints are int64 gram codes
+    # end to end, so blocking, the intersect and the counts need no
+    # decode or re-pack
     with prefetch_broadcast(
-        verify.build_winnow_mapside_bvar, features, "_sid", "_fps", k, n_fps
+        verify.build_winnow_mapside_bvar, features, "_sid", "_fps", checkpointed_bytes(fps)
     ) as mapside:
         bands = fps.select(
             F.col("_sid"),
@@ -416,13 +413,13 @@ def containment_pairs_lsh(
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-    n_reps = rep_sigs.count()  # checkpointed: a cheap RDD count
     features = rep_sigs.select("_sid", "codes")
     # overlap the feature collect + broadcast with the census/cell phase
     # below (see rep_pairs_from_sigs); both paths emit both containment
     # directions
     with prefetch_broadcast(
-        verify.build_containment_mapside_bvar, features, "_sid", "codes", n_reps
+        verify.build_containment_mapside_bvar,
+        features, "_sid", "codes", checkpointed_bytes(rep_sigs),
     ) as mapside:
         bands = band_explode(rep_sigs, "minhash", "_sid", n_bands, n_rows)
         cands, metrics = candidate_pairs(

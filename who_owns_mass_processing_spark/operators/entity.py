@@ -104,11 +104,9 @@ def dedupe_entities(
         .select("a", "b")
     )
 
-    # tiered pairs are one row per candidate pair (candidate_pairs
-    # dedups on (a, b); the verify joins attach one row per side)
     cc = connected_components(
         tiered, max_iterations=cfg.cc_max_iterations,
-        checkpoint_every=cfg.cc_checkpoint_every, dedup_edges=False,
+        checkpoint_every=cfg.cc_checkpoint_every,
     )
     assignments = with_singletons(df.select(id_col), id_col, cc).select(
         F.col("node").alias(id_col), F.col("component").alias("cluster_id")

@@ -6,9 +6,7 @@ R/deduplicaters.R:208-223).
 
 Determinism contract: never `monotonically_increasing_id` — ids feed the
 recall gate and must be identical at any partition count (SURVEY.md §7).
-`row_number` over a stable key is used for small/medium domains; at
-10^12 scale prefer `keyed_group_ids` (hash-based, shuffle-free, collision-
-checked) since a global window would single-task the sort.
+`row_number` over a stable key is used for small/medium domains.
 """
 
 from __future__ import annotations
@@ -35,9 +33,3 @@ def dense_group_ids(df: DataFrame, group_cols: list[str], id_col: str = "group_i
     keyed = keys.withColumn(id_col, F.dense_rank().over(w).cast("long"))
     return df.join(keyed, on=group_cols, how="left")
 
-
-def keyed_group_ids(df: DataFrame, group_cols: list[str], id_col: str = "group_id") -> DataFrame:
-    """Hash group key (xxhash64) — shuffle-free id assignment for the
-    10^12-scale path; 64-bit collisions are ~1e-7 at 10^9 distinct keys
-    and detected by the caller comparing countDistinct(key) vs (id)."""
-    return df.withColumn(id_col, F.xxhash64(*group_cols))

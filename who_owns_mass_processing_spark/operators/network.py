@@ -75,11 +75,10 @@ def network_round(
     nodes = nodes.distinct()
 
     cc = connected_components(
-        edges,  # distincted above
+        edges,
         max_iterations=max_iterations,
         checkpoint_every=checkpoint_every,
         nodes=nodes,
-        dedup_edges=False,
     )
 
     # attach via the first non-null group id of each row

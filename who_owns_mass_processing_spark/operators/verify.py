@@ -7,29 +7,34 @@ R/deduplicaters.R:342-346, config.R:28-29).  Here:
   caption tier  exact Jaccard over char-shingle arrays (builtins:
                 array_intersect — no Python) >= cfg.jaccard_threshold;
                 the containment and winnow tiers intersect the same way;
-  image tier    popcount Hamming over pHash (builtin bit_count)
-                <= cfg.hamming_radius, plus for *lossy* formats a PSNR
-                >= 40 dB decoded-pixel check (pandas UDF) — the two-tier
-                strict/loose rule mirroring the reference's 0.85/0.95.
+  image tier    popcount Hamming over pHash <= cfg.hamming_radius,
+                fused into pair generation (blocking.hamming_pairs),
+                plus for *lossy* formats a PSNR >= 40 dB decoded-pixel
+                check (pandas UDF) — the two-tier strict/loose rule
+                mirroring the reference's 0.85/0.95.
 
 Two paths verify the set tiers (Jaccard, containment, winnow) and the
-embedding-cosine tier, and emit identical rows:
+embedding-cosine tier, and emit identical rows.  Which one runs is
+decided once, before any Spark job, from one measured number: the
+feature table's size in bytes (the set tiers read the stored size of
+the table `with_surrogate_ids` checkpointed, `checkpointed_bytes`; the
+cosine tier its exact n * dim * 8 matrix size).
 
-  map-side  for bounded feature tables: a `build_*_mapside_bvar` builder
-            collects the features once into sorted numpy arrays and
-            broadcasts them, usually on a driver side thread
-            (`prefetch_broadcast`) so the collect overlaps blocking.  One
-            `map_pairs` pass then reads bare (a, b) pairs — 16 bytes per
-            pair cross the Python boundary — looks both ids up
-            (`_lookup`; a pair with an absent id is dropped, as the
-            inner join drops it), and scores the survivors with the
-            tier's vectorized tail over one sorted-list intersect
-            (`_intersect_counts`).  A builder returns None above the row
-            or byte bound, and the caller takes the join path.
-  join      the scale path: each pair re-attaches per-id features by an
-            equi-join on id that AQE can re-plan.  Bytes are re-joined
-            ONLY for the lossy-pair PSNR subset (tiny), and the set tiers
-            carry code arrays, not raw text.
+  map-side  at most BROADCAST_VERIFY_MAX_BYTES with long ids: a
+            `build_*_mapside_bvar` builder collects the features once
+            into sorted numpy arrays and broadcasts them, usually on a
+            driver side thread (`prefetch_broadcast`) so the collect
+            overlaps blocking.  One `map_pairs` pass then reads bare
+            (a, b) pairs — 16 bytes per pair cross the Python boundary —
+            looks both ids up (`_lookup`; a pair with an absent id is
+            dropped, as the inner join drops it), and scores the
+            survivors with the tier's vectorized tail over one
+            sorted-list intersect of int64 codes (`_intersect_counts`).
+  join      the scale path, when the gate (`_mapside_eligible`) refuses
+            — the builder's only `return None`: each pair re-attaches
+            per-id features by an equi-join on id that AQE can re-plan.
+            Bytes are re-joined ONLY for the lossy-pair PSNR subset
+            (tiny), and the set tiers carry code arrays, not raw text.
 """
 
 from __future__ import annotations
@@ -44,22 +49,12 @@ from pyspark.sql import functions as F
 from who_owns_mass_processing_spark.functions.images import psnr_pair_udf
 from who_owns_mass_processing_spark.functions.text import jaccard_arrays
 
-# Map-side verify engages only when the feature table is PROVABLY this
-# small (caller-supplied row bound): ~100k rows of codes+minhash is a
-# few hundred MB broadcast — the same magnitude Spark itself allows a
-# broadcast hash join.  Larger corpora take the equi-join path, which
-# is the correct 100-TB shape (features cannot be resident per worker).
-# After collection the ACTUAL byte size is checked too (the row bound
-# cannot see array widths; every reused python worker holds one copy of
-# the broadcast value): above the byte cap the join path runs and the
-# collect is written off.
-BROADCAST_VERIFY_MAX_ROWS = 100_000
+# Map-side verify engages only when the feature table's measured size
+# is at most this: the same magnitude Spark itself allows a broadcast
+# hash join, and every reused python worker holds one copy of the
+# broadcast value.  Larger tables take the equi-join path, which is the
+# correct 100-TB shape (features cannot be resident per worker).
 BROADCAST_VERIFY_MAX_BYTES = 256 * 1024 * 1024
-# Above this row count, a doomed collect is expensive enough (hundreds
-# of MB of driver assembly) that one tiny aggregation job to ESTIMATE
-# the byte size first is the cheaper failure mode; below it, collecting
-# directly saves that job on the common small-corpus path.
-_PREGATE_MIN_ROWS = 20_000
 
 
 @contextmanager
@@ -84,104 +79,61 @@ def prefetch_broadcast(build, *args):
             raise
 
 
-def _mapside_eligible(features: DataFrame, id_col: str, rows: int | None) -> bool:
-    """Pre-collect precondition of every map-side builder: a caller-
-    supplied row bound within BROADCAST_VERIFY_MAX_ROWS and long ids."""
+def _mapside_eligible(features: DataFrame, id_col: str, nbytes: int | None) -> bool:
+    """The one gate of every map-side builder, checked before any Spark
+    job: a measured feature size within BROADCAST_VERIFY_MAX_BYTES (None,
+    unknown, refuses) and long ids."""
     return (
-        rows is not None
-        and rows <= BROADCAST_VERIFY_MAX_ROWS
+        nbytes is not None
+        and nbytes <= BROADCAST_VERIFY_MAX_BYTES
         and features.schema[id_col].dataType.simpleString() == "bigint"
     )
-
-
-def _bytes_pregate(
-    features: DataFrame, array_col: str, rows: int | None, fixed_per_row: int
-) -> bool:
-    """True when the feature table is provably over the broadcast byte
-    cap WITHOUT collecting it: one scalar agg over the (checkpointed)
-    features prices the variable-width array column; `fixed_per_row`
-    covers fixed-width columns (e.g. the minhash matrix).  Only runs
-    when `rows` exceeds _PREGATE_MIN_ROWS — at 10x bench scale the
-    fallback previously collected ~1.4 GB to the driver just to throw
-    it away (measured); small corpora skip the extra job entirely."""
-    if rows is None or rows <= _PREGATE_MIN_ROWS:
-        return False
-    n = features.agg(F.sum(F.size(array_col))).collect()[0][0] or 0
-    return int(n) * 8 + rows * fixed_per_row > BROADCAST_VERIFY_MAX_BYTES
 
 
 def _collect_ragged_arrow(
     features: DataFrame, id_col: str, array_col: str, extra_cols: tuple[str, ...] = ()
 ):
-    """Arrow-collect (id, array<...>[, extras]) and return
+    """Arrow-collect (id, array<bigint>[, extras]) and return
     (sids_sorted, offs, flat, order, table) with the ragged column
     re-laid-out in ascending-id row order — every step a vectorized
-    numpy gather, no per-row Python.
+    numpy gather, no per-row Python: the Arrow list column's (offsets,
+    values) buffers are consumed directly (a list array's offsets index
+    its values buffer absolutely, so a sliced chunk needs no special
+    case), and the sorted flat layout is one fancy-index gather.
 
-    The previous toPandas path materialized a Python list per row and an
-    np.asarray per cell (measured ~0.3-0.5 s of driver time per
-    map-side-verified query at sf0.1); here the Arrow list column's
-    (offsets, values) buffers are consumed directly: the sorted flat
-    layout is one fancy-index gather over the child values array."""
+    `flat` is uint64: every map-side code array is sorted in UNSIGNED
+    order (signature_udf sorts the uint64 shingle codes before its int64
+    store; winnow codes are big-endian ascii grams, below 2**63), so the
+    reinterpreted bits are what `_intersect_counts` searches."""
     tab = features.select(id_col, array_col, *extra_cols).toArrow()
     sids = tab.column(0).to_numpy().astype(np.int64, copy=False)
     arr = tab.column(1).combine_chunks()
-    if arr.offset != 0:  # sliced list array: offsets/values disagree on
-        return None  # the base index — never true for a collected table
     offs_a = arr.offsets.to_numpy().astype(np.int64, copy=False)
     vals = arr.values.to_numpy(zero_copy_only=False)
     order = np.argsort(sids, kind="stable")
-    return (*_sorted_ragged(order, offs_a, vals, sids), order, tab)
-
-
-def _sorted_ragged(
-    order: np.ndarray, offs_a: np.ndarray, vals: np.ndarray, sids: np.ndarray
-):
-    """Re-lay a ragged (offsets, values) column into ascending-id row
-    order with one vectorized gather; returns (sids_sorted, offs, flat)
-    with `flat` as uint64: every map-side code array is sorted in
-    UNSIGNED order (signature_udf sorts the uint64 shingle codes before
-    its int64 store; packed winnow grams are big-endian uint64), so the
-    reinterpreted bits are what `_intersect_counts` searches."""
     lens_s = np.diff(offs_a)[order]
-    out_offs = np.zeros(len(lens_s) + 1, dtype=np.int64)
-    np.cumsum(lens_s, out=out_offs[1:])
-    total = int(out_offs[-1])
-    if total:
-        src_start = offs_a[:-1][order]
-        pos = (
-            np.arange(total, dtype=np.int64)
-            - np.repeat(out_offs[:-1], lens_s)
-            + np.repeat(src_start, lens_s)
-        )
-        flat = vals[pos]
-    else:
-        flat = vals[:0]
-    return sids[order], out_offs, flat.astype(np.uint64, copy=False)
+    offs = np.zeros(len(lens_s) + 1, dtype=np.int64)
+    np.cumsum(lens_s, out=offs[1:])
+    pos = (
+        np.arange(int(offs[-1]), dtype=np.int64)
+        - np.repeat(offs[:-1], lens_s)
+        + np.repeat(offs_a[:-1][order], lens_s)
+    )
+    return sids[order], offs, vals[pos].astype(np.uint64, copy=False), order, tab
 
 
 def _fixed_matrix_from_list_column(col, width: int, order: np.ndarray):
     """Arrow list column of uniform `width` -> (n, width) numpy matrix in
-    `order` row order; returns None when rows are not uniform (caller
-    falls back to the per-row path)."""
+    `order` row order.  Rows of another width (never produced by
+    signature_udf, and rejected by the cosine tier's matmul UDFs before
+    any verify) raise ValueError."""
     arr = col.combine_chunks()
-    if arr.offset != 0:
-        return None
     offs = arr.offsets.to_numpy().astype(np.int64, copy=False)
-    if len(offs) > 1 and not bool(np.all(np.diff(offs) == width)):
-        return None
-    vals = arr.values.to_numpy(zero_copy_only=False)
+    if not bool(np.all(np.diff(offs) == width)):
+        raise ValueError(f"list rows are not all {width} wide")
     n = len(offs) - 1
-    start = int(offs[0]) if len(offs) else 0
-    return vals[start : start + n * width].reshape(n, width)[order]
-
-
-def _broadcast_capped(features: DataFrame, nbytes: int, value):
-    """Broadcast `value`, or None when its arrays exceed the byte cap
-    (the caller falls back to the join path)."""
-    if nbytes > BROADCAST_VERIFY_MAX_BYTES:
-        return None
-    return features.sparkSession.sparkContext.broadcast(value)
+    vals = arr.values.to_numpy(zero_copy_only=False)
+    return vals[offs[0] : offs[0] + n * width].reshape(n, width)[order]
 
 
 def _spark_round6(x: np.ndarray) -> np.ndarray:
@@ -265,86 +217,38 @@ def build_jaccard_mapside_bvar(
     shingle_col: str,
     minhash_col: str,
     num_perm: int,
-    features_rows: int | None,
+    nbytes: int | None,
 ):
     """Collect + numpy-layout + broadcast of the Jaccard verify features
-    (sids, offs, codes, minhash); None when ineligible (`features_rows`
-    bound, non-long ids, byte cap, non-contiguous Arrow layout) — the
-    caller takes the join path.  Side-thread-safe (prefetch_broadcast)."""
-    if not _mapside_eligible(features, id_col, features_rows) or _bytes_pregate(
-        features, shingle_col, features_rows, num_perm * 8
-    ):
+    (sids, offs, codes, minhash), or None — the caller takes the join
+    path — when `_mapside_eligible` refuses the feature table's measured
+    size `nbytes`.  Side-thread-safe (prefetch_broadcast)."""
+    if not _mapside_eligible(features, id_col, nbytes):
         return None
-    collected = _collect_ragged_arrow(features, id_col, shingle_col, (minhash_col,))
-    if collected is None:
-        return None
-    sids_s, offs, flat, order, tab = collected
+    sids_s, offs, flat, order, tab = _collect_ragged_arrow(
+        features, id_col, shingle_col, (minhash_col,)
+    )
     mh = _fixed_matrix_from_list_column(tab.column(2), num_perm, order)
-    if mh is None:  # ragged minhash rows (never produced by signature_udf)
-        return None
-    mh = mh.astype(np.int64, copy=False)
-    return _broadcast_capped(features, flat.nbytes + mh.nbytes, (sids_s, offs, flat, mh))
+    value = (sids_s, offs, flat, mh.astype(np.int64, copy=False))
+    return features.sparkSession.sparkContext.broadcast(value)
 
 
 def build_containment_mapside_bvar(
-    features: DataFrame, id_col: str, shingle_col: str, features_rows: int | None
+    features: DataFrame, id_col: str, codes_col: str, nbytes: int | None
 ):
-    """Collect + broadcast (sids, offs, codes) for the containment
-    verify; None when ineligible (see build_jaccard_mapside_bvar)."""
-    if not _mapside_eligible(features, id_col, features_rows) or _bytes_pregate(
-        features, shingle_col, features_rows, 0
-    ):
+    """Collect + broadcast (sids, offs, codes) of an int64-code set
+    column, or None when `_mapside_eligible` refuses `nbytes` (see
+    build_jaccard_mapside_bvar)."""
+    if not _mapside_eligible(features, id_col, nbytes):
         return None
-    collected = _collect_ragged_arrow(features, id_col, shingle_col)
-    if collected is None:
-        return None
-    sids_s, offs, flat, _order, _tab = collected
-    return _broadcast_capped(features, flat.nbytes, (sids_s, offs, flat))
+    sids_s, offs, flat, _order, _tab = _collect_ragged_arrow(features, id_col, codes_col)
+    return features.sparkSession.sparkContext.broadcast((sids_s, offs, flat))
 
 
-def build_winnow_mapside_bvar(
-    features: DataFrame, id_col: str, fps_col: str, k: int, features_rows: int | None
-):
-    """Collect + pack + broadcast (sids, offs, packed grams) for the
-    winnow verify; None when ineligible (k > 8, non-ascii grams, or see
-    build_jaccard_mapside_bvar).  Fingerprints are k-char grams: each
-    packs into a big-endian uint64 preserving lexicographic order, so
-    the sorted string arrays stay sorted as codes."""
-    if k > 8 or not _mapside_eligible(features, id_col, features_rows):
-        return None
-    if _bytes_pregate(features, fps_col, features_rows, 0):
-        return None  # provably over the cap: skip the doomed collect
-    tab = features.select(id_col, fps_col).toArrow()
-    sids = tab.column(0).to_numpy().astype(np.int64, copy=False)
-    arr = tab.column(1).combine_chunks()  # list<string> of k-char grams
-    if arr.offset != 0:  # sliced list array — never true for a collected table
-        return None
-    row_offs = arr.offsets.to_numpy().astype(np.int64, copy=False)
-    sv = arr.values  # flat gram StringArray shared by all rows
-    # vectorized pack of EVERY gram at once: the utf8 child is one
-    # contiguous (offsets, data) buffer pair (guide §4.2's Arrow
-    # property), and grams are ascii so byte length == char length == k
-    # — one fancy-index gather builds the (n_grams, 8) byte matrix, the
-    # big-endian view is the same order-preserving code the per-row
-    # pack produced.  Non-k byte lengths (non-ascii — never produced by
-    # winnow_fingerprints) return None -> the join path.
-    packed = np.empty(0, dtype=np.uint64)
-    if len(sv):
-        if sv.null_count:
-            return None
-        so_buf, data_buf = sv.buffers()[1], sv.buffers()[2]
-        so = np.frombuffer(so_buf, dtype=np.int32)[
-            sv.offset : sv.offset + len(sv) + 1
-        ].astype(np.int64, copy=False)
-        if not bool(np.all(np.diff(so) == k)):
-            return None
-        data = np.frombuffer(data_buf, dtype=np.uint8)
-        wide = np.zeros((len(sv), 8), dtype=np.uint8)
-        wide[:, :k] = data[so[:-1, None] + np.arange(k)]
-        packed = wide.view(np.dtype(">u8")).ravel().astype(np.uint64)
-    order = np.argsort(sids, kind="stable")
-    sids_s, offs, flat = _sorted_ragged(order, row_offs, packed, sids)
-    return _broadcast_capped(features, flat.nbytes, (sids_s, offs, flat))
+# The winnow tier verifies `winnow_codes` (int64-packed grams) with the
+# same ragged-codes layout; it keeps its own name so traces and callers
+# name the tier.
+build_winnow_mapside_bvar = build_containment_mapside_bvar
 
 
 def verify_jaccard(
@@ -508,7 +412,7 @@ def verify_winnow(
     min_shared: int,
     mapside=None,
 ) -> DataFrame:
-    """pairs(a,b) x features(id, fingerprints) -> (a, b, n_shared) with
+    """pairs(a,b) x features(id, winnow codes) -> (a, b, n_shared) with
     n_shared = |fps_a ∩ fps_b| >= min_shared — an integer count, no
     rounding concerns.  `mapside`: the broadcast from
     build_winnow_mapside_bvar, or None for the join path."""
@@ -534,29 +438,6 @@ def verify_winnow(
             F.size(F.array_intersect("_fa", "_fb")).cast("long").alias("n_shared"),
         )
         .where(F.col("n_shared") >= F.lit(ms))
-    )
-
-
-def verify_hamming(
-    pairs: DataFrame,
-    features: DataFrame,
-    id_col: str,
-    hash_col: str,
-    radius: int,
-) -> DataFrame:
-    """pairs(a,b) x features(id, hash64) -> (a, b, hamming) within radius.
-    Pure JVM: bit_count(xor)."""
-    fa = features.select(F.col(id_col).alias("a"), F.col(hash_col).alias("_ha"))
-    fb = features.select(F.col(id_col).alias("b"), F.col(hash_col).alias("_hb"))
-    return (
-        pairs.join(fa, "a")
-        .join(fb, "b")
-        .select(
-            "a",
-            "b",
-            F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))).cast("int").alias("hamming"),
-        )
-        .where(F.col("hamming") <= radius)
     )
 
 

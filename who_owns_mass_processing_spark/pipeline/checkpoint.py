@@ -65,11 +65,6 @@ class StageCatalog:
         # independent stages are computed concurrently on run()'s pool
         # of driver threads, and snapshot ids must stay strictly monotonic
         self._lock = threading.RLock()
-        # stages (re)computed by THIS process — downstream stages consult
-        # this to invalidate themselves when an upstream recomputed (the
-        # fingerprint covers config, not input data, so a refreshed
-        # upstream must cascade; see read_or_compute(upstream=...))
-        self.computed_this_run: set[str] = set()
 
     def _load_manifest(self) -> dict:
         if os.path.exists(self._manifest_path):
@@ -112,7 +107,6 @@ class StageCatalog:
         backend via rename)."""
         import shutil
 
-        self.computed_this_run.add(stage)
         path = self._stage_path(stage)
         tmp = f"{path}.tmp-{os.getpid()}-{threading.get_ident()}"
         shutil.rmtree(tmp, ignore_errors=True)
@@ -179,30 +173,23 @@ class StageCatalog:
         """The reference's load_read_write semantics (R/loaders.R:373-438).
 
         `upstream` lists the stage names this stage consumes: if any of
-        them was recomputed in this run, the cached copy of THIS stage
-        is stale (it was derived from different input data) and is
+        them is newer than this stage, the cached copy of THIS stage is
+        stale (it was derived from different input data) and is
         recomputed too — the stale-downstream hazard the config
         fingerprint cannot catch.
 
-        Staleness is DURABLE, not just process-local: a stage is also
-        stale when any upstream's manifest snapshot_id is newer than its
-        own.  Snapshot ids are monotonic, so a refresh run killed after
-        an upstream's write but before this stage's write leaves the
-        upstream with a higher id — a later plain resume then recomputes
-        this stage instead of silently serving output derived from the
-        OLD upstream data (ADVICE r3: the in-process computed_this_run
-        set alone loses the cascade across a crash)."""
-        force = refresh or any(u in self.computed_this_run for u in upstream)
-        if not force and self.is_complete(stage):
-            my_snap = self._manifest["stages"][stage]["snapshot_id"]
-            for u in upstream:
-                u_entry = self._manifest["stages"].get(u)
-                if u_entry is None or u_entry["snapshot_id"] > my_snap:
-                    force = True
-                    break
-        if not force and self.is_complete(stage):
-            return self.read(stage)
-        self.computed_this_run.add(stage)
+        "Newer" is the manifest's snapshot_id, so staleness is DURABLE:
+        snapshot ids are monotonic, so an upstream rewritten in this run
+        outranks every dependant written before it, and a refresh run
+        killed after an upstream's write but before this stage's write
+        leaves the upstream with a higher id — a later plain resume then
+        recomputes this stage instead of silently serving output derived
+        from the OLD upstream data (ADVICE r3)."""
+        if not refresh and self.is_complete(stage):
+            stages = self._manifest["stages"]
+            my_snap = stages[stage]["snapshot_id"]
+            if all(u in stages and stages[u]["snapshot_id"] <= my_snap for u in upstream):
+                return self.read(stage)
         return self.write(stage, compute())
 
     def run(

@@ -135,8 +135,8 @@ def run_pipeline(
             cap=cfg.band_bucket_cap, hard_cap=cfg.stop_band_threshold(cat.rows("ingest")),
         )
         cat.write("image_band_skew", skew)
-        # cands carries the fused Hamming distance — no verify_hamming
-        # feature re-joins (guide §2.4; value emitted by hamming_pairs)
+        # cands carries the fused Hamming distance — no feature
+        # re-joins (guide §2.4; value emitted by hamming_pairs)
         ham = decode_pair_ids(cands, reps.select("_sid", "image_id"), "image_id")
         # pin the verified pair list: verify_psnr references it for the
         # lossy tagging, the blob-id set, AND the passthrough branch, and
@@ -191,7 +191,6 @@ def run_pipeline(
             edges.select("a", "b").distinct(),
             max_iterations=cfg.cc_max_iterations,
             checkpoint_every=cfg.cc_checkpoint_every,
-            dedup_edges=False,  # caller distincts the (a, b) union above
         )
         return with_singletons(ingest, "image_id", cc).withColumnRenamed(
             "node", "image_id"
@@ -283,7 +282,6 @@ def run_pipeline(
             tagged(caption_pairs, "c").unionByName(tagged(image_edges, "i")).distinct(),
             max_iterations=cfg.cc_max_iterations,
             checkpoint_every=cfg.cc_checkpoint_every,
-            dedup_edges=False,  # distincted above
         )
         tier = F.substring("node", 1, 1)
 
