@@ -6,8 +6,8 @@
       [--refresh] [--jaccard 0.8] [--hamming 6] [--cores N]
 
 Resumable: rerunning with the same --workdir and config skips completed
-stages (parquet stage catalog; Iceberg snapshots when the runtime has
-the Iceberg jar).  north_rule contract: spark-submit --py-files, stage
+stages (the parquet stage catalog, pipeline/checkpoint.py, is the only
+stage backend).  north_rule contract: spark-submit --py-files, stage
 checkpoints, per-partition lineage + metrics tables.
 """
 

@@ -105,40 +105,39 @@ def test_fuzzy_join_first_char_typo(spark):
 
 def test_ivf_topk_recall_vs_bruteforce(spark):
     """IVF scale path: recall@10 >= 0.9 against the exact brute-force
-    top-k on the sf0.01 embeddings fixture (k-means cells + multi-probe)."""
+    top-k on the sf0.01 embeddings fixture (k-means cells + multi-probe),
+    served from the persisted index as q_embedding_topk_ivf serves."""
     from pyspark.sql import functions as F
 
     from who_owns_mass_processing_spark.functions.vectors import (
         ann_topk_bruteforce,
+        build_ivf_index,
         ivf_topk,
+        load_ivf_centroids,
     )
 
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    cent_path, cells_path = build_ivf_index(SF_DIR, n_cells=16, seed=42)
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = e.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     exact = ann_topk_bruteforce(e, q, "vec_id", "embedding", "qid", "qvec", 10)
     # 64-dim near-isotropic vectors are IVF's hard case (distances
-    # concentrate): recall 0.9 needs probing ~half the cells here.  On
-    # genuinely clustered embedding spaces far fewer probes suffice —
-    # the pHash/LSH paths remain the default for pair-listing.
+    # concentrate): on the persisted 16-cell index, recall@10 of these
+    # 20 queries is 0.81 / 0.86 / 0.905 / 0.94 at 8 / 10 / 11 / 12
+    # probed cells, so the 0.9 gate probes 12.  On genuinely clustered
+    # embedding spaces far fewer probes suffice — the pHash/LSH paths
+    # remain the default for pair-listing.
     approx = ivf_topk(
         e, q, "vec_id", "embedding", "qid", "qvec", 10,
-        n_cells=16, n_probe=10, seed=42,
+        centroids=load_ivf_centroids(cent_path),
+        cell_assignments=spark.read.parquet(cells_path),
+        n_probe=12,
     )
     ex = {(r.qid, r.vec_id) for r in exact.collect()}
     ap = {(r.qid, r.vec_id) for r in approx.collect()}
     recall = len(ex & ap) / len(ex)
     assert recall >= 0.9, recall
-    # determinism: same seed + input => identical result set
-    ap2 = {
-        (r.qid, r.vec_id)
-        for r in ivf_topk(
-            e, q, "vec_id", "embedding", "qid", "qvec", 10,
-            n_cells=16, n_probe=10, seed=42,
-        ).collect()
-    }
-    assert ap == ap2
 
 
 def test_ivf_persisted_index_deterministic(spark, tmp_path):
@@ -204,7 +203,7 @@ def test_ivf_persisted_index_deterministic(spark, tmp_path):
             tuple,
             ivf_topk(
                 corpus, q, "vec_id", "embedding", "query_id", "qvec", 5,
-                n_cells=8, n_probe=4, centroids=cents, cell_assignments=assigns,
+                centroids=cents, cell_assignments=assigns, n_probe=4,
             ).toPandas().values,
         )
     )

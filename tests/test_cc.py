@@ -70,7 +70,7 @@ def test_long_chain_converges_via_pointer_jump(spark):
     chain = spark.range(2000).select(F.col("id").alias("a"), (F.col("id") + 1).alias("b"))
     with __import__("warnings").catch_warnings():
         __import__("warnings").simplefilter("error")  # non-convergence warns -> fail
-        cc = connected_components(chain, max_iterations=50)
+        cc = connected_components(chain)
         comps = cc.select("component").distinct().collect()
     assert len(comps) == 1
     assert comps[0][0] == 0

@@ -315,44 +315,63 @@ def test_phash_input_column_matches_recomputed(spark, synth_small):
     assert bad == 0
 
 
+# the networks label is the min typed group id, so it must hold under
+# ids whose byte order differs from their case-folded or code-unit order
+_ID_PREFIXES = ("Ä", "a", "Z", "é", "b_", "ß")
+
+
+@pytest.mark.parametrize("ids", ["ascii", "mixed_utf8"])
 def test_second_round_networks_agree_with_tier_union(
-    spark, synth_small, tmp_path_factory, monkeypatch
+    spark, synth_small, tmp_path_factory, monkeypatch, ids
 ):
-    """C7: CC over (caption_cluster, image_cluster) group ids must induce
-    the same partition of images as CC over the tier-union edge list
-    (reference dedupe_network over group ids, R/deduplicaters.R:860-930).
-    Each tier's clusters match the union-find oracle over that tier's
-    edges, and every CC call honours the config's iteration bounds."""
+    """C7: the second round's `networks` table equals the reference-shaped
+    network_round over (caption_cluster, image_cluster) group ids
+    (dedupe_network, R/deduplicaters.R:860-930) row for row, and so
+    induces the tier-union partition of `assignments`.  It is read off
+    `assignments`, so a second-round run calls CC twice (assignments,
+    tier_clusters).  Each tier's clusters match the union-find oracle
+    over that tier's edges."""
+    from pyspark.sql import functions as F
+
     from who_owns_mass_processing_spark.operators import network
     from who_owns_mass_processing_spark.operators.connected_components import (
         components_py,
         connected_components,
     )
+    from who_owns_mass_processing_spark.operators.network import network_round
     from who_owns_mass_processing_spark.pipeline import run
 
     calls = []
 
     def recording_cc(*args, **kwargs):
-        calls.append(kwargs)
+        calls.append(args)
         return connected_components(*args, **kwargs)
 
     monkeypatch.setattr(run, "connected_components", recording_cc)
     monkeypatch.setattr(network, "connected_components", recording_cc)
-    cfg = DedupeConfig(cc_checkpoint_every=4)
     workdir = str(tmp_path_factory.mktemp("stages_c7"))
     images = spark.read.parquet(synth_small["images"])
-    out = run_pipeline(spark, images, workdir, cfg, second_round=True)
-    assert len(calls) == 3  # assignments, tier_clusters, networks
-    for kw in calls:
-        assert kw.get("max_iterations") == cfg.cc_max_iterations
-        assert kw.get("checkpoint_every") == cfg.cc_checkpoint_every
+    if ids == "mixed_utf8":
+        prefix = F.element_at(
+            F.array(*map(F.lit, _ID_PREFIXES)),
+            (F.pmod(F.xxhash64("image_id"), F.lit(len(_ID_PREFIXES))) + 1).cast("int"),
+        )
+        images = images.withColumn("image_id", F.concat(prefix, F.upper("image_id")))
+    out = run_pipeline(spark, images, workdir, DedupeConfig(), second_round=True)
+    assert len(calls) == 2  # assignments, tier_clusters
+
+    want = network_round(out["tier_clusters"], ["caption_cluster", "image_cluster"])
+    assert out["networks"].columns == want.columns
+    assert sorted(map(tuple, out["networks"].collect())) == sorted(
+        map(tuple, want.collect())
+    )
 
     rows = out["networks"].toPandas().set_index("image_id")
-    ids = list(rows.index)
+    image_ids = list(rows.index)
 
     def oracle(*tables):
         pairs = [(r.a, r.b) for t in tables for r in out[t].select("a", "b").collect()]
-        return components_py(pairs, ids)
+        return components_py(pairs, image_ids)
 
     assert rows.caption_cluster.to_dict() == oracle("caption_pairs")
     assert rows.image_cluster.to_dict() == oracle("image_pairs", "image_exact_edges")

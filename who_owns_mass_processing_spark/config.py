@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -49,14 +49,6 @@ class DedupeConfig:
     stop_band_min: int = 200           # absolute floor for the stop-band drop threshold
     stop_band_frac: float = 0.05       # bucket holding > frac of the corpus = degenerate
     band_bucket_hard_cap: int = 100000 # absolute ceiling regardless of corpus size
-
-    # --- clustering ---------------------------------------------------------
-    cc_max_iterations: int = 50        # label-propagation fixpoint bound
-    cc_checkpoint_every: int = 5       # localCheckpoint cadence (lineage cut)
-
-    # --- execution ----------------------------------------------------------
-    shuffle_partitions: int = 32
-    arrow_max_records_per_batch: int = 128   # image `bytes` rows are large (see session.py)
 
     def fingerprint(self) -> str:
         """Stable hash of all semantic knobs — the checkpoint cache key."""

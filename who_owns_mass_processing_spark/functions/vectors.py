@@ -116,7 +116,6 @@ def ann_lsh_pairs(
     n_bits: int = 8,
     n_tables: int = 8,
     seed: int = 42,
-    probe_hamming1: bool = True,
     cap: int = 2000,
     hard_cap: int = 100000,
 ) -> DataFrame:
@@ -152,15 +151,12 @@ def ann_lsh_pairs(
     # no-op at scale, see spread_small_input)
     slim = spread_small_input(df, [id_col, vec_col])
     b = slim.select(id_col, F.posexplode(budf(F.col(vec_col))).alias("band_id", "bucket"))
-    if probe_hamming1:
-        masks = F.array(*[F.lit(1 << j).cast("long") for j in range(n_bits)])
-        probes = F.array_union(
-            F.array(F.col("bucket")),
-            F.transform(masks, lambda m: F.col("bucket").bitwiseXOR(m)),
-        )
-        b = b.select(id_col, "band_id", F.explode(probes).alias("band_hash"))
-    else:
-        b = b.select(id_col, "band_id", F.col("bucket").alias("band_hash"))
+    masks = F.array(*[F.lit(1 << j).cast("long") for j in range(n_bits)])
+    probes = F.array_union(
+        F.array(F.col("bucket")),
+        F.transform(masks, lambda m: F.col("bucket").bitwiseXOR(m)),
+    )
+    b = b.select(id_col, "band_id", F.explode(probes).alias("band_hash"))
     # pin the band table: candidate_pairs consumes it twice (census +
     # cell build) and each pass would re-run the bucket UDF + probe
     # explode; the table itself is (id, int, long) — tiny
@@ -252,25 +248,6 @@ def ann_topk_bruteforce(
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
-
-
-def fit_ivf_centroids(
-    df: DataFrame, vec_col: str, n_cells: int, seed: int = 42, max_iter: int = 20
-) -> np.ndarray:
-    """IVF coarse quantizer: k-means centroids over the corpus (Spark ML
-    KMeans — distributed Lloyd iterations; deterministic for a fixed
-    seed + input).  Returns an (n_cells, dim) ndarray small enough to
-    ride into UDF closures (it is the 'index' that would be broadcast
-    cluster-wide at 10^12 scale: n_cells ~ sqrt(n) cells of ~sqrt(n)
-    vectors each)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = df.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("_fv"))
-    model = KMeans(
-        k=n_cells, seed=seed, maxIter=max_iter, featuresCol="_fv", initMode="k-means||"
-    ).fit(feats)
-    return np.array([np.asarray(c) for c in model.clusterCenters()])
 
 
 def fit_ivf_centroids_local(vectors: np.ndarray, n_cells: int, seed: int = 42,
@@ -369,8 +346,8 @@ def load_ivf_centroids(cent_path: str) -> np.ndarray:
 
 def cell_assign_udf(centroids: np.ndarray, n_probe: int):
     """pandas UDF: vector -> array of the `n_probe` nearest cell ids
-    (L2 to centroids, one matmul per Arrow batch).  n_probe=1 for corpus
-    assignment, >1 for query-side probing."""
+    (L2 to centroids, one matmul per Arrow batch) — the query-side
+    probe of `ivf_topk`."""
     from pyspark.sql.types import ArrayType, IntegerType
 
     cents = centroids.astype(np.float64)
@@ -397,11 +374,9 @@ def ivf_topk(
     qid_col: str,
     qvec_col: str,
     k: int,
-    n_cells: int = 16,
+    centroids: np.ndarray,
+    cell_assignments: DataFrame,
     n_probe: int = 4,
-    seed: int = 42,
-    centroids: np.ndarray | None = None,
-    cell_assignments: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: the k-means-cell alternative to the
     hyperplane-LSH scale path (brief: 'IVF or LSH-bucketed variant').
@@ -413,29 +388,18 @@ def ivf_topk(
     probed-query side is the small broadcast join input, so serving cost
     is |queries| x n_probe x cell-size, never |corpus|.
 
-    `cell_assignments` (id_col, cell) is the persisted posting-list
-    table from `build_ivf_index` — the production shape: the index is
-    built once, and serving joins it instead of re-deriving cells (the
-    fit-per-invocation fallback remains for ad-hoc use).  With the
-    index materialized the serving half IS SQL-expressible, so the
-    driver row carries a DuckDB oracle over the same artifact
-    (VERDICT r4 #5; previously declared no-oracle)."""
+    `centroids` and `cell_assignments` (id_col, cell) are the persisted
+    index from `build_ivf_index` (`load_ivf_centroids` + the posting-list
+    table): the index is fit once, with seeded numpy, and serving joins
+    it instead of re-deriving cells.  With the index materialized the
+    serving half IS SQL-expressible, so the driver row carries a DuckDB
+    oracle over the same artifact (VERDICT r4 #5)."""
     from pyspark.sql import Window
 
-    if centroids is None:
-        centroids = fit_ivf_centroids(corpus, vec_col, n_cells, seed)
     probe = cell_assign_udf(centroids, n_probe)
-    if cell_assignments is not None:
-        cells = corpus.join(cell_assignments, id_col).select(
-            F.col(id_col), F.col(vec_col).alias("_cv"),
-            F.col("cell").alias("_cell"),
-        )
-    else:
-        assign1 = cell_assign_udf(centroids, 1)
-        cells = corpus.select(
-            F.col(id_col), F.col(vec_col).alias("_cv"),
-            F.element_at(assign1(F.col(vec_col)), 1).alias("_cell"),
-        )
+    cells = corpus.join(cell_assignments, id_col).select(
+        F.col(id_col), F.col(vec_col).alias("_cv"), F.col("cell").alias("_cell"),
+    )
     qprobes = queries.select(
         F.col(qid_col), F.col(qvec_col).alias("_qv"),
         F.explode(probe(F.col(qvec_col))).alias("_cell"),

@@ -30,11 +30,10 @@ Physical strategy (the part that must survive 100 TB):
   * Every pair comes out of ONE vectorized Arrow generator
     (`_cell_pairs`, mapInArrow), NOT a self-join: a cell of n rows is
     one array row and emits its C(n,2) pairs as numpy index arithmetic
-    plus one Arrow `take` per side.  An optional numpy `predicate`
-    filters the index arrays before any id is taken (e.g.
-    popcount-Hamming <= r for pHash bands): failing pairs are never
-    materialized (measured: 17.5M candidates -> 38k emitted pairs on
-    the 280k-image bench).
+    plus one Arrow `take` per side.  For pHash bands the popcount
+    Hamming check filters the index arrays before any id is taken:
+    failing pairs are never materialized (measured: 17.5M candidates ->
+    38k emitted pairs on the 280k-image bench).
   * Cross-cell pairs of split buckets: a cell-level self-join
     (salt_l < salt_r) feeds the same generator, which emits the full
     left x right product — no row-level join, each cell-pair task does
@@ -83,8 +82,8 @@ def spread_small_input(df: DataFrame, columns: list[str] | None = None) -> DataF
     return slim
 
 
-def with_surrogate_ids(df: DataFrame, sid_col: str = "_sid") -> DataFrame:
-    """Attach an 8-byte surrogate id and PIN the mapping (eager
+def with_surrogate_ids(df: DataFrame) -> DataFrame:
+    """Attach an 8-byte surrogate id `_sid` and PIN the mapping (eager
     localCheckpoint), so every blocking/verify consumer sees the same
     id <-> surrogate bijection.
 
@@ -106,9 +105,7 @@ def with_surrogate_ids(df: DataFrame, sid_col: str = "_sid") -> DataFrame:
     ids, and every emitted pair is exact-verified, so the pair SET is
     invariant (pytest-pinned bit-identical in tests/test_blocking.py).
     """
-    return df.withColumn(
-        sid_col, F.monotonically_increasing_id()
-    ).localCheckpoint(eager=True)
+    return df.withColumn("_sid", F.monotonically_increasing_id()).localCheckpoint(eager=True)
 
 
 def checkpointed_bytes(df: DataFrame) -> int | None:
@@ -131,26 +128,15 @@ def checkpointed_bytes(df: DataFrame) -> int | None:
     return None
 
 
-def decode_pair_ids(
-    pairs: DataFrame,
-    id_map: DataFrame,
-    id_col: str,
-    sid_col: str = "_sid",
-    ordered: bool = False,
-) -> DataFrame:
+def decode_pair_ids(pairs: DataFrame, id_map: DataFrame, id_col: str) -> DataFrame:
     """Map surrogate pair ids (a, b) back to original ids, keeping every
-    other column.  id_map: (sid_col, id_col), one row per id.  Unordered
-    pairs are re-normalized to a < b in ORIGINAL id order (surrogate
-    order is arbitrary); `ordered=True` preserves (a, b) direction
-    (asymmetric metrics like containment)."""
+    other column.  id_map: (_sid, id_col), one row per id.  Pairs are
+    re-normalized to a < b in ORIGINAL id order (surrogate order is
+    arbitrary)."""
     keep = [c for c in pairs.columns if c not in ("a", "b")]
-    da = id_map.select(F.col(sid_col).alias("a"), F.col(id_col).alias("_ida"))
-    db = id_map.select(F.col(sid_col).alias("b"), F.col(id_col).alias("_idb"))
+    da = id_map.select(F.col("_sid").alias("a"), F.col(id_col).alias("_ida"))
+    db = id_map.select(F.col("_sid").alias("b"), F.col(id_col).alias("_idb"))
     out = pairs.join(da, "a").join(db, "b")
-    if ordered:
-        return out.select(
-            F.col("_ida").alias("a"), F.col("_idb").alias("b"), *keep
-        )
     return out.select(
         F.least("_ida", "_idb").alias("a"),
         F.greatest("_ida", "_idb").alias("b"),
@@ -214,7 +200,7 @@ def _cross_pairs_np(nl: np.ndarray, nr: np.ndarray) -> tuple[np.ndarray, np.ndar
     return cell, r // w, r % w
 
 
-def _cell_pairs(cells: DataFrame, id_type, cross: bool, predicate, value) -> DataFrame:
+def _cell_pairs(cells: DataFrame, id_type, cross: bool, radius: int | None) -> DataFrame:
     """Every candidate pair of a cell table as ONE vectorized Arrow pass
     (guide §4.2).  `cells` holds `items` (within-cell: C(n,2) pairs,
     a < b by the id sort of the array) or `items_l`, `items_r` (two
@@ -222,15 +208,13 @@ def _cell_pairs(cells: DataFrame, id_type, cross: bool, predicate, value) -> Dat
     by an Arrow comparison — UTF-8 byte order for strings, as Spark
     sorts them).  Each batch is numpy index arithmetic plus one `take`
     per side; items stay zero-copy (list offsets + flat child arrays).
-    The numpy `predicate(payload_a, payload_b) -> bool mask` filters the
-    index arrays BEFORE any id is taken, and `value(payload_a,
-    payload_b)` is computed only for the surviving pairs, as int `v`.
+    With a `radius`, the payloads are 64-bit hashes: one popcount per
+    pair filters the index arrays to Hamming <= radius BEFORE any id is
+    taken, and the surviving distances are emitted as int `hamming`.
     Output pair batches are budgeted to ~4M rows so one batch of large
     cells cannot buffer unboundedly."""
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    use_payload = predicate is not None or value is not None
 
     def gen(batches):
         budget = 4_000_000
@@ -244,7 +228,7 @@ def _cell_pairs(cells: DataFrame, id_type, cross: bool, predicate, value) -> Dat
             if int(P.sum()) == 0:
                 continue
             ids_l, ids_r = left.values.field("id"), right.values.field("id")
-            if use_payload:
+            if radius is not None:
                 pay_l = left.values.field("payload").to_numpy(zero_copy_only=False)
                 pay_r = right.values.field("payload").to_numpy(zero_copy_only=False)
             cum = np.cumsum(P)
@@ -260,9 +244,10 @@ def _cell_pairs(cells: DataFrame, id_type, cross: bool, predicate, value) -> Dat
                 I = offs_l[start:end][cell] + i
                 J = offs_r[start:end][cell] + j
                 start = end
-                if predicate is not None:
-                    keep = predicate(pay_l[I], pay_r[J])
-                    I, J = I[keep], J[keep]
+                if radius is not None:
+                    ham = popcount64_np(pay_l[I] ^ pay_r[J])
+                    keep = ham <= radius
+                    I, J, ham = I[keep], J[keep], ham[keep]
                 if len(I) == 0:
                     continue
                 a, b = ids_l.take(pa.array(I)), ids_r.take(pa.array(J))
@@ -270,14 +255,14 @@ def _cell_pairs(cells: DataFrame, id_type, cross: bool, predicate, value) -> Dat
                     swap = pc.greater(a, b)
                     a, b = pc.if_else(swap, b, a), pc.if_else(swap, a, b)
                 arrays, names = [a, b], ["a", "b"]
-                if value is not None:
-                    arrays.append(pa.array(value(pay_l[I], pay_r[J]), type=pa.int32()))
-                    names.append("v")
+                if radius is not None:
+                    arrays.append(pa.array(ham, type=pa.int32()))
+                    names.append("hamming")
                 yield pa.RecordBatch.from_arrays(arrays, names)
 
     fields = [StructField("a", id_type), StructField("b", id_type)]
-    if value is not None:
-        fields.append(StructField("v", IntegerType()))
+    if radius is not None:
+        fields.append(StructField("hamming", IntegerType()))
     cols = ["items_l", "items_r"] if cross else ["items"]
     return cells.select(*cols).mapInArrow(gen, StructType(fields))
 
@@ -287,36 +272,27 @@ def candidate_pairs(
     id_col: str,
     cap: int = 500,
     hard_cap: int = 100000,
-    payload_col: str | None = None,
-    predicate=None,
-    value=None,
-    value_col: str | None = None,
+    hash_col: str | None = None,
+    radius: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """(band_id, band_hash, id [, payload]) -> distinct candidate pairs
+    """(band_id, band_hash, id [, hash]) -> distinct candidate pairs
     (a < b).
 
-    payload_col/predicate: verification fused into generation —
-    predicate(payload_a, payload_b) maps two numpy payload arrays to a
-    bool mask, and pairs failing it are never emitted.
+    hash_col/radius: Hamming verification fused into generation — pairs
+    whose 64-bit `hash_col` values differ in more than `radius` bits are
+    never emitted, and the distance rides along as `hamming`, so
+    consumers need no feature re-join to recover it.  Cross-band
+    duplicates carry the identical distance (a pure function of the two
+    hashes), so the dedup aggregation takes min(hamming) == the value.
 
-    value (+ value_col): an ORDER-INVARIANT, payload-deterministic
-    per-pair int value (numpy payload arrays -> int array, e.g. the
-    fused Hamming distance) emitted alongside (a, b) — consumers then
-    need no feature re-join to recover what the predicate already
-    computed.  Cross-band duplicates carry identical values (pure
-    function of the two payloads), so the dedup aggregation takes
-    min(value) == the value.
-
-    Returns (pairs(a, b[, value_col]), skew_metrics) — skew_metrics has
+    Returns (pairs(a, b[, hamming]), skew_metrics) — skew_metrics has
     one row per bucket class (kept / salted / dropped_stop_band) with
     bucket/row counts (feeds the metrics table).
     """
-    if value_col is not None and (value is None or payload_col is None):
-        raise ValueError("value_col requires value and payload_col")
-    if value_col is None:
-        value = None
     cap = min(cap, hard_cap)  # stop threshold may undercut the salt cap
-    payload = F.col(payload_col) if payload_col else F.lit(0)
+    if hash_col is None:
+        radius = None
+    payload = F.col(hash_col) if hash_col else F.lit(0)
     item = F.struct(F.col(id_col).alias("id"), payload.alias("payload"))
 
     # census of DUP buckets only (bucket_n >= 2): singleton buckets
@@ -363,7 +339,7 @@ def candidate_pairs(
         cells = cells.localCheckpoint(eager=True)
 
     id_type = bands_df.schema[id_col].dataType
-    pairs = _cell_pairs(cells, id_type, False, predicate, value)
+    pairs = _cell_pairs(cells, id_type, False, radius)
     if has_salted:
         multi = cells.where(F.col("m") > 1)
         cl = multi.select(
@@ -373,11 +349,11 @@ def candidate_pairs(
             "band_id", "band_hash", F.col("salt").alias("salt_r"), F.col("items").alias("items_r")
         )
         cell_pairs = cl.join(cr, ["band_id", "band_hash"]).where(F.col("salt_l") < F.col("salt_r"))
-        pairs = pairs.unionByName(_cell_pairs(cell_pairs, id_type, True, predicate, value))
-    if value is not None:
-        # duplicates of a pair carry the identical value (pure function
-        # of the two payloads): min == the value, partial-agg'd map-side
-        pairs = pairs.groupBy("a", "b").agg(F.min("v").alias(value_col))
+        pairs = pairs.unionByName(_cell_pairs(cell_pairs, id_type, True, radius))
+    if radius is not None:
+        # duplicates of a pair carry the identical distance (pure function
+        # of the two hashes): min == the value, partial-agg'd map-side
+        pairs = pairs.groupBy("a", "b").agg(F.min("hamming").alias("hamming"))
     else:
         pairs = pairs.groupBy("a", "b").agg(F.lit(1).alias("_one")).drop("_one")
 
@@ -442,15 +418,8 @@ def hamming_pairs(
     alongside each surviving pair — consumers read the `hamming` column
     instead of re-joining the hash table twice to recompute
     bit_count(xor) (guide §2.4: the value was already computed inside
-    the fused predicate).
+    the fused check).
     Returns (pairs(a, b, hamming), metrics)."""
-    def within_radius(pa_: np.ndarray, pb_: np.ndarray) -> np.ndarray:
-        return popcount64_np(pa_ ^ pb_) <= radius
-
-    def distance(pa_: np.ndarray, pb_: np.ndarray) -> np.ndarray:
-        return popcount64_np(pa_ ^ pb_)
-
     return candidate_pairs(
-        bands_df, id_col, cap=cap, hard_cap=hard_cap, payload_col=hash_col,
-        predicate=within_radius, value=distance, value_col="hamming",
+        bands_df, id_col, cap=cap, hard_cap=hard_cap, hash_col=hash_col, radius=radius
     )

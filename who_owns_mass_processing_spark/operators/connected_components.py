@@ -15,11 +15,9 @@ Scale properties:
     groupBy min — both partial-aggregated; near-dup similarity graphs
     have tiny diameters (dup families), so iterations ~ O(log n) and in
     practice < 10;
-  * lineage is cut with localCheckpoint every `checkpoint_every`
+  * lineage is cut with localCheckpoint every `CHECKPOINT_EVERY`
     iterations (Catalyst has no fixpoint operator; an unbounded plan tree
-    would blow the driver — SURVEY.md §4 "Iteration");
-  * optionally each iteration's labels persist to the stage catalog so a
-    killed run resumes mid-fixpoint (pipeline/checkpoint.py).
+    would blow the driver — SURVEY.md §4 "Iteration").
 """
 
 from __future__ import annotations
@@ -41,13 +39,17 @@ from who_owns_mass_processing_spark.operators.blocking import checkpointed_bytes
 # scale the edge list is GBs+ and this is a no-op.
 _CC_TARGET_PARTITION_BYTES = 8 << 20
 
+# Fixpoint bounds.  Near-dup graphs converge in a handful of iterations;
+# MAX_ITERATIONS only stops a runaway loop (with a warning), and
+# CHECKPOINT_EVERY is the driver-sync / lineage-cut cadence (see the loop).
+MAX_ITERATIONS = 50
+CHECKPOINT_EVERY = 5
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "a",
     dst: str = "b",
-    max_iterations: int = 50,
-    checkpoint_every: int = 5,
     nodes: DataFrame | None = None,
 ) -> DataFrame:
     """edges(src, dst) [+ optional nodes(node) for singletons]
@@ -106,14 +108,14 @@ def connected_components(
 
     # Driver-sync cost dominates this loop at bench scale (round-1 bench:
     # an eager localCheckpoint + a convergence collect EVERY iteration was
-    # 32s of an 80s total).  Batch both on the `checkpoint_every` cadence:
+    # 32s of an 80s total).  Batch both on the `CHECKPOINT_EVERY` cadence:
     # between checkpoints the plan grows by one join per iteration (depth
-    # <= checkpoint_every — bounded), and convergence is only *checked*
+    # <= CHECKPOINT_EVERY — bounded), and convergence is only *checked*
     # when the lineage is cut.  One extra batch of iterations may run
     # after the true fixpoint; min-label propagation is idempotent, so
     # the result is identical.
     changed = -1
-    for it in range(2, max_iterations + 1):  # iteration 1 = the fold above
+    for it in range(2, MAX_ITERATIONS + 1):  # iteration 1 = the fold above
         # neighbor minimum: join edges to current labels of v, min per u
         neigh = (
             und.join(labels.withColumnRenamed("node", "v"), "v")
@@ -135,10 +137,10 @@ def connected_components(
         # the it=2 pointer jump doubles the reach — measured: skipping
         # straight from 2 to the cadence at 5 ran three dead join
         # rounds + their materialization per call).  Deep chains still
-        # batch `checkpoint_every` iterations per driver sync, so the
+        # batch `CHECKPOINT_EVERY` iterations per driver sync, so the
         # round-1 driver-sync lesson (one eager checkpoint + collect
         # per iteration cost 32 s of an 80 s bench) is preserved.
-        if it in (2, 3) or it % checkpoint_every == 0 or it == max_iterations:
+        if it in (2, 3) or it % CHECKPOINT_EVERY == 0 or it == MAX_ITERATIONS:
             new_labels = new_labels.localCheckpoint(eager=True)
             changed = new_labels.agg(
                 F.sum(F.col("_changed").cast("long"))
@@ -170,9 +172,9 @@ def connected_components(
         import warnings
 
         warnings.warn(
-            f"connected_components: not converged after {max_iterations} "
+            f"connected_components: not converged after {MAX_ITERATIONS} "
             "iterations — components wider than the iteration budget are "
-            "split; raise max_iterations",
+            "split; raise MAX_ITERATIONS",
             stacklevel=2,
         )
     return labels.select("node", F.col("label").alias("component"))

@@ -491,6 +491,6 @@ def simhash_near_dup_pairs(
     bands = phash_bands(sh, "simhash", "_sid", n_bands=n_bands)
     # hamming_pairs emits the fused popcount distance with each pair —
     # the two feature re-joins that recomputed bit_count(xor) are gone
-    # (the generator predicate already guarantees hamming <= radius)
+    # (the generator already guarantees hamming <= radius)
     cands, _ = hamming_pairs(bands, "_sid", "simhash", radius)
     return decode_pair_ids(cands, sh.select("_sid", id_col), id_col)

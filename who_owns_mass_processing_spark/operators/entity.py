@@ -104,10 +104,7 @@ def dedupe_entities(
         .select("a", "b")
     )
 
-    cc = connected_components(
-        tiered, max_iterations=cfg.cc_max_iterations,
-        checkpoint_every=cfg.cc_checkpoint_every,
-    )
+    cc = connected_components(tiered)
     assignments = with_singletons(df.select(id_col), id_col, cc).select(
         F.col("node").alias(id_col), F.col("component").alias("cluster_id")
     )

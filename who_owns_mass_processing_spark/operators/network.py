@@ -37,8 +37,6 @@ def network_round(
     df: DataFrame,
     group_cols: list[str],
     out_col: str = "network_id",
-    max_iterations: int = 50,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """df(+group id columns) -> df + `out_col`.
 
@@ -74,12 +72,7 @@ def network_round(
         nodes = part if nodes is None else nodes.unionByName(part)
     nodes = nodes.distinct()
 
-    cc = connected_components(
-        edges,
-        max_iterations=max_iterations,
-        checkpoint_every=checkpoint_every,
-        nodes=nodes,
-    )
+    cc = connected_components(edges, nodes=nodes)
 
     # attach via the first non-null group id of each row
     first_typed = F.coalesce(*typed)

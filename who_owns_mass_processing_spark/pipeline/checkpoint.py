@@ -8,12 +8,10 @@ and it is the backbone of our resumability contract (north_rule:
 "resumable from Iceberg snapshot checkpoints with per-partition lineage
 and metrics tables").
 
-Implementation: when an Iceberg catalog is present, stages write
-`df.writeTo(f"local.db.{run}_{stage}").createOrReplace()` and the
-snapshot id is recorded.  This sandbox has no Iceberg runtime jar, so
-the default backend is a parquet stage directory + `_MANIFEST.json`
-carrying the same contract: config fingerprint, stage name, row count,
-schema, and a monotonically increasing snapshot counter.  A killed run
+Implementation: the only backend is a parquet stage directory per
+stage plus `_MANIFEST.json`, which carries the snapshot contract an
+Iceberg table would: config fingerprint, stage name, row count, schema,
+and a monotonically increasing snapshot counter.  A killed run
 re-executes only stages whose manifest entry is missing or whose
 fingerprint differs — byte-identical outputs are guaranteed because every
 stage is deterministic (seeded hashes, stable orderings).
@@ -103,8 +101,8 @@ class StageCatalog:
         A kill at ANY point leaves either (old data + old manifest entry)
         or (no manifest entry -> stage recomputes on resume) — never a
         manifest entry pointing at partial data (the killed-run resume
-        contract; Iceberg gives this via snapshot commit, the parquet
-        backend via rename)."""
+        contract; an Iceberg table would give this via snapshot commit,
+        the parquet stage catalog gives it via rename)."""
         import shutil
 
         path = self._stage_path(stage)

@@ -25,7 +25,11 @@ With `second_round`:
 
   tier_clusters   (image_id, caption_cluster, image_cluster): each tier's
                   components, from one CC over prefix-tagged tier edges
-  networks        CC over the (caption_cluster, image_cluster) group ids
+  networks        tier_clusters + network_id = "caption_cluster=" +
+                  assignments.cluster_id: the label a CC over the typed
+                  (caption_cluster, image_cluster) group ids would give
+                  (`operators.network.network_round`, the test oracle),
+                  read off `assignments` instead of computed again
 """
 
 from __future__ import annotations
@@ -187,11 +191,7 @@ def run_pipeline(
         )
 
     def assignments(ingest, edges) -> DataFrame:
-        cc = connected_components(
-            edges.select("a", "b").distinct(),
-            max_iterations=cfg.cc_max_iterations,
-            checkpoint_every=cfg.cc_checkpoint_every,
-        )
+        cc = connected_components(edges.select("a", "b").distinct())
         return with_singletons(ingest, "image_id", cc).withColumnRenamed(
             "node", "image_id"
         ).withColumnRenamed("component", "cluster_id")
@@ -257,13 +257,16 @@ def run_pipeline(
     # --- optional C7 second network round --------------------------------------
     # Reference analog: community detection over GROUP ids rather than row
     # ids (dedupe_network over (company_group, officer group),
-    # R/deduplicaters.R:860-930).  Each tier is clustered on its own,
-    # then connected components run over the bipartite graph of
-    # (caption_cluster, image_cluster) — mathematically this fuses the
-    # same components as the tier-union CC above (pinned by
-    # tests/test_pipeline.py), but it is the reference's staged shape and
-    # the group graph is orders of magnitude smaller than the row graph
-    # at scale.
+    # R/deduplicaters.R:860-930).  There the two group columns come from
+    # two different entity dedups; here both tiers cluster the same
+    # images over the edges `assignments` already clustered, so the
+    # networks are the tier-union components.  Their label needs no third
+    # CC: `network_round` labels a row with its component's min typed id,
+    #   * every image has a non-null caption_cluster,
+    #   * "caption_cluster=" sorts before "image_cluster=", and
+    #   * a shared prefix keeps the byte order of the ids behind it,
+    # so the min typed id is "caption_cluster=" + the component's min
+    # image_id, which is `assignments.cluster_id`.
     def tier_clusters(ingest, caption_pairs, image_pairs, image_exact_edges) -> DataFrame:
         # Both tiers' components come from ONE CC call: each tier's edges
         # carry a one-character prefix ("c" caption, "i" image), so the
@@ -279,9 +282,7 @@ def run_pipeline(
             image_exact_edges.select("a", "b")
         )
         cc = connected_components(
-            tagged(caption_pairs, "c").unionByName(tagged(image_edges, "i")).distinct(),
-            max_iterations=cfg.cc_max_iterations,
-            checkpoint_every=cfg.cc_checkpoint_every,
+            tagged(caption_pairs, "c").unionByName(tagged(image_edges, "i")).distinct()
         )
         tier = F.substring("node", 1, 1)
 
@@ -297,14 +298,10 @@ def run_pipeline(
             *(F.coalesce(c, "image_id").alias(c) for c in ("caption_cluster", "image_cluster")),
         )
 
-    def networks(tier_clusters) -> DataFrame:
-        from who_owns_mass_processing_spark.operators.network import network_round
-
-        return network_round(
-            tier_clusters,
-            ["caption_cluster", "image_cluster"],
-            max_iterations=cfg.cc_max_iterations,
-            checkpoint_every=cfg.cc_checkpoint_every,
+    def networks(tier_clusters, assignments) -> DataFrame:
+        return tier_clusters.join(assignments, "image_id").select(
+            *tier_clusters.columns,
+            F.concat(F.lit("caption_cluster="), "cluster_id").alias("network_id"),
         )
 
     stages = [

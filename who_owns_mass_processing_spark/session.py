@@ -93,8 +93,6 @@ def get_spark(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     warehouse: str | None = None,
-    arrow_batch: int = 4096,
-    arrow_batch_bytes: str = "16m",
 ) -> SparkSession:
     cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
@@ -115,14 +113,11 @@ def get_spark(
         # parallelismFirst mode intends (target = max(bytes/parallelism,
         # floor)) while staying inert at production partition sizes,
         # where post-shuffle partitions are >> 1 MB anyway.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", arrow_batch_bytes)
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", "16m")
         # Vectorized parquet reader batch: the default 4096 rows means a
         # scan task holds ~400 MB of column vectors when rows carry a
         # ~100 KB `bytes` payload — at 32 concurrent tasks that is
@@ -134,10 +129,7 @@ def get_spark(
         # nothing measurable on narrow tables.  Same philosophy as the
         # small Arrow batch above: batch *bytes*, not batch rows, is the
         # invariant when a binary payload column is in flight.
-        .config(
-            "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("SPARK_GRAFT_READER_BATCH", "256"),
-        )
+        .config("spark.sql.parquet.columnarReaderBatchSize", "256")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # Tungsten execution memory off-heap: on-heap task pages are 64 MB
