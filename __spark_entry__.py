@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from who_owns_mass_processing_spark.config import DedupeConfig
 from who_owns_mass_processing_spark.functions import text as T
-from who_owns_mass_processing_spark.functions.vectors import cosine
+from who_owns_mass_processing_spark.functions import vectors as V
 from who_owns_mass_processing_spark.operators import canonical as C
 from who_owns_mass_processing_spark.operators import dedupe as D
 from who_owns_mass_processing_spark.operators import joins as J
@@ -329,14 +329,16 @@ def q_dedup_cc_assignments(spark, sf_dir):
     """Full dedup chain: LSH edges -> connected components -> singletons.
 
     CC consumes the connectivity-only edge list (`lsh_near_dup_edges`:
-    rep-level LSH pairs + linear star edges for exact-dup families) —
+    rep-level LSH pairs + linear star edges for exact-dup families; the
+    images pipeline's caption tier is the same call) —
     the documented scale shape, with the SAME transitive closure as the
     quadratic pair listing (star edges connect a group, rep pairs
     connect groups), so assignments are identical (oracle hash-checked;
     the r6 restructure dropped the member-expansion joins and the
     within-group pair listing that CC never needed)."""
     d = _t(spark, sf_dir, "documents")
-    edges, _ = D.lsh_near_dup_edges(d, "doc_id", "text", CFG)
+    sigs = D.minhash_signatures(d, "doc_id", "text", CFG)
+    edges, _ = D.lsh_near_dup_edges(sigs, "doc_id", CFG)
     cc = connected_components(edges.select("a", "b"))
     out = C.with_singletons(d.select("doc_id"), "doc_id", cc)
     return out.select(
@@ -523,15 +525,7 @@ def q_prune_networks(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def q_embedding_cosine_pairs(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    a = e.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
-    b = e.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
-    sim = cosine(F.col("va"), F.col("vb"))
-    return (
-        a.join(b, F.col("a") < F.col("b"))
-        .select("a", "b", F.round(sim, 6).alias("cos_sim"))
-        .where(F.col("cos_sim") >= 0.45)
-    )
+    return V.cosine_pairs(_t(spark, sf_dir, "embeddings"), "vec_id", "embedding", 0.45)
 
 
 def q_embedding_topk(spark, sf_dir):
@@ -539,14 +533,8 @@ def q_embedding_topk(spark, sf_dir):
     q = e.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    joined = e.crossJoin(F.broadcast(q)).where(F.col("vec_id") != F.col("query_id"))
-    sim = F.round(cosine(F.col("embedding"), F.col("qvec")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        joined.select("query_id", "vec_id", sim.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-    )
+    top = V.ann_topk_bruteforce(e, q, "vec_id", "embedding", "query_id", "qvec", 5)
+    return top.withColumn("rank", F.col("rank").cast("long"))
 
 
 # ---------------------------------------------------------------------------

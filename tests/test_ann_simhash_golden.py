@@ -211,3 +211,16 @@ def test_ivf_persisted_index_deterministic(spark, tmp_path):
     assert first == out()
     assert len(first) == 15  # 3 queries x top-5
     shutil.rmtree(sf_dir)
+    for p in (cent_path, cells_path):
+        os.remove(p)
+
+
+def test_ivf_index_paths_differ_by_directory(tmp_path):
+    """Two corpus directories with the same basename get different index
+    paths, so neither serves the other's persisted index; one directory
+    reached by two spellings gets one."""
+    from who_owns_mass_processing_spark.functions.vectors import ivf_index_paths
+
+    one, two = tmp_path / "x" / "sf0.01", tmp_path / "y" / "sf0.01"
+    assert set(ivf_index_paths(str(one), 16, 42)).isdisjoint(ivf_index_paths(str(two), 16, 42))
+    assert ivf_index_paths(str(one), 16, 42) == ivf_index_paths(f"{one}/../sf0.01/", 16, 42)

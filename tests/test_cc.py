@@ -1,6 +1,7 @@
 """Connected components: known graphs, partition invariance, singletons."""
 import pandas as pd
 
+from who_owns_mass_processing_spark.operators.canonical import with_singletons
 from who_owns_mass_processing_spark.operators.connected_components import (
     components_py,
     connected_components,
@@ -11,10 +12,11 @@ def _cc(spark, edges, nodes=None, partitions=None):
     edf = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
     if partitions:
         edf = edf.repartition(partitions)
-    ndf = None
+    out = connected_components(edf)
     if nodes is not None:
         ndf = spark.createDataFrame(pd.DataFrame({"node": nodes}))
-    out = connected_components(edf, nodes=ndf).toPandas()
+        out = with_singletons(ndf, "node", out)
+    out = out.toPandas()
     return dict(zip(out.node, out.component))
 
 

@@ -10,6 +10,7 @@ from who_owns_mass_processing_spark.operators.dedupe import (
     lsh_near_dup_edges,
     lsh_near_dup_pairs,
     minhash_signatures,
+    representatives,
 )
 
 CFG = DedupeConfig(stop_band_min=10**6)  # tiny fixture: no drops
@@ -31,7 +32,7 @@ def _docs(spark):
 def test_pairs_and_edges_same_components(spark):
     df = _docs(spark)
     pairs, _ = lsh_near_dup_pairs(df, "doc_id", "text", CFG)
-    edges, _ = lsh_near_dup_edges(df, "doc_id", "text", CFG)
+    edges, _ = lsh_near_dup_edges(minhash_signatures(df, "doc_id", "text", CFG), "doc_id", CFG)
     nodes = [r[0] for r in df.select("doc_id").collect()]
     cp = components_py([(r.a, r.b) for r in pairs.collect()], nodes)
     ce = components_py([(r.a, r.b) for r in edges.collect()], nodes)
@@ -49,7 +50,7 @@ def test_pair_listing_includes_within_group_pairs(spark):
     for p in [(1, 2), (1, 4), (2, 4)]:
         assert got.get(p) == 1.0, (p, got)
     # edges variant lists only star edges for the group
-    edges, _ = lsh_near_dup_edges(df, "doc_id", "text", CFG)
+    edges, _ = lsh_near_dup_edges(minhash_signatures(df, "doc_id", "text", CFG), "doc_id", CFG)
     ge = {(r.a, r.b) for r in edges.collect()}
     assert (1, 2) in ge and (1, 4) in ge and (2, 4) not in ge
 
@@ -58,9 +59,15 @@ def test_exact_tier_pairs_vs_edges(spark):
     df = _docs(spark)
     sigs = minhash_signatures(df, "doc_id", "text", CFG)
     pairs = exact_fingerprint_pairs(sigs, "doc_id").toPandas()
-    edges = exact_fingerprint_edges(sigs, "doc_id").toPandas()
+    edges = exact_fingerprint_edges(sigs, "doc_id", "fingerprint").toPandas()
     assert len(pairs) == 4   # C(3,2)=3 for {1,2,4} + 1 for {5,6}
     assert len(edges) == 3   # star: 2 for {1,2,4} + 1 for {5,6}
+    # one representative per fingerprint, the min doc_id (the star
+    # centre), each with its own surrogate id
+    reps = representatives(sigs, "doc_id", "fingerprint").toPandas()
+    assert sorted(reps.doc_id) == [1, 3, 5, 7]
+    assert reps._sid.is_unique
+    assert set(edges.a) <= set(reps.doc_id)
 
 
 def test_winnow_pairs_detects_shared_runs(spark):

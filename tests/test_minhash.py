@@ -15,8 +15,8 @@ def test_udf_matches_python(spark):
     texts = ["hello world", "the quick brown fox", "aaa", ""]
     keys = MH.perm_params(CFG.num_perm, CFG.minhash_seed)
     df = spark.createDataFrame(pd.DataFrame({"t": texts}))
-    udf = MH.minhash_udf(CFG.shingle_k, CFG.num_perm, CFG.minhash_seed)
-    rows = df.select(udf(F.col("t")).alias("sig")).collect()
+    udf = MH.signature_udf(CFG.shingle_k, CFG.num_perm, CFG.minhash_seed)
+    rows = df.select(udf(F.col("t")).minhash.alias("sig")).collect()
     for t, row in zip(texts, rows):
         want = MH.minhash_py(t, CFG.shingle_k, keys)
         assert list(row[0]) == want.tolist(), t
@@ -43,8 +43,8 @@ def test_minhash_estimates_jaccard():
 
 def test_band_explode_shape_and_determinism(spark):
     df = spark.createDataFrame(pd.DataFrame({"id": ["x", "y"], "t": ["abc def", "abc def"]}))
-    udf = MH.minhash_udf(3, 16, 1)
-    sigs = df.select("id", udf(F.col("t")).alias("sig"))
+    udf = MH.signature_udf(3, 16, 1)
+    sigs = df.select("id", udf(F.col("t")).minhash.alias("sig"))
     bands = MH.band_explode(sigs, "sig", "id", bands=4, rows_per_band=4)
     pdf = bands.toPandas()
     assert len(pdf) == 8  # 2 ids x 4 bands
@@ -64,9 +64,13 @@ def test_empty_text_gets_sentinel_not_collisions():
 
 
 def test_estimate_gate_preserves_verified_pairs(spark):
-    """The minhash estimate gate in verify_jaccard must not change the
-    verified pair set — survivors get the exact intersect either way, and
-    the 6.5-sigma gate bound makes a true-pair drop ~impossible."""
+    """The minhash estimate gate in verify_jaccard must not drop a true
+    pair: the gated verify emits exactly the candidates whose exact
+    Jaccard over their shingle `codes` clears the threshold, with that
+    Jaccard rounded to 6 places (the 6.5-sigma gate bound makes a
+    true-pair drop ~impossible)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     from who_owns_mass_processing_spark.config import DedupeConfig
     from who_owns_mass_processing_spark.operators.blocking import candidate_pairs
     from who_owns_mass_processing_spark.operators.dedupe import minhash_signatures
@@ -87,12 +91,18 @@ def test_estimate_gate_preserves_verified_pairs(spark):
     bands = MH.band_explode(sigs, "minhash", "doc_id", cfg.bands, cfg.rows_per_band)
     cands, _ = candidate_pairs(bands, "doc_id")
     feats = sigs.select("doc_id", "codes", "minhash")
-    plain = verify_jaccard(cands, feats, "doc_id", "codes", cfg.jaccard_threshold)
     gated = verify_jaccard(
         cands, feats, "doc_id", "codes", cfg.jaccard_threshold,
         minhash_col="minhash", num_perm=cfg.num_perm,
     )
-    p = sorted(map(tuple, plain.collect()))
+    codes = {r.doc_id: set(r.codes) for r in feats.collect()}
+    exact = []
+    for a, b in cands.select("a", "b").collect():
+        j = len(codes[a] & codes[b]) / len(codes[a] | codes[b])
+        # Spark's round(double, 6): HALF_UP on the shortest decimal repr
+        j = float(Decimal(repr(j)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+        if j >= cfg.jaccard_threshold:
+            exact.append((a, b, j))
     g = sorted(map(tuple, gated.collect()))
-    assert p == g
-    assert len(p) > 0
+    assert g == sorted(exact)
+    assert len(g) > 0

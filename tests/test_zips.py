@@ -5,6 +5,7 @@ from __future__ import annotations
 import io
 import os
 import zipfile
+from pathlib import Path
 
 import pytest
 
@@ -66,7 +67,7 @@ def test_pyfiles_zip_importable(tmp_path):
     import subprocess
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     from make_pyfiles import build
 
     out = build(str(tmp_path / "pkg.zip"))

@@ -40,11 +40,10 @@ from bench import ensure_bench_images_parallel
 from who_owns_mass_processing_spark.session import get_spark, shuffle_write_bytes
 from who_owns_mass_processing_spark.config import DedupeConfig
 from who_owns_mass_processing_spark.functions.images import image_meta_udf, phash_combo_bands
-from who_owns_mass_processing_spark.operators.blocking import (
-    decode_pair_ids, hamming_pairs, with_surrogate_ids)
+from who_owns_mass_processing_spark.operators.blocking import decode_pair_ids, hamming_pairs
 from who_owns_mass_processing_spark.operators.connected_components import connected_components
 from who_owns_mass_processing_spark.operators.dedupe import (
-    exact_fingerprint_edges, minhash_signatures, rep_pairs_from_sigs)
+    exact_fingerprint_edges, lsh_near_dup_edges, minhash_signatures, representatives)
 from who_owns_mass_processing_spark.operators.verify import verify_psnr
 
 cfg = DedupeConfig()
@@ -81,15 +80,10 @@ def one_run():
     t0 = time.time()
     sw0 = shuffle_write_bytes(spark)
     stop = cfg.stop_band_threshold(n)
-    cap_rep_pairs, _ = rep_pairs_from_sigs(sigs, "image_id", cfg, corpus_rows=n)
-    cap_edges = cap_rep_pairs.select("a", "b").unionByName(
-        exact_fingerprint_edges(sigs, "image_id").select("a", "b"))
-    byte_reps = sigs.groupBy("byte_fp").agg(F.min("image_id").alias("image_id"))
-    # banding rides the 8-byte surrogate id (pipeline/run.py parity,
-    # VERDICT r4 #1: string ids were the block phase's dominant bytes)
-    reps_df = with_surrogate_ids(
-        sigs.join(byte_reps, ["image_id", "byte_fp"], "left_semi")
-        .select("image_id", "phash"))
+    # the pipeline's operators: caption edges, and one surrogate-id'd
+    # representative per byte hash for pHash blocking
+    cap_edges, _ = lsh_near_dup_edges(sigs, "image_id", cfg, corpus_rows=n)
+    reps_df = representatives(sigs.select("image_id", "byte_fp", "phash"), "image_id", "byte_fp")
     img_bands = phash_combo_bands(reps_df, "phash", "_sid",
                                   cfg.phash_bands, cfg.hamming_radius)
     # Hamming gate FUSED into pair generation (pipeline/run.py parity):
@@ -102,9 +96,8 @@ def one_run():
                                 reps_df.select("_sid", "image_id"), "image_id")
     img_ok = verify_psnr(img_pairs, images.select("image_id", "bytes", "fmt"),
                          "image_id", "bytes", "fmt", cfg.psnr_min_db)
-    byte_star = sigs.join(byte_reps.withColumnRenamed("image_id", "a"), "byte_fp").where(
-        F.col("image_id") != F.col("a")).select("a", F.col("image_id").alias("b"))
-    edges = (cap_edges.unionByName(img_ok.select("a", "b"))
+    byte_star = exact_fingerprint_edges(sigs, "image_id", "byte_fp").select("a", "b")
+    edges = (cap_edges.select("a", "b").unionByName(img_ok.select("a", "b"))
              .unionByName(byte_star).distinct().localCheckpoint(eager=True))
     t["edges"] = edges.count()
     t["block"] = time.time() - t0

@@ -111,18 +111,6 @@ def minhash_batch(
     return sigs, per_row
 
 
-def minhash_udf(k: int, num_perm: int, seed: int):
-    """pandas UDF: text -> array<long> MinHash signature (batched)."""
-    keys = perm_params(num_perm, seed)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(texts: pd.Series) -> pd.Series:
-        sigs, _ = minhash_batch(texts, k, keys)
-        return pd.Series(list(sigs))
-
-    return _udf
-
-
 def signature_udf(k: int, num_perm: int, seed: int):
     """pandas UDF: text -> struct(codes array<long>, minhash array<long>).
 

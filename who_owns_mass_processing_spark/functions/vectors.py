@@ -277,10 +277,16 @@ def fit_ivf_centroids_local(vectors: np.ndarray, n_cells: int, seed: int = 42,
 
 
 def ivf_index_paths(sf_dir: str, n_cells: int, seed: int) -> tuple[str, str]:
+    """(centroids, cells) paths of the index over `sf_dir`: named by the
+    directory's basename plus a short hash of its real path, so two
+    corpora whose directories share a basename never serve each other's
+    index."""
+    import hashlib
     import os
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    stem = f"/tmp/spark_graft_ivf_{base}_c{n_cells}_s{seed}"
+    real = os.path.realpath(sf_dir)
+    tag = hashlib.sha256(real.encode()).hexdigest()[:12]
+    stem = f"/tmp/spark_graft_ivf_{os.path.basename(real)}_{tag}_c{n_cells}_s{seed}"
     return f"{stem}_centroids.parquet", f"{stem}_cells.parquet"
 
 

@@ -46,14 +46,11 @@ MAX_ITERATIONS = 50
 CHECKPOINT_EVERY = 5
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "a",
-    dst: str = "b",
-    nodes: DataFrame | None = None,
-) -> DataFrame:
-    """edges(src, dst) [+ optional nodes(node) for singletons]
-    -> (node, component) where component = min node id in the component.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """edges(a, b) -> (node, component) where component = min node id
+    in the component.  Only nodes on an edge are labelled; callers give
+    edge-less rows their own id with a left join + coalesce
+    (`canonical.with_singletons`).
 
     Node ids may be any orderable type (string image_ids work).  Edges
     may repeat, in either direction: min-label propagation is correct
@@ -73,8 +70,8 @@ def connected_components(
     und = edges.select(
         F.explode(
             F.array(
-                F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
+                F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
             )
         ).alias("_e")
     ).select(F.col("_e.u").alias("u"), F.col("_e.v").alias("v"))
@@ -96,15 +93,8 @@ def connected_components(
     labels = und.groupBy("u").agg(F.min("v").alias("_mn")).select(
         F.col("u").alias("node"), F.least("u", "_mn").alias("label")
     )
-    if nodes is not None:
-        labels = (
-            nodes.select(F.col(nodes.columns[0]).alias("node"))
-            .distinct()
-            .join(labels, "node", "left")
-            .select("node", F.coalesce("label", "node").alias("label"))
-        )
-    # labels derive from the checkpointed `und` (plus the optional nodes
-    # side) with one cheap aggregation — no second eager barrier needed
+    # labels derive from the checkpointed `und` with one cheap
+    # aggregation — no second eager barrier needed
 
     # Driver-sync cost dominates this loop at bench scale (round-1 bench:
     # an eager localCheckpoint + a convergence collect EVERY iteration was

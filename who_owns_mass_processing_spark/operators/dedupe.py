@@ -93,16 +93,34 @@ def exact_fingerprint_pairs(sigs: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def exact_fingerprint_edges(sigs: DataFrame, id_col: str) -> DataFrame:
-    """STAR edges (member -> group-min) for identical normalized text:
-    linear in group size, same connected components as the all-pairs
-    version — the scale path for the clustering tiers (a 10^7-member
-    identical-caption group yields 10^7-1 edges, not 10^13 pairs)."""
-    mins = sigs.groupBy("fingerprint").agg(F.min(id_col).alias("a"))
+def exact_fingerprint_edges(df: DataFrame, id_col: str, key_col: str) -> DataFrame:
+    """STAR edges (member -> group-min) for rows sharing `key_col` (a
+    text fingerprint, an image byte hash): linear in group size, same
+    connected components as the all-pairs version — the scale path for
+    the clustering tiers (a 10^7-member identical-caption group yields
+    10^7-1 edges, not 10^13 pairs).  Rows with a NULL key get no edge."""
+    mins = df.groupBy(key_col).agg(F.min(id_col).alias("a"))
     return (
-        sigs.join(mins, "fingerprint")
+        df.join(mins, key_col)
         .where(F.col(id_col) != F.col("a"))
         .select("a", F.col(id_col).alias("b"), F.lit(1.0).alias("jaccard"))
+    )
+
+
+def representatives(df: DataFrame, id_col: str, key_col: str) -> DataFrame:
+    """One representative row per distinct `key_col`: the min-`id_col`
+    row, selected with ONE shuffle (a window rank over the key
+    partition; a groupBy-then-semi-join shuffles the table twice for the
+    same selection), plus a pinned 8-byte surrogate id `_sid`
+    (`with_surrogate_ids`: its checkpoint serves banding AND verify).
+
+    Identical keys carry identical features, so only representatives
+    enter blocking: member multiplicity never reaches a band bucket, and
+    rep-level verdicts hold for every member.  Within-key links are the
+    star edges' job (`exact_fingerprint_edges`)."""
+    w = Window.partitionBy(key_col).orderBy(F.col(id_col).asc())
+    return with_surrogate_ids(
+        df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
     )
 
 
@@ -129,18 +147,7 @@ def rep_pairs_from_sigs(
     original ids doubles as the fingerprint-attach join the output
     needed anyway, so the surrogate path adds ZERO extra joins.
     """
-    # rep per fingerprint = min-id row, selected with ONE shuffle (window
-    # rank over the fingerprint partition) — the previous groupBy-then-
-    # semi-join shape shuffled the signature table twice for the same
-    # selection.  The checkpoint (inside with_surrogate_ids) pins the
-    # result for banding AND the verify join, and pins the surrogate-id
-    # assignment.
-    w_rep = Window.partitionBy("fingerprint").orderBy(F.col(id_col).asc())
-    rep_sigs = with_surrogate_ids(
-        sigs.withColumn("_rn", F.row_number().over(w_rep))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    rep_sigs = representatives(sigs, id_col, "fingerprint")
     # stop threshold scales with the corpus; callers that already know the
     # row count pass it and skip a count job (one fewer barrier per call —
     # using corpus rows instead of rep rows only RAISES the drop threshold,
@@ -235,16 +242,18 @@ def lsh_near_dup_pairs(
 
 
 def lsh_near_dup_edges(
-    df: DataFrame, id_col: str, text_col: str, cfg: DedupeConfig
+    sigs: DataFrame, id_col: str, cfg: DedupeConfig, corpus_rows: int | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """Connectivity-only variant: rep-level LSH pairs + star edges for
-    exact-dup groups — linear in dup-family size, same connected
-    components as the full listing.  Returns (edges(a, b, jaccard),
-    skew_metrics)."""
-    sigs = minhash_signatures(df, id_col, text_col, cfg)
-    rep_pairs, metrics = rep_pairs_from_sigs(sigs, id_col, cfg)
+    """Connectivity-only edge list over a `minhash_signatures` table:
+    rep-level LSH pairs + star edges for exact-dup families — linear in
+    dup-family size, same connected components as the full listing.
+    No dedup on the union: rep pairs join two DIFFERENT fingerprints,
+    star edges share one (the `lsh_near_dup_pairs` argument).
+    `corpus_rows` is passed to `rep_pairs_from_sigs`.  Returns
+    (edges(a, b, jaccard), skew_metrics)."""
+    rep_pairs, metrics = rep_pairs_from_sigs(sigs, id_col, cfg, corpus_rows)
     edges = rep_pairs.select("a", "b", "jaccard").unionByName(
-        exact_fingerprint_edges(sigs, id_col)
+        exact_fingerprint_edges(sigs, id_col, "fingerprint")
     )
     return edges, metrics
 
@@ -403,16 +412,9 @@ def containment_pairs_lsh(
     n_bands, n_rows = solve_bands(cfg.num_perm, j_floor, min_recall)
 
     sigs = minhash_signatures(df, id_col, text_col, cfg)
-    # blocking + verify ride the 8-byte surrogate id (VERDICT r4 #1);
     # rep-level verdicts leave this scope keyed by FINGERPRINT, so no
-    # separate decode join is needed.  Rep selection = one window
-    # shuffle (see rep_pairs_from_sigs).
-    w_rep = Window.partitionBy("fingerprint").orderBy(F.col(id_col).asc())
-    rep_sigs = with_surrogate_ids(
-        sigs.withColumn("_rn", F.row_number().over(w_rep))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    # separate surrogate decode join is needed
+    rep_sigs = representatives(sigs, id_col, "fingerprint")
     features = rep_sigs.select("_sid", "codes")
     # overlap the feature collect + broadcast with the census/cell phase
     # below (see rep_pairs_from_sigs); both paths emit both containment

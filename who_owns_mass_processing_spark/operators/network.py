@@ -41,7 +41,8 @@ def network_round(
     """df(+group id columns) -> df + `out_col`.
 
     Edges connect each row's adjacent non-null typed group ids; the
-    network id is the lexicographic-min typed group id of the component.
+    network id is the lexicographic-min typed group id of the component,
+    and a group id on no edge is its own network.
     Rows whose group ids are all NULL keep a NULL network id (the
     reference bind_rows's the NA slice back unchanged,
     R/deduplicaters.R:893-895).
@@ -64,24 +65,18 @@ def network_round(
         edges = edges.unionByName(e)
     edges = edges.distinct()
 
-    # nodes = every non-null typed id (so a group that never co-occurs
-    # with another tier still gets a singleton network)
-    nodes = None
-    for t in typed:
-        part = df.select(t.alias("node")).where(F.col("node").isNotNull())
-        nodes = part if nodes is None else nodes.unionByName(part)
-    nodes = nodes.distinct()
+    cc = connected_components(edges)
 
-    cc = connected_components(edges, nodes=nodes)
-
-    # attach via the first non-null group id of each row
-    first_typed = F.coalesce(*typed)
+    # attach via the first non-null group id of each row; a group id on
+    # no edge is its own network (left join + coalesce, as
+    # canonical.with_singletons)
     return (
-        df.withColumn("_first_gid", first_typed)
+        df.withColumn("_first_gid", F.coalesce(*typed))
         .join(
             cc.select(F.col("node").alias("_first_gid"), F.col("component").alias(out_col)),
             "_first_gid",
             "left",
         )
+        .withColumn(out_col, F.coalesce(out_col, "_first_gid"))
         .drop("_first_gid")
     )

@@ -56,6 +56,10 @@ from who_owns_mass_processing_spark.functions.text import jaccard_arrays
 # correct 100-TB shape (features cannot be resident per worker).
 BROADCAST_VERIFY_MAX_BYTES = 256 * 1024 * 1024
 
+# verify_jaccard's minhash estimate gate sits this many binomial standard
+# deviations below the threshold (see verify_jaccard).
+_GATE_SIGMAS = 6.5
+
 
 @contextmanager
 def prefetch_broadcast(build, *args):
@@ -257,31 +261,29 @@ def verify_jaccard(
     id_col: str,
     shingle_col: str,
     threshold: float,
-    minhash_col: str | None = None,
-    num_perm: int | None = None,
-    gate_sigmas: float = 6.5,
+    minhash_col: str,
+    num_perm: int,
     mapside=None,
 ) -> DataFrame:
-    """pairs(a,b) x features(id, shingles) -> (a, b, jaccard) passing rows.
+    """pairs(a,b) x features(id, shingles, minhash) -> (a, b, jaccard)
+    passing rows.
 
     mapside: the broadcast from build_jaccard_mapside_bvar (usually
     prebuilt on a side thread, prefetch_broadcast), or None for the join
-    path; it needs `minhash_col`/`num_perm`.  The map-side path fuses
-    the gates below, the exact intersect
+    path.  The map-side path fuses the gates below, the exact intersect
     and Spark-identical rounding into one Arrow pass, and emits exactly
     the join path's rows (gate constants and float compares are
     bit-identical IEEE ops; pinned in tests/test_blocking.py).
 
-    When `minhash_col`/`num_perm` are given, an ESTIMATE GATE runs before
-    the exact shingle intersect: the fraction of equal minhash positions
-    is Binomial(num_perm, J)/num_perm, so gating at
-    threshold - gate_sigmas * sqrt(threshold(1-threshold)/num_perm)
-    drops a true pair at J == threshold with probability Phi(-gate_sigmas)
-    (~4e-11 at the 6.5-sigma default, 128 perms) while eliminating the
+    An ESTIMATE GATE runs before the exact shingle intersect: the
+    fraction of equal minhash positions is Binomial(num_perm, J)/num_perm,
+    so gating at threshold - _GATE_SIGMAS * sqrt(threshold(1-threshold)/num_perm)
+    drops a true pair at J == threshold with probability Phi(-_GATE_SIGMAS)
+    (~4e-11 at 6.5 sigma, 128 perms) while eliminating the
     bulk of sub-threshold candidates before they pay the O(|codes|)
     intersect (position compare is O(num_perm) on fixed-width longs).
-    Survivors always get the exact verify, so emitted rows are exact
-    either way; the gate only changes *cost*, with the stated recall
+    Survivors always get the exact verify, so emitted rows are exact;
+    the gate only changes *cost*, with the stated recall
     bound.  Measured at sf0.1 docs (tiny-vocab adversarial corpus):
     2.33M candidates -> 0.90M survivors, verify 10s -> 7s at local[32];
     at web-corpus similarity profiles (background J << threshold) the
@@ -297,9 +299,7 @@ def verify_jaccard(
     # measured 4.2 s -> 1.5 s on the 2.33M-candidate gate stage at
     # sf0.1 and a ~12% cut of exact-verify survivors.
     ratio_floor = float(threshold) - 1e-6
-    gated = minhash_col is not None and bool(num_perm)
-    if gated:
-        gate = threshold - gate_sigmas * (threshold * (1 - threshold) / num_perm) ** 0.5
+    gate = threshold - _GATE_SIGMAS * (threshold * (1 - threshold) / num_perm) ** 0.5
 
     if mapside is not None:
         thr, nperm = float(threshold), float(num_perm)
@@ -319,36 +319,28 @@ def verify_jaccard(
 
         return map_pairs(pairs, mapside, "a bigint, b bigint, jaccard double", score)
 
-    def _ratio_ok(na, nb):
-        return F.least(na, nb).cast("double") >= F.lit(ratio_floor) * F.greatest(
-            na, nb
-        ).cast("double")
-
-    if gated:
-        ma = features.select(
-            F.col(id_col).alias("a"), F.col(minhash_col).alias("_ma"),
-            F.size(shingle_col).alias("_na"),
-        )
-        mb = features.select(
-            F.col(id_col).alias("b"), F.col(minhash_col).alias("_mb"),
-            F.size(shingle_col).alias("_nb"),
-        )
-        est = F.size(
-            F.filter(F.zip_with(F.col("_ma"), F.col("_mb"), lambda x, y: x == y), lambda t: t)
-        ) / F.lit(float(num_perm))
-        pairs = (
-            pairs.join(ma, "a")
-            .join(mb, "b")
-            .where(_ratio_ok(F.col("_na"), F.col("_nb")) & (est >= F.lit(gate)))
-            .select("a", "b")
-        )
+    ma = features.select(
+        F.col(id_col).alias("a"), F.col(minhash_col).alias("_ma"),
+        F.size(shingle_col).alias("_na"),
+    )
+    mb = features.select(
+        F.col(id_col).alias("b"), F.col(minhash_col).alias("_mb"),
+        F.size(shingle_col).alias("_nb"),
+    )
+    est = F.size(
+        F.filter(F.zip_with(F.col("_ma"), F.col("_mb"), lambda x, y: x == y), lambda t: t)
+    ) / F.lit(float(num_perm))
+    ratio_ok = F.least("_na", "_nb").cast("double") >= F.lit(ratio_floor) * F.greatest(
+        "_na", "_nb"
+    ).cast("double")
+    gated = (
+        pairs.join(ma, "a").join(mb, "b").where(ratio_ok & (est >= F.lit(gate))).select("a", "b")
+    )
     fa = features.select(F.col(id_col).alias("a"), F.col(shingle_col).alias("_sa"))
     fb = features.select(F.col(id_col).alias("b"), F.col(shingle_col).alias("_sb"))
-    out = pairs.join(fa, "a").join(fb, "b")
-    if not gated:
-        out = out.where(_ratio_ok(F.size("_sa"), F.size("_sb")))
     return (
-        out.select("a", "b", F.round(jaccard_arrays(F.col("_sa"), F.col("_sb")), 6).alias("jaccard"))
+        gated.join(fa, "a").join(fb, "b")
+        .select("a", "b", F.round(jaccard_arrays(F.col("_sa"), F.col("_sb")), 6).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
 

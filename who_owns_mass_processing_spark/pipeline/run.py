@@ -7,15 +7,20 @@ named after its table whose parameters name the stages it reads;
 `StageCatalog.run` schedules the list and derives the refresh cascade
 from those parameters.
 
-  ingest          project (image_id, fmt, caption, phash); `bytes` is NOT
+  ingest          project (image_id, fmt, caption, phash, byte_fp =
+                  sha256(bytes)); `bytes` itself is NOT
                   carried forward (scale rule: payload never shuffles)
   signatures      caption fingerprint + shingle codes + MinHash (one
                   Arrow pass) + pHash
-  caption_pairs   LSH bands -> salted candidates -> exact Jaccard >= tau
-  image_pairs     pHash byte-bands -> candidates -> bit_count Hamming <= r
-                  -> PSNR >= 40 dB decoded-pixel verify for lossy pairs
-                  (re-joins `bytes` for only that pair subset)
-  edges           caption tier UNION image tier  (dedupe_network analog,
+  caption_pairs   `lsh_near_dup_edges`: one representative per caption
+                  fingerprint -> LSH bands -> salted candidates -> exact
+                  Jaccard >= tau, plus star edges within a fingerprint
+  image_exact_edges  star edges within a byte hash (`exact_fingerprint_edges`)
+  image_pairs     one representative per byte hash -> pHash byte-bands ->
+                  candidates -> bit_count Hamming <= r -> PSNR >= 40 dB
+                  decoded-pixel verify for lossy pairs (re-joins `bytes`
+                  for only that pair subset)
+  edges           caption tier UNION image tiers (dedupe_network analog,
                   R/deduplicaters.R:248-288: two similarity keys fused)
   assignments     connected components + singleton fallback
   clusters        exemplar = min image_id, modal caption, size
@@ -38,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from who_owns_mass_processing_spark.config import DedupeConfig
+from who_owns_mass_processing_spark.operators import dedupe
 from who_owns_mass_processing_spark.operators.blocking import hamming_pairs
 from who_owns_mass_processing_spark.operators.canonical import cluster_exemplars, with_singletons
 from who_owns_mass_processing_spark.operators.connected_components import connected_components
@@ -70,62 +76,41 @@ def run_pipeline(
         return sigs.join(ingest.select("image_id", "phash", "fmt"), "image_id")
 
     # --- caption tier ---------------------------------------------------------
+    # `lsh_near_dup_edges`, the edge list the `dedup_cc_assignments`
+    # query clusters: LSH over distinct-fingerprint representatives only
+    # (identical captions never enter banding — their mega-buckets are
+    # pure fan-out), plus linear star edges for the exact-dup families.
+    # The row count comes from the stage manifest: zero jobs.
     def caption_pairs(ingest, signatures) -> DataFrame:
-        from who_owns_mass_processing_spark.operators.dedupe import (
-            exact_fingerprint_edges,
-            rep_pairs_from_sigs,
-        )
-
-        # LSH over distinct-fingerprint representatives only (identical
-        # captions never enter banding — their mega-buckets are pure
-        # fan-out), plus linear star edges for the exact-dup families.
-        # No dedup aggregation on the union: rep pairs join two DIFFERENT
-        # fingerprints, star edges share one — disjoint and internally
-        # unique (the lsh_near_dup_pairs §2.4 argument).  The row count
-        # comes from the stage manifest: zero jobs.
-        rep_pairs, skew = rep_pairs_from_sigs(
+        edges, skew = dedupe.lsh_near_dup_edges(
             signatures, "image_id", cfg, corpus_rows=cat.rows("ingest")
         )
         cat.write("caption_band_skew", skew)
-        exact = exact_fingerprint_edges(signatures, "image_id")
-        return (
-            rep_pairs.select("a", "b", "jaccard")
-            .unionByName(exact)
-            .withColumn("tier", F.lit("caption"))
-        )
+        return edges.withColumn("tier", F.lit("caption"))
 
     # --- image tier -----------------------------------------------------------
-    # Byte-identical images (exact web dups, the dominant dup class) are
-    # connected by LINEAR star edges on sha256(bytes) and only one
-    # representative per byte group enters pHash blocking + PSNR: byte
-    # identity implies pixel identity, so rep-level Hamming/PSNR verdicts
-    # are exact for every member (same components, ~0 payload decode for
-    # dup families).
+    # The caption tier's two operators keyed on sha256(bytes): byte-
+    # identical images (exact web dups, the dominant dup class) are
+    # connected by LINEAR star edges, and only one representative per
+    # byte group enters pHash blocking + PSNR.  Byte identity implies
+    # pixel identity, so rep-level Hamming/PSNR verdicts are exact for
+    # every member (same components, ~0 payload decode for dup families).
     def image_exact_edges(ingest) -> DataFrame:
-        mins = ingest.groupBy("byte_fp").agg(F.min("image_id").alias("a"))
         return (
-            ingest.join(mins, "byte_fp")
-            .where(F.col("image_id") != F.col("a"))
-            .select("a", F.col("image_id").alias("b"))
+            dedupe.exact_fingerprint_edges(ingest, "image_id", "byte_fp")
+            .select("a", "b")
             .withColumn("tier", F.lit("image_exact"))
         )
 
     def image_pairs(ingest) -> DataFrame:
         from who_owns_mass_processing_spark.functions.images import phash_combo_bands
-        from who_owns_mass_processing_spark.operators.blocking import (
-            decode_pair_ids,
-            with_surrogate_ids,
-        )
+        from who_owns_mass_processing_spark.operators.blocking import decode_pair_ids
 
-        byte_reps = ingest.groupBy("byte_fp").agg(F.min("image_id").alias("image_id"))
-        # banding + Hamming verify ride the 8-byte surrogate id (VERDICT
-        # r4 #1: band/cell/pair rows carried the string image_id — the
-        # block phase's dominant shuffle bytes); the checkpoint inside
-        # with_surrogate_ids also stops the semi-join recomputing per
-        # consumer (bands, verify, decode)
-        reps = with_surrogate_ids(
-            ingest.join(byte_reps, ["image_id", "byte_fp"], "left_semi")
-            .select("image_id", "phash")
+        # banding + Hamming verify ride the representatives' 8-byte
+        # surrogate id (VERDICT r4 #1: band/cell/pair rows carried the
+        # string image_id — the block phase's dominant shuffle bytes)
+        reps = dedupe.representatives(
+            ingest.select("image_id", "byte_fp", "phash"), "image_id", "byte_fp"
         )
         bands = phash_combo_bands(
             reps, "phash", "_sid",
