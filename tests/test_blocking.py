@@ -95,9 +95,12 @@ def test_surrogate_ids_bit_identical_pairs(spark):
 @pytest.fixture(scope="module")
 def sf0001_tiers(spark):
     """Per set tier, on the sf0.001 documents' LSH candidates: (build,
-    verify) where build() makes the tier's map-side broadcast and
+    verify, oracle) where build() makes the tier's map-side broadcast,
     verify(mapside) runs the tier's verify on that broadcast or, given
-    None, on the join path."""
+    None, on the join path, and oracle is the tier's rows computed with
+    Python sets."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     from pyspark.sql import Window
 
     from who_owns_mass_processing_spark.config import DedupeConfig
@@ -132,6 +135,24 @@ def sf0001_tiers(spark):
     # the gate input the engine passes: each checkpointed table's stored size
     rep_bytes, fps_bytes = checkpointed_bytes(rep_sigs), checkpointed_bytes(fps)
     thr, nperm = cfg.jaccard_threshold, cfg.num_perm
+
+    def round6(x: float) -> float:
+        """Spark's round(double, 6): HALF_UP on the shortest decimal repr."""
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+    pairs = [tuple(r) for r in cands.select("a", "b").collect()]
+    codes = {r[0]: set(r[1]) for r in feats.select("_sid", "codes").collect()}
+    grams = {r[0]: set(r[1]) for r in fps.collect()}
+    jaccard = [
+        (a, b, round6(len(codes[a] & codes[b]) / len(codes[a] | codes[b]))) for a, b in pairs
+    ]
+    containment = [
+        (x, y, round6(len(codes[x] & codes[y]) / len(codes[x])))
+        for a, b in pairs
+        for x, y in ((a, b), (b, a))
+        if codes[x]
+    ]
+    shared = [(a, b, len(grams[a] & grams[b])) for a, b in pairs]
     # winnow min_shared 35 is about the candidates' median shared count,
     # so pairs on both sides of the filter are compared
     return {
@@ -143,31 +164,47 @@ def sf0001_tiers(spark):
                 cands, feats, "_sid", "codes", thr,
                 minhash_col="minhash", num_perm=nperm, mapside=m,
             ),
+            [r for r in jaccard if r[2] >= thr],
         ),
         "containment": (
             lambda: V.build_containment_mapside_bvar(feats, "_sid", "codes", rep_bytes),
             lambda m: V.verify_containment(cands, feats, "_sid", "codes", 0.9, mapside=m),
+            [r for r in containment if r[2] >= 0.9],
         ),
         "winnow": (
             lambda: V.build_winnow_mapside_bvar(fps, "_sid", "_fps", fps_bytes),
             lambda m: V.verify_winnow(cands, fps, "_sid", "_fps", 35, mapside=m),
+            [r for r in shared if r[2] >= 35],
         ),
     }
 
 
 @pytest.mark.parametrize("tier", ["jaccard", "containment", "winnow"])
 def test_mapside_verify_matches_join_path(sf0001_tiers, tier):
-    """Each set tier's broadcast map-side verify (numpy gates + exact
-    intersect + Spark-identical rounding) must emit exactly its join
-    path's rows."""
-    build, verify = sf0001_tiers[tier]
+    """Each set tier's broadcast map-side verify must emit exactly its
+    join path's rows: the two paths share the tier's scorer and differ
+    in how features reach it — a broadcast lookup, or equi-joins."""
+    build, verify, _oracle = sf0001_tiers[tier]
     slow = verify(None)
     fast = verify(build())
-    assert "MapInArrow" in fast._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" not in slow._jdf.queryExecution().executedPlan().toString()
+    fast_plan = fast._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in fast_plan and "Join" not in fast_plan
+    assert "Join" in slow._jdf.queryExecution().executedPlan().toString()
     assert slow.exceptAll(fast).count() == 0
     assert fast.exceptAll(slow).count() == 0
     assert fast.count() > 0
+
+
+@pytest.mark.parametrize("tier", ["jaccard", "containment", "winnow"])
+def test_set_tier_verify_matches_python_oracle(sf0001_tiers, tier):
+    """Each set tier's verdict (gates, numpy intersect, HALF_UP rounding)
+    equals the same verdict computed with Python sets over the sf0.001
+    candidates: containment in both directions, rounded to 6 places;
+    winnow the shared-gram count."""
+    build, verify, oracle = sf0001_tiers[tier]
+    got = sorted(map(tuple, verify(build()).collect()))
+    assert got == sorted(oracle)
+    assert got
 
 
 @pytest.mark.parametrize("tier", ["jaccard", "containment", "winnow", "cosine"])
@@ -190,12 +227,11 @@ def test_mapside_verify_drops_absent_ids(spark, tier):
     pairs = spark.createDataFrame([(5, 10), (10, 15), (10, 20), (10, 99)], "a long, b long")
     if tier == "cosine":
         bvar = vectors.build_cosine_mapside_bvar(feats, "id", "vec", nbytes, 3)
-        fast = V.map_pairs(pairs, bvar, "a bigint, b bigint, _cos double", vectors._cosine_score)
-        cos_udf = vectors.cosine_pair_udf()
-        slow = (
-            pairs.join(feats.select(F.col("id").alias("a"), F.col("vec").alias("_va")), "a")
-            .join(feats.select(F.col("id").alias("b"), F.col("vec").alias("_vb")), "b")
-            .select("a", "b", cos_udf("_va", "_vb").alias("_cos"))
+        schema = "a bigint, b bigint, _cos double"
+        fast = V.map_pairs(pairs, bvar, schema, vectors._cosine_score)
+        slow = V.join_pairs(
+            pairs, feats, "id", ("vec",), partial(vectors._cosine_layout, 3), schema,
+            vectors._cosine_score,
         )
     else:
         build, verify = {

@@ -116,64 +116,41 @@ def decode_stats_map(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def phash_bands(df, phash_col: str, id_col: str, n_bands: int = 8):
-    """Split a 64-bit hash into n equal bit-bands -> (id, band_id, band_hash).
-
-    Single-band Hamming blocking: two hashes within Hamming distance d
-    share at least one identical band when d < n_bands (pigeonhole).
-    SCALE CAVEAT: an 8-bit band has only 256 values, so buckets grow as
-    n/256 and pair fan-out as n^2/64 — fine at test scale, quadratic at
-    web scale.  Use `phash_combo_bands` (band-pair multi-index) for the
-    10^12 path.  Reference analog: nearest-neighbor spatial join
-    (R/loaders.R:1042-1057) re-expressed as an equi-join blocking key.
-    """
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    slices = F.array(
-        *[
-            F.shiftrightunsigned(F.col(phash_col), i * width).bitwiseAND(F.lit(mask))
-            for i in range(n_bands)
-        ]
-    )
-    return df.select(
-        id_col, F.col(phash_col), F.posexplode(slices).alias("band_id", "band_val")
-    ).select(
-        id_col, phash_col, "band_id", F.xxhash64("band_id", "band_val").alias("band_hash")
-    )
-
-
 def phash_combo_bands(df, phash_col: str, id_col: str, n_bands: int = 8, radius: int = 6):
-    """Band-PAIR multi-index Hamming blocking (Manku-style, the 10^12 path).
+    """Band-subset multi-index Hamming blocking (Manku-style, the 10^12
+    path).
 
     Pigeonhole: d <= radius differing bits land in at most `radius` of the
-    `n_bands` bands, so any pair within radius shares >= n_bands - radius
-    identical bands; with n_bands - radius >= 2 they share at least one
-    *pair* of identical bands.  Indexing on all C(n_bands, 2) band pairs
-    gives 2*width-bit keys (65k+ values for 8-bit bands) — buckets shrink
-    quadratically vs single-band blocking while recall stays guaranteed.
+    `n_bands` bands, so any pair within radius shares at least
+    k = n_bands - radius identical bands, hence one identical k-SUBSET of
+    bands.  Indexing every k-subset (itertools.combinations order) gives
+    k*width-bit keys: k = 2 (8 bands, radius 6 — the image tier) makes
+    65k+ values for 8-bit bands, so buckets shrink quadratically vs
+    single-band blocking while recall stays guaranteed; k = 1 (4 bands,
+    radius 3 — simhash) is single-band blocking on 16-bit bands.  Reference
+    analog: nearest-neighbor spatial join (R/loaders.R:1042-1057)
+    re-expressed as an equi-join blocking key.
 
-    Requires n_bands - radius >= 2 (8 bands cover radius <= 6).
-    Emits (id, band_id, band_hash) with band_id encoding the (i, j) combo.
+    Requires n_bands - radius >= 1.
+    Emits (id, phash, band_id, band_hash) with band_id numbering the subset.
     """
-    if n_bands - radius < 2:
-        raise ValueError(f"combo banding needs n_bands-radius>=2, got {n_bands}-{radius}")
+    from itertools import combinations
+
+    if n_bands - radius < 1:
+        raise ValueError(f"band-subset blocking needs n_bands-radius>=1, got {n_bands}-{radius}")
     width = 64 // n_bands
     mask = (1 << width) - 1
 
     def band(i):
         return F.shiftrightunsigned(F.col(phash_col), i * width).bitwiseAND(F.lit(mask))
 
-    combos = []
-    combo_id = 0
-    for i in range(n_bands):
-        for j in range(i + 1, n_bands):
-            combos.append(
-                F.struct(
-                    F.lit(combo_id).alias("band_id"),
-                    F.xxhash64(F.lit(combo_id), band(i), band(j)).alias("band_hash"),
-                )
-            )
-            combo_id += 1
+    combos = [
+        F.struct(
+            F.lit(combo_id).alias("band_id"),
+            F.xxhash64(F.lit(combo_id), *(band(i) for i in subset)).alias("band_hash"),
+        )
+        for combo_id, subset in enumerate(combinations(range(n_bands), n_bands - radius))
+    ]
     # the hash column rides along as blocking payload so the Hamming
     # check can be fused into pair generation (blocking.hamming_pairs)
     return df.select(id_col, F.col(phash_col), F.explode(F.array(*combos)).alias("c")).select(

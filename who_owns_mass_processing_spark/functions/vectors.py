@@ -10,14 +10,18 @@ band join).
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from who_owns_mass_processing_spark.operators.verify import (
+    _broadcast_layout,
     _fixed_matrix_from_list_column,
     _mapside_eligible,
+    join_pairs,
     map_pairs,
     prefetch_broadcast,
 )
@@ -84,12 +88,13 @@ def bucket_tables_udf(planes: np.ndarray):
 
 
 def cosine_pair_udf():
-    """pandas UDF: exact cosine of two vector columns — the vectorized
-    verify kernel for the ANN scale path (one Arrow batch = two (n, dim)
-    ndarrays, row-wise einsum).  The interpreted higher-order `cosine`
-    expression costs ~3 lambda dispatches per element; on millions of
-    LSH candidates the matmul form is the difference between the verify
-    dominating the query and disappearing into it."""
+    """pandas UDF: exact cosine of two vector columns — `ivf_topk`'s
+    kernel over its probed cells (one Arrow batch = two (n, dim)
+    ndarrays, row-wise einsum; `_cosine_score` is the same einsum over
+    a feature layout).  The interpreted higher-order `cosine` expression
+    costs ~3 lambda dispatches per element; on millions of candidates
+    the matmul form is the difference between the verify dominating the
+    query and disappearing into it."""
 
     @F.pandas_udf("double")
     def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -161,37 +166,39 @@ def ann_lsh_pairs(
     # cell build) and each pass would re-run the bucket UDF + probe
     # explode; the table itself is (id, int, long) — tiny
     b = b.localCheckpoint(eager=True)
-    # map-side exact-cosine verify for bounded corpora: the vector
-    # matrix (n * dim * 8 bytes, the map-side gate's one input)
-    # broadcasts (same bound class as a Spark BHJ build side) and
-    # one map_pairs gather computes the IDENTICAL einsum the pair UDF
-    # ran — but without the two feature joins or shipping two vectors
-    # per candidate through Arrow (only 16 bytes/pair cross).  Rounding
-    # and the threshold filter STAY in Spark, so emitted values are
-    # bit-identical to the join path.  Larger corpora keep the join
-    # shape (features cannot be worker-resident at scale).  The matrix
-    # collect + broadcast overlaps the census/cell phase
-    # (prefetch_broadcast; see rep_pairs_from_sigs).
+    # exact-cosine verify, one scorer (`_cosine_score`) on both paths:
+    # for bounded corpora the vector matrix (n * dim * 8 bytes, the
+    # map-side gate's one input) broadcasts (same bound class as a Spark
+    # BHJ build side) and only 16 bytes/pair cross into Python; larger
+    # corpora attach both vectors per candidate by join (features cannot
+    # be worker-resident at scale).  Rounding and the threshold filter
+    # stay in Spark.  The matrix collect + broadcast overlaps the
+    # census/cell phase (prefetch_broadcast; see rep_pairs_from_sigs).
+    schema = "a bigint, b bigint, _cos double"
     with prefetch_broadcast(
         build_cosine_mapside_bvar, slim, id_col, vec_col, slim.count() * dim * 8, dim
     ) as mapside:
         cands, _metrics = candidate_pairs(b, id_col, cap=cap, hard_cap=hard_cap)
         bvar = mapside()
         if bvar is not None:
-            scored = map_pairs(cands, bvar, "a bigint, b bigint, _cos double", _cosine_score)
+            scored = map_pairs(cands, bvar, schema, _cosine_score)
         else:
-            fa = slim.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))
-            fb = slim.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
-            cos_udf = cosine_pair_udf()
-            scored = (
-                cands.join(fa, "a")
-                .join(fb, "b")
-                .select("a", "b", cos_udf(F.col("_va"), F.col("_vb")).alias("_cos"))
-            )
+            layout = partial(_cosine_layout, dim)
+            scored = join_pairs(cands, slim, id_col, (vec_col,), layout, schema, _cosine_score)
     return (
         scored.select("a", "b", F.round(F.col("_cos"), 6).alias("cos_sim"))
         .where(F.col("cos_sim") >= threshold)
     )
+
+
+def _cosine_layout(dim: int, cols, order):
+    """(matrix, norms) of the (n, dim) vector column.  Norms are taken
+    once per vector, not twice per pair: sqrt(einsum) over the same
+    contiguous row data is the identical float op sequence, so gathered
+    norms are bit-identical to a per-pair computation (2/3 of the kernel
+    FLOPs)."""
+    mat = np.ascontiguousarray(_fixed_matrix_from_list_column(cols[0], dim, order), np.float64)
+    return mat, np.sqrt(np.einsum("ij,ij->i", mat, mat))
 
 
 def build_cosine_mapside_bvar(
@@ -203,25 +210,13 @@ def build_cosine_mapside_bvar(
     (prefetch_broadcast)."""
     if not _mapside_eligible(slim, id_col, nbytes):
         return None
-    # Arrow-native collect (no toPandas object columns, no per-row
-    # np.asarray): the vector column's flat float64 child reshapes into
-    # the (n, dim) matrix in one step — same values, same row order
-    tab = slim.select(id_col, vec_col).toArrow()
-    ids = tab.column(0).to_numpy().astype(np.int64, copy=False)
-    order = np.argsort(ids, kind="stable")
-    mat = _fixed_matrix_from_list_column(tab.column(1), dim, order)
-    mat = np.ascontiguousarray(mat, dtype=np.float64)
-    # norms once per VECTOR in the broadcast, not twice per PAIR in the
-    # batch loop: sqrt(einsum) over the same contiguous row data is the
-    # identical float op sequence, so gathered norms are bit-identical
-    # to the per-pair computation they replace (2/3 of the kernel FLOPs)
-    norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-    return slim.sparkSession.sparkContext.broadcast((ids[order], mat, norms))
+    return _broadcast_layout(slim, id_col, (vec_col,), partial(_cosine_layout, dim))
 
 
 def _cosine_score(a, b, ia, ib, value):
-    """map_pairs tail: (a, b, _cos) by a broadcast matrix gather — the
-    same einsum as `cosine_pair_udf`, so values are bit-identical."""
+    """The cosine tier's verdict on both verify paths: (a, b, _cos) by
+    a gather of the layout's matrix rows — the same einsum as
+    `cosine_pair_udf`."""
     _ids, mat, norms = value
     num = np.einsum("ij,ij->i", mat[ia], mat[ib])
     den = norms[ia] * norms[ib]

@@ -4,35 +4,37 @@ Reference analog: the reference *blocks* by name/address then keeps only
 pairs whose TF-IDF cosine clears min_simil (0.85 inst / 0.95 individual,
 R/deduplicaters.R:342-346, config.R:28-29).  Here:
 
-  caption tier  exact Jaccard over char-shingle arrays (builtins:
-                array_intersect — no Python) >= cfg.jaccard_threshold;
-                the containment and winnow tiers intersect the same way;
+  caption tier  exact Jaccard over shingle-code arrays (a sorted-list
+                intersect in numpy) >= cfg.jaccard_threshold; the
+                containment and winnow tiers intersect the same way;
   image tier    popcount Hamming over pHash <= cfg.hamming_radius,
                 fused into pair generation (blocking.hamming_pairs),
                 plus for *lossy* formats a PSNR >= 40 dB decoded-pixel
                 check (pandas UDF) — the two-tier strict/loose rule
                 mirroring the reference's 0.85/0.95.
 
-Two paths verify the set tiers (Jaccard, containment, winnow) and the
-embedding-cosine tier, and emit identical rows.  Which one runs is
+Each set tier (Jaccard, containment, winnow) and the embedding-cosine
+tier has ONE verdict: a numpy `score(a, b, ia, ib, value)` over a
+per-tier feature layout (`value` = (row ids, *layout)).  Two paths
+bring the features to it and differ only in that; which one runs is
 decided once, before any Spark job, from one measured number: the
 feature table's size in bytes (the set tiers read the stored size of
 the table `with_surrogate_ids` checkpointed, `checkpointed_bytes`; the
 cosine tier its exact n * dim * 8 matrix size).
 
   map-side  at most BROADCAST_VERIFY_MAX_BYTES with long ids: a
-            `build_*_mapside_bvar` builder collects the features once
-            into sorted numpy arrays and broadcasts them, usually on a
-            driver side thread (`prefetch_broadcast`) so the collect
-            overlaps blocking.  One `map_pairs` pass then reads bare
-            (a, b) pairs — 16 bytes per pair cross the Python boundary —
-            looks both ids up (`_lookup`; a pair with an absent id is
-            dropped, as the inner join drops it), and scores the
-            survivors with the tier's vectorized tail over one
-            sorted-list intersect of int64 codes (`_intersect_counts`).
+            `build_*_mapside_bvar` builder collects the features once,
+            lays them out sorted by id and broadcasts them
+            (`_broadcast_layout`), usually on a driver side thread
+            (`prefetch_broadcast`) so the collect overlaps blocking.
+            One `map_pairs` pass then reads bare (a, b) pairs — 16
+            bytes per pair cross the Python boundary — and looks both
+            ids up (`_lookup`; a pair with an absent id is dropped, as
+            the join drops it).
   join      the scale path, when the gate (`_mapside_eligible`) refuses
-            — the builder's only `return None`: each pair re-attaches
-            per-id features by an equi-join on id that AQE can re-plan.
+            — the builder's only `return None`: `join_pairs` attaches
+            both ids' features by an equi-join on id that AQE can
+            re-plan, and lays each batch out with the same layout.
             Bytes are re-joined ONLY for the lossy-pair PSNR subset
             (tiny), and the set tiers carry code arrays, not raw text.
 """
@@ -41,13 +43,13 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from who_owns_mass_processing_spark.functions.images import psnr_pair_udf
-from who_owns_mass_processing_spark.functions.text import jaccard_arrays
 
 # Map-side verify engages only when the feature table's measured size
 # is at most this: the same magnitude Spark itself allows a broadcast
@@ -94,50 +96,65 @@ def _mapside_eligible(features: DataFrame, id_col: str, nbytes: int | None) -> b
     )
 
 
-def _collect_ragged_arrow(
-    features: DataFrame, id_col: str, array_col: str, extra_cols: tuple[str, ...] = ()
-):
-    """Arrow-collect (id, array<bigint>[, extras]) and return
-    (sids_sorted, offs, flat, order, table) with the ragged column
-    re-laid-out in ascending-id row order — every step a vectorized
-    numpy gather, no per-row Python: the Arrow list column's (offsets,
-    values) buffers are consumed directly (a list array's offsets index
-    its values buffer absolutely, so a sliced chunk needs no special
-    case), and the sorted flat layout is one fancy-index gather.
+def _ragged(col, order: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Arrow list<bigint> array -> (offs, flat) with its rows
+    re-laid-out in `order` — every step a vectorized numpy gather, no
+    per-row Python: the list array's (offsets, values) buffers are
+    consumed directly (its offsets index the values buffer absolutely,
+    so a sliced array needs no special case), and the flat layout is
+    one fancy-index gather.
 
-    `flat` is uint64: every map-side code array is sorted in UNSIGNED
-    order (signature_udf sorts the uint64 shingle codes before its int64
+    `flat` is uint64: every code array is sorted in UNSIGNED order
+    (signature_udf sorts the uint64 shingle codes before its int64
     store; winnow codes are big-endian ascii grams, below 2**63), so the
     reinterpreted bits are what `_intersect_counts` searches."""
-    tab = features.select(id_col, array_col, *extra_cols).toArrow()
-    sids = tab.column(0).to_numpy().astype(np.int64, copy=False)
-    arr = tab.column(1).combine_chunks()
-    offs_a = arr.offsets.to_numpy().astype(np.int64, copy=False)
-    vals = arr.values.to_numpy(zero_copy_only=False)
-    order = np.argsort(sids, kind="stable")
-    lens_s = np.diff(offs_a)[order]
-    offs = np.zeros(len(lens_s) + 1, dtype=np.int64)
-    np.cumsum(lens_s, out=offs[1:])
+    offs_a = col.offsets.to_numpy().astype(np.int64, copy=False)
+    vals = col.values.to_numpy(zero_copy_only=False)
+    lens = np.diff(offs_a)[order]
+    offs = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offs[1:])
     pos = (
         np.arange(int(offs[-1]), dtype=np.int64)
-        - np.repeat(offs[:-1], lens_s)
-        + np.repeat(offs_a[:-1][order], lens_s)
+        - np.repeat(offs[:-1], lens)
+        + np.repeat(offs_a[:-1][order], lens)
     )
-    return sids[order], offs, vals[pos].astype(np.uint64, copy=False), order, tab
+    return offs, vals[pos].astype(np.uint64, copy=False)
 
 
 def _fixed_matrix_from_list_column(col, width: int, order: np.ndarray):
-    """Arrow list column of uniform `width` -> (n, width) numpy matrix in
+    """Arrow list array of uniform `width` -> (n, width) numpy matrix in
     `order` row order.  Rows of another width (never produced by
     signature_udf, and rejected by the cosine tier's matmul UDFs before
     any verify) raise ValueError."""
-    arr = col.combine_chunks()
-    offs = arr.offsets.to_numpy().astype(np.int64, copy=False)
+    offs = col.offsets.to_numpy().astype(np.int64, copy=False)
     if not bool(np.all(np.diff(offs) == width)):
         raise ValueError(f"list rows are not all {width} wide")
     n = len(offs) - 1
-    vals = arr.values.to_numpy(zero_copy_only=False)
+    vals = col.values.to_numpy(zero_copy_only=False)
     return vals[offs[0] : offs[0] + n * width].reshape(n, width)[order]
+
+
+def _codes_layout(cols, order):
+    """(offs, codes) of one ragged code column: the containment and
+    winnow tiers' layout."""
+    return _ragged(cols[0], order)
+
+
+def _jaccard_layout(num_perm: int, cols, order):
+    """(offs, codes, minhash): the shingle codes plus the (n, num_perm)
+    signature matrix the estimate gate compares."""
+    mh = _fixed_matrix_from_list_column(cols[1], num_perm, order)
+    return (*_ragged(cols[0], order), mh.astype(np.int64, copy=False))
+
+
+def _broadcast_layout(features: DataFrame, id_col: str, cols, layout):
+    """Arrow-collect (id, *cols), sort the rows by id and broadcast
+    (sorted ids, *layout(arrays, order)) — the value `map_pairs` reads."""
+    tab = features.select(id_col, *cols).toArrow()
+    ids = tab.column(0).to_numpy().astype(np.int64, copy=False)
+    order = np.argsort(ids, kind="stable")
+    value = (ids[order], *layout([c.combine_chunks() for c in tab.columns[1:]], order))
+    return features.sparkSession.sparkContext.broadcast(value)
 
 
 def _spark_round6(x: np.ndarray) -> np.ndarray:
@@ -189,30 +206,78 @@ def _intersect_counts(
     return out
 
 
+def _scored(df: DataFrame, schema: str, verdict) -> DataFrame:
+    """One mapInArrow pass over `df`: each non-empty batch goes to
+    `verdict(batch)`, which returns the output columns of `schema` as
+    numpy arrays, or None for no rows."""
+    import pyarrow as pa
+
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def gen(batches):
+        for batch in batches:
+            cols = verdict(batch) if batch.num_rows else None
+            if cols is not None:
+                yield pa.RecordBatch.from_arrays([pa.array(c) for c in cols], names)
+
+    return df.mapInArrow(gen, schema)
+
+
+def _ids(batch, name: str) -> np.ndarray:
+    return batch.column(name).to_numpy(zero_copy_only=False).astype(np.int64)
+
+
 def map_pairs(pairs: DataFrame, bvar, schema: str, score) -> DataFrame:
     """The map-side verify: one mapInArrow pass over the bare (a, b)
     pairs against the broadcast `bvar` (sorted ids first).  Pairs whose
     ids are both present go to `score(a, b, ia, ib, value)` — ids, their
     broadcast rows, and the broadcast value — which returns the output
     columns of `schema` as numpy arrays."""
+
+    def verdict(batch):
+        value = bvar.value
+        a, b = _ids(batch, "a"), _ids(batch, "b")
+        ia, found_a = _lookup(value[0], a)
+        ib, found_b = _lookup(value[0], b)
+        keep = found_a & found_b
+        if keep.any():
+            return score(a[keep], b[keep], ia[keep], ib[keep], value)
+        return None
+
+    return _scored(pairs.select("a", "b"), schema, verdict)
+
+
+def join_pairs(
+    pairs: DataFrame, features: DataFrame, id_col: str, cols, layout, schema: str, score
+) -> DataFrame:
+    """The join verify (the scale path): each pair attaches both ids'
+    feature columns `cols` by equi-joins on `a` and `b` (a pair with an
+    absent id is dropped), then one mapInArrow pass scores it.  A batch
+    of n pairs is laid out as 2n feature rows — the a sides, then the b
+    sides — by the tier's broadcast `layout`, and goes to the tier's
+    map_pairs `score` with ia = i and ib = n + i."""
     import pyarrow as pa
 
-    names = [field.split()[0] for field in schema.split(",")]
+    def side(key: str) -> DataFrame:
+        return features.select(
+            F.col(id_col).alias(key), *(F.col(c).alias(f"_{key}{i}") for i, c in enumerate(cols))
+        )
 
-    def gen(batches):
-        value = bvar.value
-        for batch in batches:
-            a = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            b = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            ia, found_a = _lookup(value[0], a)
-            ib, found_b = _lookup(value[0], b)
-            keep = found_a & found_b
-            if not keep.any():
-                continue
-            cols = score(a[keep], b[keep], ia[keep], ib[keep], value)
-            yield pa.RecordBatch.from_arrays([pa.array(c) for c in cols], names)
+    feat = [f"_{key}{i}" for key in "ab" for i in range(len(cols))]
+    joined = pairs.select("a", "b").join(side("a"), "a").join(side("b"), "b")
 
-    return pairs.select("a", "b").mapInArrow(gen, schema)
+    def verdict(batch):
+        n = batch.num_rows
+        a, b = _ids(batch, "a"), _ids(batch, "b")
+        arrays = [
+            pa.concat_arrays([batch.column(f"_a{i}"), batch.column(f"_b{i}")])
+            for i in range(len(cols))
+        ]
+        value = (np.concatenate([a, b]), *layout(arrays, np.arange(2 * n)))
+        i = np.arange(n)
+        return score(a, b, i, n + i, value)
+
+    return _scored(joined.select("a", "b", *feat), schema, verdict)
 
 
 def build_jaccard_mapside_bvar(
@@ -229,12 +294,9 @@ def build_jaccard_mapside_bvar(
     size `nbytes`.  Side-thread-safe (prefetch_broadcast)."""
     if not _mapside_eligible(features, id_col, nbytes):
         return None
-    sids_s, offs, flat, order, tab = _collect_ragged_arrow(
-        features, id_col, shingle_col, (minhash_col,)
+    return _broadcast_layout(
+        features, id_col, (shingle_col, minhash_col), partial(_jaccard_layout, num_perm)
     )
-    mh = _fixed_matrix_from_list_column(tab.column(2), num_perm, order)
-    value = (sids_s, offs, flat, mh.astype(np.int64, copy=False))
-    return features.sparkSession.sparkContext.broadcast(value)
 
 
 def build_containment_mapside_bvar(
@@ -245,8 +307,7 @@ def build_containment_mapside_bvar(
     build_jaccard_mapside_bvar)."""
     if not _mapside_eligible(features, id_col, nbytes):
         return None
-    sids_s, offs, flat, _order, _tab = _collect_ragged_arrow(features, id_col, codes_col)
-    return features.sparkSession.sparkContext.broadcast((sids_s, offs, flat))
+    return _broadcast_layout(features, id_col, (codes_col,), _codes_layout)
 
 
 # The winnow tier verifies `winnow_codes` (int64-packed grams) with the
@@ -266,14 +327,20 @@ def verify_jaccard(
     mapside=None,
 ) -> DataFrame:
     """pairs(a,b) x features(id, shingles, minhash) -> (a, b, jaccard)
-    passing rows.
+    passing rows, jaccard = |A∩B|/|A∪B| rounded like Spark's
+    round(double, 6) (`_spark_round6`).
 
     mapside: the broadcast from build_jaccard_mapside_bvar (usually
     prebuilt on a side thread, prefetch_broadcast), or None for the join
-    path.  The map-side path fuses the gates below, the exact intersect
-    and Spark-identical rounding into one Arrow pass, and emits exactly
-    the join path's rows (gate constants and float compares are
-    bit-identical IEEE ops; pinned in tests/test_blocking.py).
+    path.  Both paths run the one `score` below: the gates, the exact
+    intersect and the rounding in one Arrow pass.
+
+    An EXACT size-ratio pre-filter runs first: |A∩B| <= min(|A|,|B|)
+    and |A∪B| >= max, so J <= min/max — a pair failing min/max >=
+    threshold can never verify.  Its epsilon covers the output's
+    round(J, 6) boundary (0.7999995 rounds to 0.8 and passes) plus float
+    slop: the filter may only ADMIT extra pairs, never reject a true
+    one.
 
     An ESTIMATE GATE runs before the exact shingle intersect: the
     fraction of equal minhash positions is Binomial(num_perm, J)/num_perm,
@@ -285,64 +352,30 @@ def verify_jaccard(
     Survivors always get the exact verify, so emitted rows are exact;
     the gate only changes *cost*, with the stated recall
     bound.  Measured at sf0.1 docs (tiny-vocab adversarial corpus):
-    2.33M candidates -> 0.90M survivors, verify 10s -> 7s at local[32];
-    at web-corpus similarity profiles (background J << threshold) the
-    survivor cut is >90%."""
-    # EXACT size-ratio pre-filter, evaluated BEFORE any per-element
-    # expression: |A∩B| <= min(|A|,|B|) and |A∪B| >= max, so
-    # J <= min/max — a pair failing min/max >= threshold can never
-    # verify.  The epsilon covers the output's round(J, 6) boundary
-    # (round(0.7999995, 6) == 0.8 passes the final filter) plus float
-    # slop: the filter may only ADMIT extra pairs, never reject a true
-    # one.  The scalar compare short-circuits the O(num_perm) estimate
-    # (and the O(|codes|) intersect) for size-mismatched candidates —
-    # measured 4.2 s -> 1.5 s on the 2.33M-candidate gate stage at
-    # sf0.1 and a ~12% cut of exact-verify survivors.
+    2.33M candidates -> 0.90M survivors; at web-corpus similarity
+    profiles (background J << threshold) the survivor cut is >90%."""
     ratio_floor = float(threshold) - 1e-6
     gate = threshold - _GATE_SIGMAS * (threshold * (1 - threshold) / num_perm) ** 0.5
+    thr, nperm = float(threshold), float(num_perm)
 
+    def score(a, b, ia, ib, value):
+        _sids, offs, flat, mh = value
+        na, nb = _row_lens(offs, ia), _row_lens(offs, ib)
+        keep = np.minimum(na, nb).astype(np.float64) >= ratio_floor * np.maximum(
+            na, nb
+        ).astype(np.float64)
+        keep &= (mh[ia] == mh[ib]).sum(axis=1) / nperm >= gate
+        a, b, ia, ib, na, nb = (x[keep] for x in (a, b, ia, ib, na, nb))
+        inter = _intersect_counts(offs, flat, ia, ib)
+        j = _spark_round6(_ratio(inter, na + nb - inter, 1.0))
+        ok = j >= thr
+        return a[ok], b[ok], j[ok]
+
+    schema = "a bigint, b bigint, jaccard double"
     if mapside is not None:
-        thr, nperm = float(threshold), float(num_perm)
-
-        def score(a, b, ia, ib, value):
-            _sids, offs, flat, mh = value
-            na, nb = _row_lens(offs, ia), _row_lens(offs, ib)
-            keep = np.minimum(na, nb).astype(np.float64) >= ratio_floor * np.maximum(
-                na, nb
-            ).astype(np.float64)
-            keep &= (mh[ia] == mh[ib]).sum(axis=1) / nperm >= gate
-            a, b, ia, ib, na, nb = (x[keep] for x in (a, b, ia, ib, na, nb))
-            inter = _intersect_counts(offs, flat, ia, ib)
-            j = _spark_round6(_ratio(inter, na + nb - inter, 1.0))
-            ok = j >= thr
-            return a[ok], b[ok], j[ok]
-
-        return map_pairs(pairs, mapside, "a bigint, b bigint, jaccard double", score)
-
-    ma = features.select(
-        F.col(id_col).alias("a"), F.col(minhash_col).alias("_ma"),
-        F.size(shingle_col).alias("_na"),
-    )
-    mb = features.select(
-        F.col(id_col).alias("b"), F.col(minhash_col).alias("_mb"),
-        F.size(shingle_col).alias("_nb"),
-    )
-    est = F.size(
-        F.filter(F.zip_with(F.col("_ma"), F.col("_mb"), lambda x, y: x == y), lambda t: t)
-    ) / F.lit(float(num_perm))
-    ratio_ok = F.least("_na", "_nb").cast("double") >= F.lit(ratio_floor) * F.greatest(
-        "_na", "_nb"
-    ).cast("double")
-    gated = (
-        pairs.join(ma, "a").join(mb, "b").where(ratio_ok & (est >= F.lit(gate))).select("a", "b")
-    )
-    fa = features.select(F.col(id_col).alias("a"), F.col(shingle_col).alias("_sa"))
-    fb = features.select(F.col(id_col).alias("b"), F.col(shingle_col).alias("_sb"))
-    return (
-        gated.join(fa, "a").join(fb, "b")
-        .select("a", "b", F.round(jaccard_arrays(F.col("_sa"), F.col("_sb")), 6).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+        return map_pairs(pairs, mapside, schema, score)
+    layout = partial(_jaccard_layout, num_perm)
+    return join_pairs(pairs, features, id_col, (shingle_col, minhash_col), layout, schema, score)
 
 
 def verify_containment(
@@ -360,40 +393,20 @@ def verify_containment(
     from build_containment_mapside_bvar, or None for the join path (the
     rounding exactness argument is `_spark_round6`'s rational-gap one;
     denominators here are single-doc shingle counts)."""
+    thr = float(threshold)
+
+    def score(a, b, ia, ib, value):
+        _sids, offs, flat = value
+        na, nb = _row_lens(offs, ia), _row_lens(offs, ib)
+        inter = _intersect_counts(offs, flat, ia, ib)
+        c = _spark_round6(np.concatenate([_ratio(inter, na, 0.0), _ratio(inter, nb, 0.0)]))
+        ok = (c >= thr) & np.concatenate([na > 0, nb > 0])
+        return np.concatenate([a, b])[ok], np.concatenate([b, a])[ok], c[ok]
+
+    schema = "ra bigint, rb bigint, containment double"
     if mapside is not None:
-        thr = float(threshold)
-
-        def score(a, b, ia, ib, value):
-            _sids, offs, flat = value
-            na, nb = _row_lens(offs, ia), _row_lens(offs, ib)
-            inter = _intersect_counts(offs, flat, ia, ib)
-            c = _spark_round6(np.concatenate([_ratio(inter, na, 0.0), _ratio(inter, nb, 0.0)]))
-            ok = (c >= thr) & np.concatenate([na > 0, nb > 0])
-            return np.concatenate([a, b])[ok], np.concatenate([b, a])[ok], c[ok]
-
-        return map_pairs(
-            pairs, mapside, "ra bigint, rb bigint, containment double", score
-        )
-
-    ca = features.select(F.col(id_col).alias("a"), F.col(shingle_col).alias("_ca"))
-    cb = features.select(F.col(id_col).alias("b"), F.col(shingle_col).alias("_cb"))
-    joined = (
-        pairs.join(ca, "a")
-        .join(cb, "b")
-        .select(
-            "a", "b", "_ca", "_cb",
-            F.size(F.array_intersect("_ca", "_cb")).cast("double").alias("_inter"),
-        )
-    )
-    fwd = joined.where(F.size("_ca") > 0).select(
-        F.col("a").alias("ra"), F.col("b").alias("rb"),
-        F.round(F.col("_inter") / F.size("_ca").cast("double"), 6).alias("containment"),
-    )
-    bwd = joined.where(F.size("_cb") > 0).select(
-        F.col("b").alias("ra"), F.col("a").alias("rb"),
-        F.round(F.col("_inter") / F.size("_cb").cast("double"), 6).alias("containment"),
-    )
-    return fwd.unionByName(bwd).where(F.col("containment") >= threshold)
+        return map_pairs(pairs, mapside, schema, score)
+    return join_pairs(pairs, features, id_col, (shingle_col,), _codes_layout, schema, score)
 
 
 def verify_winnow(
@@ -409,28 +422,17 @@ def verify_winnow(
     rounding concerns.  `mapside`: the broadcast from
     build_winnow_mapside_bvar, or None for the join path."""
     ms = int(min_shared)
+
+    def score(a, b, ia, ib, value):
+        _sids, offs, flat = value
+        inter = _intersect_counts(offs, flat, ia, ib)
+        ok = inter >= ms
+        return a[ok], b[ok], inter[ok]
+
+    schema = "a bigint, b bigint, n_shared bigint"
     if mapside is not None:
-
-        def score(a, b, ia, ib, value):
-            _sids, offs, flat = value
-            inter = _intersect_counts(offs, flat, ia, ib)
-            ok = inter >= ms
-            return a[ok], b[ok], inter[ok]
-
-        return map_pairs(pairs, mapside, "a bigint, b bigint, n_shared bigint", score)
-
-    fa = features.select(F.col(id_col).alias("a"), F.col(fps_col).alias("_fa"))
-    fb = features.select(F.col(id_col).alias("b"), F.col(fps_col).alias("_fb"))
-    return (
-        pairs.join(fa, "a")
-        .join(fb, "b")
-        .select(
-            "a",
-            "b",
-            F.size(F.array_intersect("_fa", "_fb")).cast("long").alias("n_shared"),
-        )
-        .where(F.col("n_shared") >= F.lit(ms))
-    )
+        return map_pairs(pairs, mapside, schema, score)
+    return join_pairs(pairs, features, id_col, (fps_col,), _codes_layout, schema, score)
 
 
 def verify_psnr(

@@ -11,7 +11,7 @@ from those parameters.
                   sha256(bytes)); `bytes` itself is NOT
                   carried forward (scale rule: payload never shuffles)
   signatures      caption fingerprint + shingle codes + MinHash (one
-                  Arrow pass) + pHash
+                  Arrow pass)
   caption_pairs   `lsh_near_dup_edges`: one representative per caption
                   fingerprint -> LSH bands -> salted candidates -> exact
                   Jaccard >= tau, plus star edges within a fingerprint
@@ -72,8 +72,7 @@ def run_pipeline(
         )
 
     def signatures(ingest) -> DataFrame:
-        sigs = minhash_signatures(ingest, "image_id", "caption", cfg)
-        return sigs.join(ingest.select("image_id", "phash", "fmt"), "image_id")
+        return minhash_signatures(ingest, "image_id", "caption", cfg)
 
     # --- caption tier ---------------------------------------------------------
     # `lsh_near_dup_edges`, the edge list the `dedup_cc_assignments`

@@ -31,10 +31,6 @@ Design notes for scale (graded explicitly):
   can add ``-XX:TieredStopAtLevel=1``, and ``-XX:Tier4InvocationThreshold=5000
   -XX:Tier4MinInvocationThreshold=600 -XX:Tier4CompileThreshold=15000
   -XX:Tier4BackEdgeThreshold=40000`` restores the JDK defaults.
-* An Iceberg catalog is configured *only if* the runtime has the Iceberg
-  Spark runtime jar (this sandbox does not); otherwise the checkpoint
-  layer (pipeline/checkpoint.py) uses its parquet stage-table catalog,
-  which implements the same snapshot/resume contract.
 """
 
 from __future__ import annotations
@@ -42,18 +38,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-
-def _has_iceberg() -> bool:
-    try:
-        import glob
-
-        import pyspark
-
-        home = os.path.dirname(pyspark.__file__)
-        return bool(glob.glob(os.path.join(home, "jars", "*iceberg-spark-runtime*")))
-    except Exception:  # pragma: no cover
-        return False
 
 
 _EXECUTOR_JVM_OPTS = (
@@ -92,7 +76,6 @@ def get_spark(
     app_name: str = "who-owns-mass-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    warehouse: str | None = None,
 ) -> SparkSession:
     cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
@@ -158,12 +141,6 @@ def get_spark(
         if kv.strip():
             k, _, v = kv.partition("=")
             b = b.config(k.strip(), v.strip())
-    if warehouse and _has_iceberg():  # pragma: no cover - no iceberg jar in sandbox
-        b = (
-            b.config("spark.sql.catalog.local", "org.apache.iceberg.spark.SparkCatalog")
-            .config("spark.sql.catalog.local.type", "hadoop")
-            .config("spark.sql.catalog.local.warehouse", warehouse)
-        )
     return b.getOrCreate()
 
 
