@@ -32,9 +32,9 @@ def test_ann_lsh_recall_gate(spark):
 
 
 def test_simhash_pairs_match_numpy_mirror(spark):
-    from who_owns_mass_processing_spark.functions.simhash import simhash_py
     from who_owns_mass_processing_spark.operators.dedupe import simhash_near_dup_pairs
     from who_owns_mass_processing_spark.synth import normalize_text
+    from tests.oracles import simhash_py
 
     docs = duckdb.sql(
         f"SELECT doc_id, text FROM '{SF_DIR}/documents.parquet' ORDER BY doc_id"
@@ -62,10 +62,8 @@ def test_simhash_batch_equals_per_row_mirror():
     batch) must equal simhash_py row by row — including empty/None rows,
     rows with repeated tokens (the unique-with-counts weighting), and
     hashes with the sign bit set (uint64->int64 wrap)."""
-    from who_owns_mass_processing_spark.functions.simhash import (
-        simhash_batch,
-        simhash_py,
-    )
+    from who_owns_mass_processing_spark.functions.simhash import simhash_batch
+    from tests.oracles import simhash_py
 
     rows = [
         "",

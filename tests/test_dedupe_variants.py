@@ -3,7 +3,6 @@ components; rep-level LSH must equal member-level semantics."""
 import pandas as pd
 
 from who_owns_mass_processing_spark.config import DedupeConfig
-from who_owns_mass_processing_spark.operators.connected_components import components_py
 from who_owns_mass_processing_spark.operators.dedupe import (
     exact_fingerprint_edges,
     exact_fingerprint_pairs,
@@ -12,6 +11,8 @@ from who_owns_mass_processing_spark.operators.dedupe import (
     minhash_signatures,
     representatives,
 )
+
+from tests.oracles import components_py
 
 CFG = DedupeConfig(stop_band_min=10**6)  # tiny fixture: no drops
 

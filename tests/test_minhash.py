@@ -8,6 +8,8 @@ from who_owns_mass_processing_spark.config import DedupeConfig
 from who_owns_mass_processing_spark.functions import minhash as MH
 from who_owns_mass_processing_spark.synth import jaccard, shingle_set
 
+from tests.oracles import minhash_py
+
 CFG = DedupeConfig()
 
 
@@ -18,7 +20,7 @@ def test_udf_matches_python(spark):
     udf = MH.signature_udf(CFG.shingle_k, CFG.num_perm, CFG.minhash_seed)
     rows = df.select(udf(F.col("t")).minhash.alias("sig")).collect()
     for t, row in zip(texts, rows):
-        want = MH.minhash_py(t, CFG.shingle_k, keys)
+        want = minhash_py(t, CFG.shingle_k, keys)
         assert list(row[0]) == want.tolist(), t
 
 
@@ -35,8 +37,8 @@ def test_minhash_estimates_jaccard():
             toks[rng.integers(0, len(toks))] = vocab[rng.integers(0, len(vocab))]
         t2 = " ".join(toks)
         exact = jaccard(shingle_set(t1, 3), shingle_set(t2, 3))
-        s1 = MH.minhash_py(t1, 3, keys)
-        s2 = MH.minhash_py(t2, 3, keys)
+        s1 = minhash_py(t1, 3, keys)
+        s2 = minhash_py(t2, 3, keys)
         est = float((s1 == s2).mean())
         assert abs(est - exact) < 0.15, (exact, est)
 
@@ -57,8 +59,8 @@ def test_band_explode_shape_and_determinism(spark):
 
 def test_empty_text_gets_sentinel_not_collisions():
     keys = MH.perm_params(CFG.num_perm, CFG.minhash_seed)
-    s_empty = MH.minhash_py("", 3, keys)
-    s_real = MH.minhash_py("hello", 3, keys)
+    s_empty = minhash_py("", 3, keys)
+    s_real = minhash_py("hello", 3, keys)
     assert (s_empty == np.int64(MH._EMPTY_SENTINEL)).all()
     assert not (s_empty == s_real).all()
 

@@ -31,9 +31,7 @@ def test_network_round_bipartite_chain(spark):
 def test_network_round_matches_tier_union(spark):
     # group-id round must agree with CC over the union of per-tier edges
     # when every row has both ids (golden equivalence on a small fixture)
-    from who_owns_mass_processing_spark.operators.connected_components import (
-        components_py,
-    )
+    from tests.oracles import components_py
 
     rows = pd.DataFrame(
         {

@@ -335,9 +335,9 @@ def test_second_round_networks_agree_with_tier_union(
 
     from who_owns_mass_processing_spark.operators import network
     from who_owns_mass_processing_spark.operators.connected_components import (
-        components_py,
         connected_components,
     )
+    from tests.oracles import components_py
     from who_owns_mass_processing_spark.operators.network import network_round
     from who_owns_mass_processing_spark.pipeline import run
 

@@ -240,10 +240,8 @@ def test_lgram_vectorized_matches_expression_twin(spark):
     blocking keys; every span/pair output is hash-free)."""
     from pyspark.sql import functions as F
 
-    from who_owns_mass_processing_spark.operators.substrings import (
-        lgram_occurrences,
-        lgram_occurrences_expr,
-    )
+    from who_owns_mass_processing_spark.operators.substrings import lgram_occurrences
+    from tests.oracles import lgram_occurrences_expr
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     new = lgram_occurrences(d, "doc_id", "text", 25)

@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 from who_owns_mass_processing_spark.functions import text as T
 from who_owns_mass_processing_spark.synth import jaccard, normalize_text, shingle_set
 
+from tests.oracles import winnow_fingerprints_expr
+
 SAMPLES = [
     "Hello, World!",
     "  multiple   spaces\tand\ttabs  ",
@@ -204,7 +206,7 @@ def test_winnow_udf_matches_expression_twin(spark):
         diff = (
             d.select(
                 T.winnow_fingerprints(F.col("text"), k=k, w=w).alias("new"),
-                T.winnow_fingerprints_expr(F.col("text"), k=k, w=w).alias("old"),
+                winnow_fingerprints_expr(F.col("text"), k=k, w=w).alias("old"),
             )
             .where(F.col("new") != F.col("old"))
             .count()

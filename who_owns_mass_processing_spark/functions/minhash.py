@@ -22,9 +22,9 @@ the inner loops):
   signature                column-wise min across shingles, >>3 so the
                            value fits a positive int64 (Spark LongType).
 
-The same functions run driver-side (numpy) for the golden oracle
-(tests), guaranteeing the "same shingle/signature config" clause of the
-recall gate.
+The same functions run driver-side (numpy) in the test oracle
+`minhash_py` (tests/oracles.py), guaranteeing the "same shingle/signature
+config" clause of the recall gate.
 """
 
 from __future__ import annotations
@@ -77,13 +77,6 @@ def minhash_from_codes(codes: np.ndarray, keys: np.ndarray) -> np.ndarray:
     # (num_perm, n_shingles) full 64-bit mix; >>3 keeps int64 positive
     vals = splitmix64(codes[None, :] ^ keys[:, None]).min(axis=1)
     return (vals >> np.uint64(3)).astype(np.int64)
-
-
-def minhash_py(text: str, k: int, keys: np.ndarray) -> np.ndarray:
-    """Driver-side mirror (golden oracle / pytest) — identical math."""
-    from who_owns_mass_processing_spark.synth import normalize_text
-
-    return minhash_from_codes(shingle_codes(normalize_text(text), k), keys)
 
 
 def minhash_batch(

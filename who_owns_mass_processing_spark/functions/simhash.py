@@ -53,25 +53,6 @@ def fnv1a64_tokens(tokens: list[str]) -> np.ndarray:
     return out
 
 
-def simhash_py(text: str) -> int:
-    """Driver-side mirror (tests): 64-bit SimHash of whitespace tokens of
-    already-normalized text."""
-    toks = [t for t in (text or "").split() if t]
-    if not toks:
-        return 0
-    uniq, counts = np.unique(np.array(toks, dtype=object), return_counts=True)
-    hashes = fnv1a64_tokens(list(uniq))
-    bits = ((hashes[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)).astype(
-        np.int64
-    )
-    acc = ((bits * 2 - 1) * counts[:, None].astype(np.int64)).sum(axis=0)
-    out = np.uint64(0)
-    for i in range(64):
-        if acc[i] > 0:
-            out |= np.uint64(1) << np.uint64(i)
-    return int(np.int64(out))
-
-
 def simhash_batch(texts: pd.Series) -> np.ndarray:
     """Batch-vectorized SimHash over an Arrow batch: tokenize per row
     (plain str.split), then ONE padded-matrix FNV fold over the
@@ -79,10 +60,11 @@ def simhash_batch(texts: pd.Series) -> np.ndarray:
     contributions — no per-row np.unique / per-row padding (the
     minhash_batch pattern, functions/minhash.py:90).
 
-    Equivalence to `simhash_py`: the per-row unique-with-counts
-    weighting is just a grouped sum of the same ±1 per-occurrence
-    contributions, so summing per occurrence gives the identical
-    accumulator (pinned by tests/test_ann_simhash_golden.py)."""
+    Equivalence to the test oracle `simhash_py` (tests/oracles.py): the
+    per-row unique-with-counts weighting is just a grouped sum of the
+    same ±1 per-occurrence contributions, so summing per occurrence
+    gives the identical accumulator (pinned by
+    tests/test_ann_simhash_golden.py)."""
     tok_lists = [(t or "").split() for t in texts]
     lens = np.array([len(tl) for tl in tok_lists], dtype=np.int64)
     out = np.zeros(len(tok_lists), dtype=np.int64)

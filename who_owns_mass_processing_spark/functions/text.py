@@ -109,8 +109,9 @@ def winnow_fingerprints(col: Column, k: int = 5, w: int = 4) -> Column:
     engine-portable (the DuckDB oracle computes the identical set).
 
     Implementation: vectorized Arrow pandas UDF (guide §4.2).  The
-    Catalyst-expression form (`winnow_fingerprints_expr`) evaluates the
-    window minima through interpreted higher-order lambdas — O(n·w)
+    Catalyst-expression form (`winnow_fingerprints_expr`, the test
+    oracle in tests/oracles.py) evaluates the window minima through
+    interpreted higher-order lambdas — O(n·w)
     interpreted string comparisons per document was the single most
     expensive projection in the bench (14 s of the sf0.1 headline).
     Here each document's k-grams pack into big-endian uint64 codes
@@ -171,32 +172,6 @@ def _winnow_udf(k: int, w: int, decode: bool):
         return pd.Series(out)
 
     return _udf
-
-
-def winnow_fingerprints_expr(col: Column, k: int = 5, w: int = 4) -> Column:
-    """Catalyst-builtin twin of `winnow_fingerprints` (transform/slice/
-    array_min/array_distinct — no UDF).  Kept as the equality oracle for
-    the vectorized path (tests/test_text.py)."""
-    t = normalize_text(col)
-    n = F.length(t)
-    n_grams = n - F.lit(k - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n_grams, F.lit(1))),
-        lambda i: t.substr(i, F.lit(k)),
-    )
-    # let-binding idiom: wrap `grams` in a 1-element array and bind it as
-    # a lambda variable, so the gram array is EVALUATED ONCE per row.  A
-    # direct reference inside the window lambda would be inlined by the
-    # expression compiler and recomputed per window — O(n^2) substr work
-    # per document (observed: minutes instead of seconds on sf0.01).
-    picks_of = lambda g: F.transform(  # noqa: E731
-        F.sequence(F.lit(1), F.greatest(F.size(g) - F.lit(w - 1), F.lit(1))),
-        lambda i: F.array_min(F.slice(g, i, w)),
-    )
-    picks = F.element_at(F.transform(F.array(grams), picks_of), 1)
-    return F.when(n < F.lit(k), F.array().cast("array<string>")).otherwise(
-        F.array_sort(F.array_distinct(picks))
-    )
 
 
 def word_tokens(col: Column) -> Column:

@@ -5,22 +5,29 @@ Reference analog: igraph graph_from_data_frame + cluster_fast_greedy
 connected components (CC superset-of fast-greedy communities protects the
 dup-pair recall metric — SURVEY.md §7 risk table).
 
-Algorithm (driver-side fixpoint loop, all data distributed):
-  labels(node) = node
-  repeat: label'(n) = min(label(n), min over neighbors m of label(m))
-  until no label changes (counted with a single agg per iteration).
+Algorithm (driver-side fixpoint loop, all data distributed): hook and
+shortcut in every round (Shiloach–Vishkin; the rounds of Kiveris et al.,
+*Connected Components in MapReduce and Beyond*, SoCC'14):
+  labels(node) = min(node, min over neighbors)     (round 1, one groupBy)
+  repeat:
+    hook:  label'(n) = min(label(n), min over neighbors m of label(m))
+    stop   when no label changed
+    jump:  label''(n) = label'(label'(n))
+A hook moves a label one hop and a jump doubles the reach of every
+label, so a graph of diameter d converges in O(log d) rounds.
 
-Scale properties:
-  * each iteration = one shuffle join (edges x labels on src) + one
-    groupBy min — both partial-aggregated; near-dup similarity graphs
-    have tiny diameters (dup families), so iterations ~ O(log n) and in
-    practice < 10;
-  * lineage is cut with localCheckpoint every `CHECKPOINT_EVERY`
-    iterations (Catalyst has no fixpoint operator; an unbounded plan tree
-    would blow the driver — SURVEY.md §4 "Iteration").
+Per-round cost: one shuffle join of the edges with the labels plus a
+groupBy min and a left join (the hook, checkpointed), one emptiness test
+on its changed rows, and one self-join of the checkpointed labels (the
+jump, checkpointed).  Both checkpoints cut the lineage, so the plan never
+grows across rounds (Catalyst has no fixpoint operator — SURVEY.md §4
+"Iteration").  Near-dup similarity graphs are cliques, stars and short
+star-chains, so most calls stop after one or two rounds.
 """
 
 from __future__ import annotations
+
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,11 +46,9 @@ from who_owns_mass_processing_spark.operators.blocking import checkpointed_bytes
 # scale the edge list is GBs+ and this is a no-op.
 _CC_TARGET_PARTITION_BYTES = 8 << 20
 
-# Fixpoint bounds.  Near-dup graphs converge in a handful of iterations;
-# MAX_ITERATIONS only stops a runaway loop (with a warning), and
-# CHECKPOINT_EVERY is the driver-sync / lineage-cut cadence (see the loop).
+# Round budget.  Rounds grow with log(diameter), so MAX_ITERATIONS only
+# stops a runaway loop (with a warning).
 MAX_ITERATIONS = 50
-CHECKPOINT_EVERY = 5
 
 
 def connected_components(edges: DataFrame) -> DataFrame:
@@ -57,6 +62,11 @@ def connected_components(edges: DataFrame) -> DataFrame:
     on duplicate edges (the min over repeated neighbours is the min).
     Callers deduplicate large edge lists themselves, where it is free
     (pair lists out of groupBy(a, b), star edges, distincted unions).
+
+    Convergence is tested on the JVM with `isEmpty()` of the changed
+    rows.  When nothing changed it scans the partitions in growing waves
+    (`executeTake`), so on a wide label table the last round can take a
+    few small jobs.
     """
     # materialize the (static) undirected edge list once — every iteration
     # joins against it, so it must not drag the upstream plan along.
@@ -83,7 +93,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
         if target < n_parts:
             und = und.coalesce(int(target))
     # ITERATION 1 IS AN AGGREGATION, NOT A JOIN: labels start as the
-    # identity (label(n) = n), so the first propagation round
+    # identity (label(n) = n), so propagation round 1
     # label'(u) = min(u, min over neighbors v of v) needs no labels
     # table at all — one groupBy over the checkpointed edges replaces
     # the join + groupBy + join round the generic iteration pays
@@ -93,74 +103,33 @@ def connected_components(edges: DataFrame) -> DataFrame:
     labels = und.groupBy("u").agg(F.min("v").alias("_mn")).select(
         F.col("u").alias("node"), F.least("u", "_mn").alias("label")
     )
-    # labels derive from the checkpointed `und` with one cheap
-    # aggregation — no second eager barrier needed
-
-    # Driver-sync cost dominates this loop at bench scale (round-1 bench:
-    # an eager localCheckpoint + a convergence collect EVERY iteration was
-    # 32s of an 80s total).  Batch both on the `CHECKPOINT_EVERY` cadence:
-    # between checkpoints the plan grows by one join per iteration (depth
-    # <= CHECKPOINT_EVERY — bounded), and convergence is only *checked*
-    # when the lineage is cut.  One extra batch of iterations may run
-    # after the true fixpoint; min-label propagation is idempotent, so
-    # the result is identical.
-    changed = -1
-    for it in range(2, MAX_ITERATIONS + 1):  # iteration 1 = the fold above
-        # neighbor minimum: join edges to current labels of v, min per u
+    for _ in range(2, MAX_ITERATIONS + 1):  # iteration 1 = the fold above
+        # hook: join edges to current labels of v, min per u
         neigh = (
             und.join(labels.withColumnRenamed("node", "v"), "v")
             .groupBy("u")
             .agg(F.min("label").alias("nlabel"))
             .withColumnRenamed("u", "node")
         )
-        new_labels = labels.join(neigh, "node", "left").select(
+        hooked = labels.join(neigh, "node", "left").select(
             "node",
-            F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
-            (F.col("label") != F.least(F.col("label"), F.coalesce("nlabel", "label"))).alias(
-                "_changed"
-            ),
-        )
-        # Sync schedule: iterations 2 and 3 first, then the checkpoint
-        # cadence.  Near-dup similarity graphs are dominated by cliques/
-        # stars (converged after round 1, detected at the it=2 sync) and
-        # shallow star-chains (diameter ~3: converged at round 3 once
-        # the it=2 pointer jump doubles the reach — measured: skipping
-        # straight from 2 to the cadence at 5 ran three dead join
-        # rounds + their materialization per call).  Deep chains still
-        # batch `CHECKPOINT_EVERY` iterations per driver sync, so the
-        # round-1 driver-sync lesson (one eager checkpoint + collect
-        # per iteration cost 32 s of an 80 s bench) is preserved.
-        if it in (2, 3) or it % CHECKPOINT_EVERY == 0 or it == MAX_ITERATIONS:
-            new_labels = new_labels.localCheckpoint(eager=True)
-            changed = new_labels.agg(
-                F.sum(F.col("_changed").cast("long"))
-            ).collect()[0][0] or 0
-            # pointer jump at the sync point only: label <- label(label).
-            # Labels only decrease and every label value is a node id in
-            # the table, so label(label) <= label; jumping on the
-            # MATERIALIZED table costs one cheap self-join per sync and
-            # roughly doubles the propagation distance per batch (long
-            # chains).  Jumping inside the lazy loop instead would add a
-            # third reference to the un-checkpointed iteration subtree,
-            # whose recompute tree grows ~refs^k between lineage cuts —
-            # measured 471 s vs 30 s on a 100k-node chain.
-            if changed:
-                lab = new_labels.drop("_changed")
-                jumped = lab.join(
-                    lab.select(F.col("node").alias("label"), F.col("label").alias("_l2")),
-                    "label",
-                    "left",
-                ).select("node", F.coalesce("_l2", "label").alias("label"))
-                labels = jumped.localCheckpoint(eager=True)
-            else:
-                labels = new_labels.drop("_changed")
-        else:
-            labels = new_labels.drop("_changed")
-        if changed == 0:
+            F.least("label", "nlabel").alias("label"),  # least skips nulls
+            (F.col("nlabel") < F.col("label")).alias("_changed"),
+        ).localCheckpoint(eager=True)
+        labels = hooked.drop("_changed")
+        if hooked.where("_changed").isEmpty():
             break
-    if changed != 0:
-        import warnings
-
+        # pointer jump: label <- label(label).  Labels only decrease and
+        # every label value is a node id in the table, so label(label)
+        # <= label; the jump reads the materialized hook, never a lazy
+        # plan.
+        labels = labels.join(
+            labels.select(F.col("node").alias("label"), F.col("label").alias("_l2")),
+            "label",
+            "left",
+        ).select("node", F.coalesce("_l2", "label").alias("label"))
+        labels = labels.localCheckpoint(eager=True)
+    else:
         warnings.warn(
             f"connected_components: not converged after {MAX_ITERATIONS} "
             "iterations — components wider than the iteration budget are "
@@ -168,23 +137,3 @@ def connected_components(edges: DataFrame) -> DataFrame:
             stacklevel=2,
         )
     return labels.select("node", F.col("label").alias("component"))
-
-
-def components_py(edges: list[tuple], nodes: list | None = None) -> dict:
-    """Driver-side union-find mirror for pytest golden checks."""
-    parent: dict = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    for n in nodes or []:
-        find(n)
-    return {n: find(n) for n in parent}
